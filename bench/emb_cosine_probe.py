@@ -30,41 +30,17 @@ sys.path.insert(0, REPO)
 
 
 def _base(spark, sf_dir):
-    import pyspark.sql.functions as F
-
-    from pdf_extractor_spark.corpus import (PPB_DEDUP, QUANT_S,
-                                            _bands_array_s, _persist)
-    from pdf_extractor_spark.queries import t
-    e = t(spark, sf_dir, "embeddings")
-    perturbed = F.expr(
-        "transform(sequence(1, 64), i -> CASE WHEN i <= 8 "
-        "THEN CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000 * 0.9) AS BIGINT) "
-        "ELSE CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000) AS BIGINT) END)")
-    base = (
-        e.select("vec_id", F.expr(QUANT_S).alias("qv"))
-        .unionByName(
-            e.filter(F.col("vec_id") % 4 == 0)
-            .select((F.col("vec_id") + 100000).alias("vec_id"),
-                    perturbed.alias("qv")))
-    )
-    b = (base.withColumn("bands", _bands_array_s("qv", PPB_DEDUP))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-             "0L, (acc, v) -> acc + v)")))
-    return _persist(b)
+    from pdf_extractor_spark.corpus import (PPB_DEDUP, _emb_signature,
+                                            _persist, _with_perturbed_copies)
+    base = _with_perturbed_copies(spark, sf_dir, every=4, dims=8, scale=0.9)
+    return _persist(_emb_signature(base, PPB_DEDUP))
 
 
 def _verify(b, cand):
     import pyspark.sql.functions as F
 
-    from pdf_extractor_spark.corpus import COS, DOT_S
-    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                  F.col("nrm").alias("na"))
-    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                  F.col("nrm").alias("nb"))
-    return (cand.join(va, "vec_a").join(vb, "vec_b")
-            .withColumn("dot", F.expr(DOT_S))
-            .withColumn("cos_sim", F.expr(COS))
+    from pdf_extractor_spark.corpus import _emb_verify
+    return (_emb_verify(cand, b)
             .filter(F.col("cos_sim") >= 0.98)
             .select("vec_a", "vec_b", "cos_sim"))
 

@@ -87,6 +87,8 @@ def _run_selection(spark, input_path: str, config_path: str, out_path: str,
 
 
 def main(argv: list[str] | None = None) -> int:
+    from .corpus import SIMHASH_BANDS
+
     ap = argparse.ArgumentParser(prog="pdf_extractor_spark")
     ap.add_argument("--input", default=None,
                     help="documents table (parquet path or Iceberg name); "
@@ -137,10 +139,11 @@ def main(argv: list[str] | None = None) -> int:
                          "verify -> components -> keep-canonical "
                          "decisions land under --output")
     ap.add_argument("--hamming-max", type=int, default=3,
+                    choices=range(SIMHASH_BANDS),
                     help="simhash near-dup hamming threshold (default 3; "
                          "max 3 — the 4-band pigeonhole only guarantees a "
                          "band collision for hamming <= bands-1, larger "
-                         "values would silently lose recall and raise)")
+                         "values would silently lose recall)")
     ap.add_argument("--dedup-semantic", default=None, metavar="PARQUET",
                     help="SemDeDup mode: input parquet of (vec_id, "
                          "embedding); corpus size is estimated from the "
@@ -159,14 +162,6 @@ def main(argv: list[str] | None = None) -> int:
                          "when no block is hot, but no task ever ingests a "
                          "whole pathological block (use when the corpus has "
                          "multi-million-row duplicate regions)")
-    ap.add_argument("--sql-sig", action="store_true",
-                    help="compute the --dedup-texts simhash / the "
-                         "--dedup-embeddings LSH bands + verify dots with "
-                         "the SQL expression forms instead of the Arrow-"
-                         "batched numpy default (bit-identical; the SQL "
-                         "HOF chains are CodegenFallback — interpreted "
-                         "row-at-a-time, ~10-40x slower per row — so this "
-                         "exists only to cross-check the two paths)")
     ap.add_argument("--cc-iterations", type=int, default=20,
                     help="max min-label propagation rounds for the dedup "
                          "component labeling; the run iterates to fixpoint "
@@ -198,42 +193,30 @@ def main(argv: list[str] | None = None) -> int:
             "report": args.output}))
         return 0
 
-    if not args.input and not (args.dedup_embeddings or args.dedup_texts
-                               or args.dedup_semantic):
+    dedup = args.dedup_embeddings or args.dedup_texts or args.dedup_semantic
+    if not args.input and not dedup:
         ap.error("--input is required except in --grade mode")
 
     from .session import get_spark
     spark = get_spark("pdf_extractor_spark.cli", master=args.master)
 
-    if args.dedup_embeddings:
-        from .corpus import dedup_embeddings_run
-        metrics = dedup_embeddings_run(
-            spark, args.dedup_embeddings, args.output,
-            threshold_pct=args.threshold_pct,
-            iterations=args.cc_iterations, skew_safe=args.skew_safe,
-            arrow_sig=not args.sql_sig)
-        print(json.dumps(metrics))
-        return 0
-
-    if args.dedup_texts:
-        from .corpus import dedup_texts_run
-        metrics = dedup_texts_run(spark, args.dedup_texts, args.output,
-                                  hamming_max=args.hamming_max,
-                                  iterations=args.cc_iterations,
-                                  skew_safe=args.skew_safe,
-                                  arrow_sig=not args.sql_sig)
-        print(json.dumps(metrics))
-        return 0
-
-    if args.dedup_semantic:
-        from .corpus import dedup_semantic_run
-        metrics = dedup_semantic_run(
-            spark, args.dedup_semantic, args.output,
-            threshold_pct=args.threshold_pct,
-            iterations=args.cc_iterations,
-            target_cell_size=args.target_cell_size,
-            skew_safe=args.skew_safe,
-            arrow_sig=not args.sql_sig)
+    if dedup:
+        from . import corpus
+        common = {"iterations": args.cc_iterations,
+                  "skew_safe": args.skew_safe}
+        if args.dedup_embeddings:
+            metrics = corpus.dedup_embeddings_run(
+                spark, args.dedup_embeddings, args.output,
+                threshold_pct=args.threshold_pct, **common)
+        elif args.dedup_texts:
+            metrics = corpus.dedup_texts_run(
+                spark, args.dedup_texts, args.output,
+                hamming_max=args.hamming_max, **common)
+        else:
+            metrics = corpus.dedup_semantic_run(
+                spark, args.dedup_semantic, args.output,
+                threshold_pct=args.threshold_pct,
+                target_cell_size=args.target_cell_size, **common)
         print(json.dumps(metrics))
         return 0
 

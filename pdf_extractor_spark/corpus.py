@@ -23,10 +23,13 @@ Scale design (the point is 100 TB, not 500 rows):
   exact, and ``sqrt``/division over exact ints is correctly-rounded IEEE
   double in both engines, so even cosine *values* hash-match.  Ratio
   thresholds are cross-multiplied integers.
-* **JVM-side only.** Every operator here is pure `pyspark.sql.functions`
-  / Spark-SQL higher-order functions — zero Python UDFs, whole-stage
-  codegen end-to-end.  The only pandas stage in the repo stays in the
-  extraction operator and the multimodal decode stub (Arrow-batched).
+* **One engine per computation.** Relational work is built-in
+  `pyspark.sql.functions`.  The near-dup signatures and verify dots
+  (simhash bands, sign-LSH bands + norms, int64 dots, k-means argmax)
+  run as Arrow-batched numpy pandas UDFs: their SQL forms are
+  higher-order-function chains that Spark interprets row at a time.
+  Those SQL forms survive only as DuckDB oracle strings here and as
+  Spark-side references in tests/sig_reference.py.
 
 Near-dup fixtures: the driver corpus has no natural duplicates, so dedup
 queries build a deterministic working set ``documents ∪ perturbed copies``
@@ -96,23 +99,16 @@ def _persist(df, fresh: bool = True):
     """Persist ``df``; ``fresh=True`` (a query's FIRST persist) first drains
     every cache the previous registry query left behind.  Pass
     ``fresh=False`` for additional persists inside the same query (e.g.
-    per-iteration state of an iterative algorithm)."""
+    per-iteration state of an iterative algorithm).  Entries left behind
+    by a session that has since stopped are discarded without
+    ``unpersist`` — their cache died with that session, and calling into
+    a stopped context raises."""
     if fresh:
         while _PERSISTED:
-            _PERSISTED.pop().unpersist()
+            old = _PERSISTED.pop()
+            if old.sparkSession.sparkContext._jsc is not None:
+                old.unpersist()
     _PERSISTED.append(df.persist())
-    return df
-
-
-def _materialize(df):
-    """Force a persisted iteration state NOW and cut the logical lineage.
-
-    Iterative plans (label propagation, k-means) reference iteration i's
-    result 2× in iteration i+1; without an eager cut the plan tree — and
-    the work — doubles per round.  Persist + count is the standard Pregel
-    move; at scale this is exactly where a production job would also
-    checkpoint for fault-tolerance."""
-    df.count()
     return df
 
 
@@ -370,76 +366,20 @@ def _simhash_nib_expr_d(nbits: int = 60) -> str:
     return "CAST((" + " + ".join(terms) + ") AS BIGINT)"
 
 
-def _simhash_nib_from_text_s(nbits: int = 60) -> str:
-    """Spark dialect of the wide simhash, single aggregate pass (see
-    _simhash_from_text_s for why one pass matters).  Per word hash the
-    ceil(nbits/4) hex nibbles are decoded ONCE (let-bound), then the
-    nbits per-bit votes are cheap shifts — instr/substr per BIT would
-    quadruple the string work in the inner loop."""
-    ndigits = (nbits + 3) // 4
-    nibs = (f"transform(sequence(1, {ndigits}), d -> "
-            "instr('0123456789abcdef', substr(h, d, 1)) - 1)")
-    bitvotes = (f"transform(sequence(1, {nbits}), j -> "
-                "CASE WHEN shiftright(nb[(j - 1) div 4], (j - 1) % 4) % 2 = 1 "
-                "THEN 1 ELSE -1 END)")
-    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
-             f"(acc, h) -> zip_with(acc, {let1(nibs, 'nb', bitvotes)}, "
-             "(x, y) -> x + y))")
-    bits = (f"cast(aggregate(sequence(0, {nbits - 1}), cast(0 as bigint), "
-            "(a, j) -> a + (CASE WHEN vt[j] > 0 "
-            "THEN shiftleft(cast(1 as bigint), j) ELSE cast(0 as bigint) END)) "
-            "as bigint)")
-    return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
-                let1(votes, "vt", bits))
-
-
 # Pigeonhole band count of the production simhash signature: <= 3 flipped
 # bits leave >= 1 of the 4 bands untouched, so hamming_max <= SIMHASH_BANDS-1
 # is the recall guarantee dedup_texts_run enforces.
 SIMHASH_BANDS = 4
 
 
-def _simhash_bands_from_text_s(bits: int) -> str:
-    """The PRODUCTION simhash banding: an array of 4 pigeonhole bands of
-    ``bits`` bits each over a 4·bits-wide signature, in one aggregate
-    pass.  Band k holds signature bits [k·bits, (k+1)·bits) under the
-    same vote rule as `_simhash_nib_from_text_s` (bit j votes on bit j%4
-    of word-digest hex digit j//4), so at bits=15 the 4 values equal the
-    60-bit registry signature's band split exactly (pinned by a pytest).
-
-    Because the bands PARTITION the signature, total hamming = the sum
-    of per-band hammings, and the pigeonhole guarantee (<= 3 flipped
-    bits -> >= 1 band untouched) holds at ANY band width — this is the
-    seam `simhash_band_bits(n)` threads through: wider bands = more
-    band space as the corpus grows.  Needs bits hex digits per word
-    digest; beyond md5's 32 the digest doubles (md5(w) ++ md5('#'+w),
-    the minhash module's trick), supporting bits <= 63 (bigint band),
-    i.e. corpora to ~10^18 docs."""
-    if not 1 <= bits <= 63:
-        raise ValueError(f"band width {bits} outside [1, 63]")
-    nbits = 4 * bits
-    src = ("md5(w)" if bits <= 32
-           else "concat(md5(w), md5(concat('#', w)))")
-    nibs = (f"transform(sequence(1, {bits}), d -> "
-            "instr('0123456789abcdef', substr(h, d, 1)) - 1)")
-    bitvotes = (f"transform(sequence(1, {nbits}), j -> "
-                "CASE WHEN shiftright(nb[(j - 1) div 4], (j - 1) % 4) % 2 = 1 "
-                "THEN 1 ELSE -1 END)")
-    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
-             f"(acc, h) -> zip_with(acc, {let1(nibs, 'nb', bitvotes)}, "
-             "(x, y) -> x + y))")
-    band = (f"transform(sequence(0, 3), k -> "
-            f"cast(aggregate(sequence(k * {bits}, k * {bits} + {bits - 1}), "
-            "cast(0 as bigint), (a, j) -> a + (CASE WHEN vt[j] > 0 "
-            f"THEN shiftleft(cast(1 as bigint), j - k * {bits}) "
-            "ELSE cast(0 as bigint) END)) as bigint))")
-    return let1(f"transform({WORDS_S}, w -> {src})", "hs",
-                let1(votes, "vt", band))
-
-
 def _simhash_bands_batch(texts, bits: int):
-    """Arrow-batch numpy replica of `_simhash_bands_from_text_s` —
-    bit-identical by construction (hypothesis-fuzzed and Spark-level
+    """Simhash banding: 4 pigeonhole bands of ``bits`` bits over a
+    4·bits-wide signature; bit j votes on bit j%4 of word-digest hex digit
+    j//4 (the `_simhash_nib_expr_d` rule; md5(w) ++ md5('#'+w) past 32
+    digits), so at bits=15 the bands are the 60-bit signature's split.
+    Bands PARTITION the signature, so pigeonhole recall (<= 3 flipped
+    bits -> >= 1 band untouched) holds at ANY width.  Bit-identical to
+    the SQL reference in tests/sig_reference.py (fuzzed and
     parity-tested in tests/test_sig_parity.py), ~10-40x faster per row.
 
     Why a Python path beats the built-in expression HERE: every
@@ -455,7 +395,7 @@ def _simhash_bands_batch(texts, bits: int):
     inverts when the built-in path is an interpreted HOF chain.
 
     Returns a list aligned to ``texts``: array of 4 int64 band values,
-    or None for word-less docs (callers filter those out beforehand)."""
+    or None for word-less docs."""
     import hashlib
 
     import numpy as np
@@ -502,9 +442,10 @@ def _simhash_bands_batch(texts, bits: int):
 
 def simhash_bands_udf(bits: int):
     """`_simhash_bands_batch` as an Arrow-batched pandas UDF column —
-    the production signature path (`dedup_texts_run`).  The SQL
-    expression form stays as the registry/oracle reference and the
-    parity gate."""
+    the one Spark-side simhash band engine (`dedup_texts_run` and the
+    registry `dedup_simhash_blocked`)."""
+    if not 1 <= bits <= 63:
+        raise ValueError(f"band width {bits} outside [1, 63]")
     import pandas as pd
     from pyspark.sql.types import ArrayType, LongType
 
@@ -534,6 +475,30 @@ def _simhash_from_text_s(nbits: int = 16) -> str:
             "as bigint)")
     return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
                 let1(votes, "vt", bits))
+
+
+def _simhash_pairs(sigs, ex, hamming_max: int):
+    """Simhash near-dup pairs shared by `dedup_simhash_blocked` and
+    `dedup_texts_run`: candidates agree exactly on some band row of
+    ``ex`` (doc_id, band_idx, band_bits), then the full-signature hamming
+    over ``sigs`` (doc_id, bands) must be <= ``hamming_max``."""
+    a, b = ex.alias("a"), ex.alias("b")
+    cand = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
+                   & (F.col("a.band_bits") == F.col("b.band_bits"))
+                   & (F.col("a.doc_id") < F.col("b.doc_id")))
+            .select(F.col("a.doc_id").alias("doc_a"),
+                    F.col("b.doc_id").alias("doc_b"))
+            .distinct())
+    sa = sigs.select(F.col("doc_id").alias("doc_a"),
+                     F.col("bands").alias("bands_a"))
+    sb = sigs.select(F.col("doc_id").alias("doc_b"),
+                     F.col("bands").alias("bands_b"))
+    # the bands PARTITION the signature: hamming = sum of band popcounts
+    ham = " + ".join(f"bit_count(bands_a[{k}] ^ bands_b[{k}])"
+                     for k in range(SIMHASH_BANDS))
+    return (cand.join(sa, "doc_a").join(sb, "doc_b")
+            .select("doc_a", "doc_b", F.expr(ham).cast("int").alias("hamming"))
+            .filter(F.col("hamming") <= hamming_max))
 
 
 @register(
@@ -613,31 +578,16 @@ def dedup_simhash(spark, sf_dir):
         "digests",
 )
 def dedup_simhash_blocked(spark, sf_dir):
-    corpus = _neardup_corpus_s(spark, sf_dir)
-    sigs = (
-        corpus.filter(F.expr(f"size({WORDS_S}) >= 1"))
-        .select("doc_id", F.expr(_simhash_nib_from_text_s(60)).alias("simhash"))
-    )
+    # the 4 Arrow-computed 15-bit bands ARE the 60-bit signature's band
+    # split; word-less docs get null bands and drop out as in the oracle
+    sigs = (_neardup_corpus_s(spark, sf_dir)
+            .select("doc_id",
+                    simhash_bands_udf(15)(F.col("text")).alias("bands"))
+            .filter(F.col("bands").isNotNull()))
     sigs = _persist(sigs)   # referenced 3x: band explode + both verify legs
-    ex = (sigs.select("doc_id", "simhash",
-                      F.explode(F.expr("sequence(1, 4)")).alias("band_idx"))
-          .withColumn("band_bits", F.expr(
-              "(simhash div CASE band_idx WHEN 1 THEN 1 WHEN 2 THEN 32768 "
-              "WHEN 3 THEN 1073741824 ELSE 35184372088832 END) % 32768")))
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.band_bits") == F.col("b.band_bits"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sim_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sim_b"))
-    ham = F.expr("bit_count(sim_a ^ sim_b)").cast("int")
-    return (cand.join(sa, "doc_a").join(sb, "doc_b")
-            .select("doc_a", "doc_b", ham.alias("hamming"))
-            .filter(F.col("hamming") <= 3))
+    ex = sigs.select("doc_id",
+                     F.posexplode("bands").alias("band_idx", "band_bits"))
+    return _simhash_pairs(sigs, ex, hamming_max=3)
 
 
 # ---------------------------------------------------------------------------
@@ -769,9 +719,8 @@ edges AS (
   SELECT doc_id + 2000000 AS src, doc_id AS dst FROM documents WHERE doc_id % 7 = 0
   UNION ALL
   -- chain ODD multiples of 21 to the previous multiple's copy: components
-  -- become 4-node paths (0 - copy0 - 21 - copy21), diameter 3, so the 3
-  -- unrolled propagation iterations provably reach the fixpoint while
-  -- still having to genuinely iterate (even multiples don't chain on,
+  -- become 4-node paths (0 - copy0 - 21 - copy21), diameter 3, so label
+  -- propagation has to genuinely iterate (even multiples don't chain on,
   -- which caps the path length)
   SELECT doc_id AS src, doc_id - 21 + 2000000 AS dst
   FROM documents WHERE doc_id % 42 = 21
@@ -794,15 +743,17 @@ def _edges_s(spark, sf_dir):
                                         F.col("src").alias("dst")))
 
 
-def _components_sql_iter(it: int) -> str:
-    return f"""
-    lab{it + 1} AS (
-      SELECT n.node,
-             least(MIN(n.label), COALESCE(MIN(l.label), MIN(n.label))) AS label
-      FROM lab{it} n
-      LEFT JOIN edges a ON a.src = n.node
-      LEFT JOIN lab{it} l ON l.node = a.dst
-      GROUP BY n.node)"""
+# DuckDB connected components, independent of the Spark label rounds: a
+# recursive reachability closure (node is reachable from r), then each node's
+# label is the least id that reaches it — the component minimum.  UNION
+# (not UNION ALL) drops repeated (node, r) facts, so the recursion stops.
+_COMPONENTS_D = """
+reach(node, r) AS (
+  SELECT src, src FROM edges
+  UNION
+  SELECT e.dst, reach.r FROM reach JOIN edges e ON e.src = reach.node),
+labels AS (SELECT node, MIN(r) AS label FROM reach GROUP BY node)
+"""
 
 
 def _minlabel_hop(labels, edges):
@@ -819,33 +770,15 @@ def _minlabel_hop(labels, edges):
                                     F.min(F.col("label")))).alias("label")))
 
 
-def _min_label_components(edges, iterations: int = 3):
-    """Min-label propagation over a DIRECTED edge list (src, dst) that
-    must already contain both directions of every pair, with a FIXED
-    unrolled hop count — the registry form, mirroring the static DuckDB
-    oracle's three unrolled CTEs.  ``iterations`` must cover the
-    component diameter; production callers use
-    :func:`min_label_components_fixpoint` instead, which iterates until
-    no label changes and SURFACES convergence.  Returns (node, label);
-    canonical node = component minimum."""
-    edges = _persist(edges)
-    labels = edges.select(F.col("src").alias("node")).distinct() \
-                  .withColumn("label", F.col("node"))
-    for _ in range(iterations):
-        # labels is referenced twice below (self-join on neighbours) —
-        # persist + materialize each round or the plan doubles per round
-        labels = _materialize(_persist(labels, fresh=False))
-        labels = _minlabel_hop(labels, edges)
-    return labels
-
-
 def min_label_components_fixpoint(edges, max_rounds: int = 20):
-    """Min-label propagation TO FIXPOINT with surfaced convergence — the
-    production form (``cli.py --dedup-*``, VERDICT r4 item 1).
+    """Min-label propagation TO FIXPOINT with surfaced convergence over a
+    DIRECTED edge list (src, dst) that already holds both directions of
+    every pair — the one components form (``cli.py --dedup-*`` and the
+    registry ``dedup_components``).  Canonical node = component minimum.
 
-    The fixed-hop form silently splits any dup-chain whose component
-    diameter exceeds the hop count (wrong ``is_canonical`` decisions, no
-    error).  Here each round ends with a convergence probe: min-label
+    A fixed hop count silently splits any dup-chain whose component
+    diameter exceeds it (wrong ``is_canonical`` decisions, no error).
+    Here each round ends with a convergence probe: min-label
     propagation only ever DECREASES labels, so the label sum (exact
     decimal(38,0) — no int64 overflow at 10^12 × 10^12-sized ids) is
     strictly monotone and two equal consecutive sums ⟺ zero changed
@@ -906,28 +839,24 @@ def min_label_components_fixpoint(edges, max_rounds: int = 20):
 @register(
     "dedup_components",
     sql=f"""
-    WITH {_EDGES_D},
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    lab0 AS (SELECT node, node AS label FROM nodes),
-    {_components_sql_iter(0)},
-    {_components_sql_iter(1)},
-    {_components_sql_iter(2)}
+    WITH RECURSIVE {_EDGES_D}, {_COMPONENTS_D}
     SELECT node AS doc_id, label AS component,
            label = node AS is_canonical
-    FROM lab3
+    FROM labels
     """,
     doc="near-dup canonicalization: connected components over the dedup pair "
-        "list via min-label propagation (3 unrolled iterations of "
-        "join-neighbors + groupBy-min — the relational core of "
-        "large-star/small-star).  Each iteration is one equi-join + one "
-        "combine-friendly aggregate, so a round costs the same as any "
-        "shuffle; iteration count grows with component diameter (log n "
-        "with star-contraction), not corpus size.  Canonical doc = min id "
-        "of its component.  Fixture edges include 3-node chains so "
-        "propagation genuinely iterates; a pytest asserts the fixpoint",
+        "list via min-label propagation to a fixpoint (join-neighbors + "
+        "combine-friendly groupBy-min per round — the relational core of "
+        "large-star/small-star — with a label-sum convergence probe).  Each "
+        "round is one equi-join + one aggregate, and the round count grows "
+        "with component diameter, not corpus size.  Canonical doc = min id "
+        "of its component.  Fixture edges include 4-node chains so "
+        "propagation genuinely iterates; the oracle is a recursive "
+        "reachability closure",
 )
 def dedup_components(spark, sf_dir):
-    labels = _min_label_components(_edges_s(spark, sf_dir))
+    edges = _persist(_edges_s(spark, sf_dir))
+    labels, _cc = min_label_components_fixpoint(edges)
     return labels.select(F.col("node").alias("doc_id"),
                          F.col("label").alias("component"),
                          (F.col("label") == F.col("node")).alias("is_canonical"))
@@ -936,13 +865,8 @@ def dedup_components(spark, sf_dir):
 @register(
     "dedup_apply",
     sql=f"""
-    WITH {_EDGES_D},
-    nodes AS (SELECT DISTINCT src AS node FROM edges),
-    lab0 AS (SELECT node, node AS label FROM nodes),
-    {_components_sql_iter(0)},
-    {_components_sql_iter(1)},
-    {_components_sql_iter(2)},
-    noncanon AS (SELECT node FROM lab3 WHERE label <> node),
+    WITH RECURSIVE {_EDGES_D}, {_COMPONENTS_D},
+    noncanon AS (SELECT node FROM labels WHERE label <> node),
     corpus AS (
       SELECT doc_id FROM documents
       UNION ALL
@@ -1060,8 +984,6 @@ QUANT_D = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) 
 
 # exact int64 dot product of two quantized vectors qa, qb
 DOT_S = "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
-DOT_D = ("CAST(list_sum(list_transform(range(1, len(qa) + 1), "
-         "i -> qa[i] * qb[i])) AS BIGINT)")
 NORM_D = ("CAST(list_sum(list_transform(range(1, len(q) + 1), "
           "i -> q[i] * q[i])) AS BIGINT)")
 
@@ -1281,29 +1203,21 @@ def _plane_signs(h: int) -> list[int]:
     return out
 
 
-def _plane_dot(vec: str, h: int, dialect: str) -> str:
-    """Signed dot against a literal sign vector (exact int64 sum both
-    engines).  The signs ride as a small array literal + zip_with/
-    list_transform — NOT a 64-term ±element chain, which balloons the
-    expression tree past what Catalyst will codegen (measured 6x slower)."""
+def _plane_dot(vec: str, h: int) -> str:
+    """DuckDB signed dot against a literal sign vector (exact int64 sum).
+    The signs ride as a small array literal + list_transform — NOT a
+    64-term ±element chain."""
     signs = ", ".join(str(s) for s in _plane_signs(h))
-    if dialect == "spark":
-        return (f"aggregate(zip_with({vec}, array({signs}), "
-                f"(x, s) -> x * CAST(s AS BIGINT)), 0L, (acc, v) -> acc + v)")
     return (f"CAST(list_sum(list_transform(range(1, {EMB_DIM + 1}), "
             f"i -> {vec}[i] * ([{signs}])[i])) AS BIGINT)")
 
 
-def _band_bucket(vec: str, dialect: str, band: int, ppb: int) -> str:
-    """Bucket id of `band`: ppb sign bits of planes [band*ppb, band*ppb+ppb)."""
-    bits = [f"(CASE WHEN {_plane_dot(vec, band * ppb + i, dialect)} > 0 "
+def _band_bucket(vec: str, band: int, ppb: int) -> str:
+    """DuckDB bucket id of `band`: ppb sign bits of planes
+    [band*ppb, band*ppb+ppb)."""
+    bits = [f"(CASE WHEN {_plane_dot(vec, band * ppb + i)} > 0 "
             f"THEN {1 << i} ELSE 0 END)" for i in range(ppb)]
     return "CAST((" + " + ".join(bits) + ") AS INT)"
-
-
-def _bands_array_s(vec: str, ppb: int):
-    return F.array(*[F.expr(_band_bucket(vec, "spark", k, ppb))
-                     for k in range(N_EMB_BANDS)])
 
 
 def _sign_matrix(ppb: int):
@@ -1316,9 +1230,10 @@ def _sign_matrix(ppb: int):
 
 def emb_bands_nrm_udf(ppb: int):
     """Sign-LSH band buckets + int64 self-norm in ONE Arrow pass over the
-    quantized vectors — the production banding path
-    (`dedup_embeddings_run`).  Bit-identical to `_bands_array_s` +- the
-    SQL norm fold BY CONSTRUCTION: the plane dots and the self-dot are
+    quantized vectors — the one Spark-side banding engine (see
+    `_emb_signature`).  Bit-identical to the DuckDB `_bands_array_d`
+    oracle and the Spark SQL reference in tests/sig_reference.py BY
+    CONSTRUCTION: the plane dots and the self-dot are
     integer-valued and < 2^53, so every float64 summation order (numpy
     matmul included) yields the exact same value as the sequential SQL
     aggregate — no rounding-order hazard (parity-tested in
@@ -1354,7 +1269,9 @@ def emb_dot_udf():
     """Exact candidate-verify dot as an Arrow-batched projection — the
     per-candidate `DOT_S` fold is the hot interpreted expression of the
     embedding dedup verify (candidates ~ 100x rows at the derived
-    occupancy).  int64 in, int64 out, exact — drop-in for F.expr(DOT_S)."""
+    occupancy).  int64 in, int64 out, exact — drop-in for F.expr(DOT_S).
+    Verify callers name its inputs ``qa``/``qb``: profiles tell the
+    verify UDF from the signature UDFs by those column names."""
     import pandas as pd
     from pyspark.sql.types import LongType
 
@@ -1367,8 +1284,30 @@ def emb_dot_udf():
     return F.pandas_udf(_batch, LongType())
 
 
+def _emb_signature(q, ppb: int):
+    """(vec_id, qv, ...) -> (vec_id, qv, bands, nrm): the shared embedding
+    signature step of `dedup_embedding_cosine` and `dedup_embeddings_run`
+    (and `ann_lsh_bucketed`)."""
+    bn = emb_bands_nrm_udf(ppb)(F.col("qv"))
+    return q.select("vec_id", "qv", bn.getField("bands").alias("bands"),
+                    bn.getField("nrm").alias("nrm"))
+
+
+def _emb_verify(cand, b):
+    """Exact quantized cosine of candidate pairs (vec_a, vec_b) against
+    the signature rows ``b``: both vectors re-joined, Arrow dot, `COS`.
+    Returns (vec_a, vec_b, ..., cos_sim); callers apply their threshold."""
+    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
+                  F.col("nrm").alias("na"))
+    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
+                  F.col("nrm").alias("nb"))
+    return (cand.join(va, "vec_a").join(vb, "vec_b")
+            .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
+            .withColumn("cos_sim", F.expr(COS)))
+
+
 def _bands_array_d(vec: str, ppb: int) -> str:
-    return "[" + ", ".join(_band_bucket(vec, "duck", k, ppb)
+    return "[" + ", ".join(_band_bucket(vec, k, ppb)
                            for k in range(N_EMB_BANDS)) + "]"
 
 
@@ -1411,10 +1350,8 @@ def _bands_array_d(vec: str, ppb: int) -> str:
 def ann_lsh_bucketed(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
          .select("vec_id", F.expr(QUANT_S).alias("qv")))
-    b = (e.withColumn("bands", _bands_array_s("qv", PPB_ANN))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    b = _persist(b)   # referenced 4x (qx/cx band explodes + q/c vector legs)
+    # referenced 4x (qx/cx band explodes + q/c vector legs)
+    b = _persist(_emb_signature(e, PPB_ANN))
     qx = (b.filter(F.col("vec_id") < 3)
           .select(F.col("vec_id").alias("query_id"),
                   F.posexplode("bands").alias("band_idx", "bucket")))
@@ -1429,7 +1366,7 @@ def ann_lsh_bucketed(spark, sf_dir):
          .select("vec_id", F.col("qv").alias("qb"), F.col("nrm").alias("nb")))
     scored = (
         cand.join(F.broadcast(q), "query_id").join(c, "vec_id")
-        .withColumn("dot", F.expr(DOT_S))
+        .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
         .withColumn("cos_sim", F.expr(COS))
         .select("query_id", "vec_id", "cos_sim")
     )
@@ -1561,53 +1498,6 @@ def _kmeans_sql_iter(it: int) -> str:
       FROM dims{it} GROUP BY cell)"""
 
 
-def _assign_nearest(data, cents_df, materialize: bool = True,
-                    carry_vec: bool = False):
-    """Nearest-centroid assignment of every ``data`` vector (vec_id, qv)
-    to a broadcast centroid set (cell, cv), cosine with cell tie-break.
-
-    Per-vector argmax as a MAP-SIDE-COMBINABLE aggregate: max_by over
-    the ordering struct (ccos desc, cell asc via negation) collapses
-    the n·K scored rows to n rows inside each scan task, so only n
-    (vec_id, cell) rows ever cross the exchange — the r2 form sorted
-    all n·K rows through a row_number window partitioned by vec_id,
-    8x the necessary shuffle volume, three times per query.  The
-    ordering struct is unique per (vec, cell), so the argmax is
-    deterministic and identical to the window form.  TRAINING-round
-    assignments feed the next round's centroids, whose lineage would
-    otherwise re-run every earlier crossJoin per reference — those are
-    materialized (``materialize=True``).  A FINAL assignment feeding one
-    downstream consumer needs no barrier: pass ``materialize=False`` and
-    it evaluates lazily inside the consumer's own job (VERDICT r3 item
-    5 — one materialization barrier removed from ann_ivf_kmeans and
-    dedup_semantic each).  ``carry_vec=True`` additionally returns the
-    vector itself (``first(qv)`` — constant within the vec_id group, so
-    deterministic): every consumer of an assignment immediately re-joins
-    ``data`` on vec_id to recover qv, which costs two more exchanges
-    (both join sides) per round; carrying qv through the SAME aggregation
-    exchanges n (vec_id, cell, qv) rows ONCE instead — strictly less
-    volume than the small-assignment exchange plus the join's two."""
-    aggs = [F.max_by(
-        "cell", F.struct(F.col("ccos").alias("c"),
-                         (-F.col("cell")).alias("nc"))).alias("cell")]
-    if carry_vec:
-        aggs.append(F.first("qv").alias("qv"))
-    step = (data.crossJoin(F.broadcast(cents_df))
-            .withColumn("ccos", F.expr(f"{_CDOT_S} / {_CNRM_S}"))
-            .groupBy("vec_id")
-            .agg(*aggs))
-    if not materialize:
-        return step
-    return _materialize(_persist(step, fresh=False))
-
-
-# Above this K, the literal-centroid assignment's plan (K x 64 literal
-# doubles + K HOF evaluations per row) stops being worth building; the
-# broadcast-crossJoin _assign_nearest takes over.  Well under the
-# KMEANS_K_MAX broadcast ceiling by design.
-LIT_CENTS_MAX = 256
-
-
 def _cents_rows(cents_df) -> list:
     """Collect a (cell, cv) centroid table to the driver, sorted by cell
     (deterministic plan).  Bounded: K <= KMEANS_K_MAX by the derivation
@@ -1622,14 +1512,13 @@ def _assign_cell_lit(rows):
     """Nearest-centroid cell as ONE PROJECTION over a literal centroid
     array — zero shuffle (VERDICT r4 item 6).
 
-    The crossJoin+max_by form re-shuffles n (vec_id, cell, qv) rows by
-    vec_id every Lloyd round; with the centroids collected driver-side
-    (bounded, see ``_cents_rows``) the argmax folds entirely inside the
-    scan task: transform the literal array to (ccos, -cell, cell)
-    structs, array_max picks (ccos desc, cell asc) — the identical
-    ordering struct ``_assign_nearest`` maximizes, with the identical
-    left-to-right double fold as ``_CDOT_S``/``_CNRM_S``, so assignments
-    are bit-identical to the crossJoin form and the DuckDB oracle."""
+    With the centroids collected driver-side (bounded, see
+    ``_cents_rows``) the argmax folds entirely inside the scan task:
+    transform the literal array to (ccos, -cell, cell) structs,
+    array_max picks (ccos desc, cell asc) — the oracle's ORDER BY cosine
+    DESC, cell ASC — with the same left-to-right double fold as
+    ``_CDOT_D``/``_CNRM_D``, so assignments are bit-identical to the
+    DuckDB oracle."""
     arr = F.array(*[
         F.struct(F.lit(c).cast("long").alias("cell"),
                  F.array(*[F.lit(v) for v in cv]).alias("cv"))
@@ -1690,46 +1579,29 @@ def kmeans_assign_udf(rows):
     return F.pandas_udf(_batch, LongType())
 
 
-def _lloyd_arrow(spark, data, seed_cents, rounds: int):
-    """Lloyd training with driver-collected centroids and the Arrow
-    argmax assignment (`kmeans_assign_udf`) — the production path for
-    ANY derived K <= KMEANS_K_MAX (the literal/crossJoin split exists
-    only for the SQL engines).  Structure identical to `_lloyd_lit`:
-    zero n-row exchange per round, per-cell exact avgs, final lazy
-    assignment against the FINAL centroids."""
+def _lloyd(spark, data, seed_cents, rounds: int, assign=_assign_cell_lit):
+    """Lloyd training with driver-collected centroids: each round is scan
+    -> zero-shuffle argmax projection ``assign(rows)`` -> per-cell exact
+    int64 avgs (map-side partials, the exchange carries K x 64 sums per
+    map partition) -> K-row collect.  No n-row exchange and no
+    assignment materialization barrier exist anywhere in the round.
+    ``assign`` maps the collected centroid rows to a cell column over
+    ``qv``: the literal-centroid SQL argmax `_assign_cell_lit` (registry,
+    bit-identical to the DuckDB oracle) or `kmeans_assign_udf`
+    (production, any derived K <= KMEANS_K_MAX; see there for parity).
+    Returns (cents_df, assign): the final centroid table (a literal
+    createDataFrame, so consumers never re-run training lineage) and the
+    final lazy assignment (vec_id, qv, cell) against those FINAL
+    centroids."""
     rows = _cents_rows(seed_cents)
     for _ in range(rounds):
-        joined = data.withColumn("cell", kmeans_assign_udf(rows)(
-            F.col("qv")))
+        joined = data.withColumn("cell", assign(rows))
         avgs = joined.groupBy("cell").agg(
             *[F.avg(F.col("qv")[i]).alias(f"c{i}") for i in range(EMB_DIM)])
         rows = _cents_rows(avgs.select(
             "cell", F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv")))
     cents = spark.createDataFrame(rows, "cell long, cv array<double>")
-    assign = data.withColumn("cell", kmeans_assign_udf(rows)(F.col("qv")))
-    return cents, assign
-
-
-def _lloyd_lit(spark, data, seed_cents, rounds: int):
-    """Lloyd training with driver-collected centroids (small-K path,
-    K <= LIT_CENTS_MAX): each round is scan -> zero-shuffle literal
-    argmax projection -> per-cell exact int64 avgs (map-side partials,
-    the exchange carries K x 64 sums per map partition) -> K-row collect.
-    No n-row exchange and no assignment materialization barrier exist
-    anywhere in the round.  Returns (cents_df, assign): the final
-    centroid table (a literal createDataFrame, so consumers never
-    re-run training lineage) and the final lazy assignment
-    (vec_id, qv, cell) against those FINAL centroids."""
-    rows = _cents_rows(seed_cents)
-    for _ in range(rounds):
-        joined = data.withColumn("cell", _assign_cell_lit(rows))
-        avgs = joined.groupBy("cell").agg(
-            *[F.avg(F.col("qv")[i]).alias(f"c{i}") for i in range(EMB_DIM)])
-        rows = _cents_rows(avgs.select(
-            "cell", F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv")))
-    cents = spark.createDataFrame(rows, "cell long, cv array<double>")
-    assign = data.withColumn("cell", _assign_cell_lit(rows))
-    return cents, assign
+    return cents, data.withColumn("cell", assign(rows))
 
 
 @register(
@@ -1771,14 +1643,14 @@ def _lloyd_lit(spark, data, seed_cents, rounds: int):
     """,
     doc="IVF-ANN with LEARNED centroids: deterministic k-means (seed = the "
         f"{K_IVF} lowest corpus vec_ids, 2 unrolled Lloyd iterations — "
-        "assign via broadcast cross join + map-side max_by argmax "
-        "(shuffles n rows, not n·K), means via per-dimension avg "
-        "aggregates over the intact array (no posexplode)), then probe "
+        "assign via a zero-shuffle argmax over driver-collected literal "
+        "centroids, means via per-dimension avg aggregates over the "
+        "intact array (no posexplode)), then probe "
         "the 2 nearest learned cells per query and exact-cosine top-5 "
         "inside them.  Replaces ann_ivf_probe's label-as-centroid "
         "shortcut with the production construction; search cost still "
         "scales with the probed fraction, training is O(iters * K * n) "
-        "map-side with only n-row exchanges",
+        "map-side with no n-row exchange",
 )
 def ann_ivf_kmeans(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
@@ -1788,16 +1660,14 @@ def ann_ivf_kmeans(spark, sf_dir):
     seeds = (e.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 3 + K_IVF))
              .select((F.col("vec_id") - 3).alias("cell"),
                      F.expr("transform(qv, x -> CAST(x AS DOUBLE))").alias("cv")))
-    # Driver-collected literal-centroid Lloyd (VERDICT r4 item 6): K=8
-    # is far under LIT_CENTS_MAX, so each round is a zero-shuffle argmax
-    # projection + per-cell exact int64 avgs (map-side partials; the one
-    # exchange carries K·64 sums per map partition) + a K-row collect —
-    # the crossJoin form's n-row assignment exchange and per-round
-    # materialization barrier are both gone.  The FINAL assignment is
+    # Driver-collected literal-centroid Lloyd (VERDICT r4 item 6): each
+    # round is a zero-shuffle argmax projection + per-cell exact int64
+    # avgs (map-side partials; the one exchange carries K·64 sums per map
+    # partition) + a K-row collect.  The FINAL assignment is
     # against the FINAL centroids (the probe ranks cells by cent2
     # geometry, so membership must use the same centroids) and stays
     # lazy: its sole consumer is the scorer.
-    cents, assign_last = _lloyd_lit(spark, data, seeds, rounds=2)
+    cents, assign_last = _lloyd(spark, data, seeds, rounds=2)
     q = (e.filter(F.col("vec_id") < 3)
          .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"))
          .withColumn("na", F.expr(
@@ -1823,6 +1693,23 @@ def ann_ivf_kmeans(spark, sf_dir):
     return (scored.withColumn("rank", F.row_number().over(w))
             .filter(F.col("rank") <= 5)
             .select("query_id", "rank", "vec_id", "cell", "cos_sim"))
+
+
+def _with_perturbed_copies(spark, sf_dir, every: int, dims: int,
+                           scale: float):
+    """Registry embedding near-dup working set: the quantized embeddings
+    ∪ copies (vec_id + 100000) of every vec_id % ``every`` == 0 whose
+    first ``dims`` dims are scaled by ``scale`` before quantizing."""
+    e = t(spark, sf_dir, "embeddings")
+    perturbed = F.expr(
+        f"transform(sequence(1, {EMB_DIM}), i -> CASE WHEN i <= {dims} "
+        "THEN CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000 "
+        f"* {scale}) AS BIGINT) ELSE CAST(floor(CAST(element_at(embedding, i) "
+        "AS DOUBLE) * 10000) AS BIGINT) END)")
+    return (e.select("vec_id", F.expr(QUANT_S).alias("qv"))
+            .unionByName(e.filter(F.col("vec_id") % every == 0)
+                         .select((F.col("vec_id") + 100000).alias("vec_id"),
+                                 perturbed.alias("qv"))))
 
 
 @register(
@@ -1866,37 +1753,16 @@ def ann_ivf_kmeans(spark, sf_dir):
         "corpus size so intra-bucket pair counts stay linear",
 )
 def dedup_embedding_cosine(spark, sf_dir):
-    e = t(spark, sf_dir, "embeddings")
-    perturbed = F.expr(
-        "transform(sequence(1, 64), i -> CASE WHEN i <= 8 "
-        "THEN CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000 * 0.9) AS BIGINT) "
-        "ELSE CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000) AS BIGINT) END)")
-    base = (
-        e.select("vec_id", F.expr(QUANT_S).alias("qv"))
-        .unionByName(
-            e.filter(F.col("vec_id") % 4 == 0)
-            .select((F.col("vec_id") + 100000).alias("vec_id"),
-                    perturbed.alias("qv")))
-    )
-    b = (base.withColumn("bands", _bands_array_s("qv", PPB_DEDUP))
-         .withColumn("nrm", F.expr(
-             "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    b = _persist(b)   # referenced 3x: band explode + both verify re-joins
+    base = _with_perturbed_copies(spark, sf_dir, every=4, dims=8, scale=0.9)
+    # referenced 3x: band explode + both verify re-joins
+    b = _persist(_emb_signature(base, PPB_DEDUP))
     cand, _dropped = emb_band_candidates(b)
     # _dropped is provably empty at sf geometry (cap 4096 >> any fixture
-    # bucket), so the oracle sees identical pairs; a production caller uses
-    # emb_band_candidates directly and sinks the drop report to metrics.
-    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                  F.col("nrm").alias("na"))
-    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                  F.col("nrm").alias("nb"))
-    return (
-        cand.join(va, "vec_a").join(vb, "vec_b")
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .filter(F.col("cos_sim") >= 0.98)
-        .select("vec_a", "vec_b", "cos_sim")
-    )
+    # bucket), so the oracle sees identical pairs; a production caller
+    # sinks the drop report to metrics.
+    return (_emb_verify(cand, b)
+            .filter(F.col("cos_sim") >= 0.98)
+            .select("vec_a", "vec_b", "cos_sim"))
 
 
 @register(
@@ -1936,8 +1802,8 @@ def dedup_embedding_cosine(spark, sf_dir):
     """,
     doc="SemDeDup-style semantic dedup (Abbas et al. 2023, arXiv:2303.09540): "
         f"cluster embeddings with deterministic k-means (seed = the {K_IVF} "
-        "lowest vec_ids, 1 Lloyd iteration via the shared map-side max_by "
-        "assignment — n-row exchanges only), then prune WITHIN each cluster: "
+        "lowest vec_ids, 1 Lloyd iteration via the zero-shuffle literal-"
+        "centroid assignment), then prune WITHIN each cluster: "
         "any pair with exact quantized cosine >= 0.98 drops the higher "
         "vec_id (keep-first representative).  Working set = embeddings ∪ "
         "slightly-perturbed copies (first 4 dims x 0.95) of vec_id%5==0.  "
@@ -1951,31 +1817,18 @@ def dedup_embedding_cosine(spark, sf_dir):
         "the pairing is a per-cell self-join inside that partitioning",
 )
 def dedup_semantic(spark, sf_dir):
-    e = (t(spark, sf_dir, "embeddings")
-         .select("vec_id", F.expr(QUANT_S).alias("qv"), "embedding"))
-    perturbed = F.expr(
-        "transform(sequence(1, 64), i -> CASE WHEN i <= 4 "
-        "THEN CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000 * 0.95) AS BIGINT) "
-        "ELSE CAST(floor(CAST(element_at(embedding, i) AS DOUBLE) * 10000) AS BIGINT) END)")
-    data = (
-        e.select("vec_id", "qv")
-        .unionByName(
-            e.filter(F.col("vec_id") % 5 == 0)
-            .select((F.col("vec_id") + 100000).alias("vec_id"),
-                    perturbed.alias("qv")))
-    )
+    data = _with_perturbed_copies(spark, sf_dir, every=5, dims=4, scale=0.95)
     data = _persist(data)  # read per Lloyd round + final assignment
-    seeds = (e.filter(F.col("vec_id") < K_IVF)
+    seeds = (data.filter(F.col("vec_id") < K_IVF)
              .select(F.col("vec_id").alias("cell"),
                      F.expr("transform(qv, x -> CAST(x AS DOUBLE))").alias("cv")))
     # 1 Lloyd iteration, driver-collected literal centroids (zero-shuffle
     # assignment; exact int64 avgs — order-independent, oracle-stable;
-    # see _lloyd_lit / ann_ivf_kmeans).  The final assignment is lazy:
+    # see _lloyd / ann_ivf_kmeans).  The final assignment is lazy:
     # its sole consumer is semantic_cell_pairs, whose occupancy split
     # persists the cell-partitioned form both self-join sides read from.
-    _cents, assigned = _lloyd_lit(spark, data, seeds, rounds=1)
-    m = assigned.withColumn("nrm", F.expr(
-        "aggregate(zip_with(qv, qv, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"))
+    _cents, assigned = _lloyd(spark, data, seeds, rounds=1)
+    m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
     pairs, _dropped = semantic_cell_pairs(m)
     # _dropped is provably empty at sf geometry (cap 4096 >> any fixture
     # cell), so the DuckDB oracle sees identical pairs; a production
@@ -1991,85 +1844,115 @@ def estimate_parquet_rows(spark, path: str) -> int:
     return spark.read.parquet(path).count()
 
 
+# Malformed-row rules of the production dedup inputs (reason, or NULL for a
+# well-formed row).  A word-less text is null or all spaces: words split on
+# ' ' with empties dropped, and trim strips exactly the ' ' character.
+EMB_REJECT_S = ("CASE WHEN embedding IS NULL THEN 'null_embedding' "
+                f"WHEN size(embedding) <> {EMB_DIM} THEN 'bad_dim' END")
+TEXT_REJECT_S = "CASE WHEN text IS NULL OR trim(text) = '' THEN 'no_words' END"
+
+
+def _dedup_input(spark, input_path: str, output_dir: str, cols: tuple,
+                 reason: str):
+    """The shared input step of the production dedup runs.  ``rows_in``
+    is the parquet-footer row count (metadata only) the caller derives
+    its geometry from.  Malformed rows are split off before a signature
+    engine sees them (a bad embedding crashes the Arrow UDFs; a
+    word-less text has no signature): ``reason`` is a SQL expression
+    giving a row's reject reason, NULL when well-formed.  Rejected rows
+    land with a ``reason`` column in ``{output_dir}/rejected`` — written
+    only when a row is rejected; a stale one from an earlier run is
+    removed — and one aggregate counts rows per reason, so the metrics
+    show ``rows_in == kept + rejected``.  Returns (kept rows of
+    ``cols``, metrics)."""
+    from .sources.catalog import fs_delete
+    rows_in = estimate_parquet_rows(spark, input_path)
+    tagged = (spark.read.parquet(input_path).select(*cols)
+              .withColumn("reason", F.expr(reason)))
+    by_reason = {r["reason"]: r["count"]
+                 for r in tagged.groupBy("reason").count().collect()}
+    kept = by_reason.pop(None, 0)
+    path = f"{output_dir}/rejected"
+    if by_reason:
+        (tagged.filter(F.col("reason").isNotNull())
+         .write.mode("overwrite").parquet(path))
+    else:
+        fs_delete(spark, path)
+    return (tagged.filter(F.col("reason").isNull()).drop("reason"),
+            {"rows_in": rows_in, "kept": kept,
+             "rejected": sum(by_reason.values()),
+             "rejected_by_reason": by_reason})
+
+
+def _dedup_sinks(pairs, key: str, dropped, unit: str, output_dir: str,
+                 iterations: int) -> dict:
+    """The shared tail of the production dedup runs: the pair graph
+    (``pairs``' first two columns are the pair ids) -> fixpoint min-label
+    components -> keep-canonical decisions keyed by ``key``, then the
+    pairs / decisions / ``dropped_{unit}`` sinks, counted from the
+    written files.
+
+    ``iterations`` bounds min-label propagation (``--cc-iterations``);
+    labeling iterates TO FIXPOINT inside that budget and the metrics
+    carry ``cc_rounds`` / ``cc_converged`` / ``cc_residual`` — a
+    dup-chain whose diameter exceeds the budget is DETECTED and
+    surfaced, never silently split (VERDICT r4 item 1)."""
+    spark = pairs.sparkSession
+    a, b = pairs.columns[:2]
+    edges = (pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
+             .unionByName(pairs.select(F.col(b).alias("src"),
+                                       F.col(a).alias("dst"))))
+    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
+    decisions = labels.select(F.col("node").alias(key),
+                              F.col("label").alias("component"),
+                              (F.col("label") == F.col("node"))
+                              .alias("is_canonical"))
+    sinks = {"pairs": pairs, "decisions": decisions,
+             f"dropped_{unit}": dropped}
+    for name, df in sinks.items():
+        df.write.mode("overwrite").parquet(f"{output_dir}/{name}")
+    out = {name: spark.read.parquet(f"{output_dir}/{name}") for name in sinks}
+    return {
+        f"dropped_hot_{unit}": out[f"dropped_{unit}"].count(),
+        "pairs": out["pairs"].count(),
+        "non_canonical": out["decisions"].filter(~F.col("is_canonical")).count(),
+        **cc,
+    }
+
+
 def dedup_embeddings_run(spark, input_path: str, output_dir: str,
                          threshold_pct: int = 98, iterations: int = 20,
                          cap: int = EMB_BUCKET_CAP,
-                         skew_safe: bool = False,
-                         arrow_sig: bool = True) -> dict:
+                         skew_safe: bool = False) -> dict:
     """Production embedding near-dup entry point (``cli.py
     --dedup-embeddings``): the derived-geometry seam exercised end to end.
 
     Unlike the registry query (which pins the sf geometry because its
-    DuckDB oracle is a static string), this path estimates the corpus size
-    from the parquet footers, derives planes-per-band via
-    ``emb_lsh_geometry`` so bucket space grows with n, then runs banding →
-    hot-bucket-capped candidate generation → exact quantized-cosine verify
-    → min-label components → keep-canonical decisions.  Sinks (pairs,
-    decisions, the hot-bucket drop report) land under ``output_dir`` and
-    the drop count is surfaced in the returned metrics (no-silent-caps).
-
-    ``iterations`` bounds min-label propagation (``--cc-iterations``); the
-    run iterates TO FIXPOINT inside that budget and the metrics carry
-    ``cc_rounds`` / ``cc_converged`` / ``cc_residual`` — a dup-chain whose
-    diameter exceeds the budget is DETECTED and surfaced, never silently
-    split (VERDICT r4 item 1).
+    DuckDB oracle is a static string), this path derives planes-per-band
+    from the footer row count via ``emb_lsh_geometry`` so bucket space
+    grows with n, then runs the shared Arrow signature and verify steps
+    of ``dedup_embedding_cosine`` around hot-bucket-capped candidate
+    generation.  Input and tail are the shared ``_dedup_input`` /
+    ``_dedup_sinks``; every count (pairs, the hot-bucket drop report,
+    rejected rows) is surfaced in the returned metrics (no-silent-caps).
     """
     import time
     t0 = time.perf_counter()
-    e = spark.read.parquet(input_path)
-    n_est = estimate_parquet_rows(spark, input_path)
-    ppb = emb_lsh_geometry(n_est)
-    q = e.select("vec_id", F.expr(QUANT_S).alias("qv"))
-    if arrow_sig:
-        # one Arrow pass computes all 4*ppb plane dots as a matmul plus
-        # the self-norm — bit-identical to the SQL folds (integer dots
-        # < 2^53; see emb_bands_nrm_udf) but not interpreter-bound
-        bn = emb_bands_nrm_udf(ppb)(F.col("qv"))
-        b = q.select("vec_id", "qv", bn.getField("bands").alias("bands"),
-                     bn.getField("nrm").alias("nrm"))
-    else:
-        b = (q.withColumn("bands", _bands_array_s("qv", ppb))
-             .withColumn("nrm", F.expr(
-                 "aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-                 "0L, (acc, v) -> acc + v)")))
+    e, rows = _dedup_input(spark, input_path, output_dir,
+                           ("vec_id", "embedding"), EMB_REJECT_S)
+    ppb = emb_lsh_geometry(rows["rows_in"])
+    b = _emb_signature(e.select("vec_id", F.expr(QUANT_S).alias("qv")), ppb)
     b = _persist(b)   # band explode + both verify re-joins
     cand, dropped = emb_band_candidates(b, cap, skew_safe)
-    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                  F.col("nrm").alias("na"))
-    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                  F.col("nrm").alias("nb"))
-    dot_col = (emb_dot_udf()(F.col("qa"), F.col("qb")) if arrow_sig
-               else F.expr(DOT_S))
-    pairs = (cand.join(va, "vec_a").join(vb, "vec_b")
-             .withColumn("dot", dot_col)
-             .withColumn("cos_sim", F.expr(COS))
+    pairs = (_emb_verify(cand, b)
              .filter(F.col("cos_sim") * 100 >= threshold_pct)
              .select("vec_a", "vec_b", "cos_sim"))
     pairs = _persist(pairs)
-    # min-label connected components over the pair graph (shared with
-    # dedup_components), then drop every non-canonical member
-    edges = (pairs.select(F.col("vec_a").alias("src"),
-                          F.col("vec_b").alias("dst"))
-             .unionByName(pairs.select(F.col("vec_b").alias("src"),
-                                       F.col("vec_a").alias("dst"))))
-    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
-    decisions = labels.select(F.col("node").alias("vec_id"),
-                              F.col("label").alias("component"),
-                              (F.col("label") == F.col("node"))
-                              .alias("is_canonical"))
-    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
-    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-    dropped.write.mode("overwrite").parquet(f"{output_dir}/dropped_buckets")
-    out_pairs = spark.read.parquet(f"{output_dir}/pairs")
-    out_dec = spark.read.parquet(f"{output_dir}/decisions")
-    n_dropped = spark.read.parquet(f"{output_dir}/dropped_buckets").count()
     return {
-        "mode": "dedup_embeddings", "n_est": n_est, "ppb": ppb,
-        "bands": N_EMB_BANDS, "bucket_cap": cap,
-        "sig_engine": "arrow" if arrow_sig else "sql",
-        "pairs": out_pairs.count(),
-        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
-        "dropped_hot_buckets": n_dropped, "skew_safe": skew_safe, **cc,
+        "mode": "dedup_embeddings", "ppb": ppb,
+        "bands": N_EMB_BANDS, "bucket_cap": cap, "skew_safe": skew_safe,
+        **rows, **_dedup_sinks(pairs, "vec_id", dropped, "buckets",
+                               output_dir, iterations),
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
@@ -2077,22 +1960,17 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
 def dedup_texts_run(spark, input_path: str, output_dir: str,
                     hamming_max: int = 3, iterations: int = 20,
                     cap: int = EMB_BUCKET_CAP,
-                    skew_safe: bool = False,
-                    arrow_sig: bool = True) -> dict:
+                    skew_safe: bool = False) -> dict:
     """Production simhash near-dup entry point (``cli.py --dedup-texts``):
     the `simhash_band_bits` seam exercised end to end over a (doc_id,
     text) parquet.
 
-    Corpus size is estimated from the parquet footers and the band width
-    DERIVED from it, so band space outgrows the corpus (expected random
-    collisions per band n²/2^bits <= n).  Pipeline: 4-band pigeonhole
-    simhash (`_simhash_bands_from_text_s`) → hot-band-capped candidate
-    equi-join → exact hamming <= ``hamming_max`` verify over the full
-    4·bits signature (sum of per-band xor popcounts — bands partition
-    the signature) → fixpoint min-label components (convergence surfaced
-    in metrics) → keep-canonical decisions.  Sinks land under
-    ``output_dir``; the drop report count is surfaced in the returned
-    metrics (no-silent-caps).
+    The band width is DERIVED from the footer row count, so band space
+    outgrows the corpus (expected random collisions per band n²/2^bits
+    <= n).  Pipeline: ``_dedup_input`` (word-less texts quarantined) →
+    4-band pigeonhole simhash (`simhash_bands_udf`) → hot-band-capped
+    candidate equi-join → exact hamming <= ``hamming_max`` verify over
+    the full 4·bits signature (`_simhash_pairs`) → ``_dedup_sinks``.
 
     ``hamming_max`` is bounded by the banding recall guarantee: 4-band
     pigeonhole only promises a band collision for pairs with hamming
@@ -2107,93 +1985,46 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
             "whose flipped bits straddle all bands would silently never "
             "become candidates.  Use more bands or a lower threshold.")
     t0 = time.perf_counter()
-    n_est = estimate_parquet_rows(spark, input_path)
-    bits = simhash_band_bits(n_est)
-    d = spark.read.parquet(input_path).select("doc_id", "text")
-    # Arrow-batched numpy signature by default: the SQL form's HOF chain
-    # is CodegenFallback (interpreted row-at-a-time, ~19 core-ms/row
-    # measured at 2.4M rows) while the batch replica is bit-identical
-    # and ~10-40x faster — see _simhash_bands_batch.
-    band_col = (simhash_bands_udf(bits)(F.col("text")) if arrow_sig
-                else F.expr(_simhash_bands_from_text_s(bits)))
-    sigs = (d.filter(F.expr(f"size({WORDS_S}) >= 1"))
-            .select("doc_id", band_col.alias("bands")))
+    d, rows = _dedup_input(spark, input_path, output_dir,
+                           ("doc_id", "text"), TEXT_REJECT_S)
+    bits = simhash_band_bits(rows["rows_in"])
+    sigs = d.select("doc_id",
+                    simhash_bands_udf(bits)(F.col("text")).alias("bands"))
     sigs = _persist(sigs)   # band explode + both verify legs
     ex = sigs.select(
         "doc_id", F.posexplode("bands").alias("band_idx", "band_bits"))
     kept, dropped = _occupancy_capped(ex, ["band_idx", "band_bits"],
                                       cap, skew_safe)
-    a, b = kept.alias("a"), kept.alias("b")
-    cand = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_bits") == F.col("b.band_bits"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
-    sa = sigs.select(F.col("doc_id").alias("doc_a"),
-                     F.col("bands").alias("bands_a"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"),
-                     F.col("bands").alias("bands_b"))
-    ham = F.expr("aggregate(zip_with(bands_a, bands_b, "
-                 "(x, y) -> bit_count(x ^ y)), 0, (acc, v) -> acc + v)")
-    pairs = (cand.join(sa, "doc_a").join(sb, "doc_b")
-             .withColumn("hamming", ham.cast("int"))
-             .filter(F.col("hamming") <= hamming_max)
-             .select("doc_a", "doc_b", "hamming"))
-    pairs = _persist(pairs, fresh=False)
-    edges = (pairs.select(F.col("doc_a").alias("src"),
-                          F.col("doc_b").alias("dst"))
-             .unionByName(pairs.select(F.col("doc_b").alias("src"),
-                                       F.col("doc_a").alias("dst"))))
-    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
-    decisions = labels.select(F.col("node").alias("doc_id"),
-                              F.col("label").alias("component"),
-                              (F.col("label") == F.col("node"))
-                              .alias("is_canonical"))
-    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
-    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-    dropped.write.mode("overwrite").parquet(f"{output_dir}/dropped_bands")
-    out_pairs = spark.read.parquet(f"{output_dir}/pairs")
-    out_dec = spark.read.parquet(f"{output_dir}/decisions")
-    n_dropped = spark.read.parquet(f"{output_dir}/dropped_bands").count()
+    pairs = _persist(_simhash_pairs(sigs, kept, hamming_max), fresh=False)
     return {
-        "mode": "dedup_texts", "n_est": n_est, "band_bits": bits,
+        "mode": "dedup_texts", "band_bits": bits,
         "signature_bits": 4 * bits, "hamming_max": hamming_max,
-        "sig_engine": "arrow" if arrow_sig else "sql",
-        "band_cap": cap,
-        "pairs": out_pairs.count(),
-        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
-        "dropped_hot_bands": n_dropped, "skew_safe": skew_safe, **cc,
+        "band_cap": cap, "skew_safe": skew_safe,
+        **rows, **_dedup_sinks(pairs, "doc_id", dropped, "bands",
+                               output_dir, iterations),
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 
 
 def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
                         threshold: float = 0.98,
-                        skew_safe: bool = False,
-                        arrow_dot: bool = False):
+                        skew_safe: bool = False):
     """Intra-cell >=``threshold`` cosine pairing over assigned rows ``m`` =
-    (cell, vec_id, qv, nrm), hot-cell capped.  A dense embedding mode —
+    (cell, vec_id, qv, nrm), hot-cell capped, verified with the exact
+    Arrow dot (`emb_dot_udf`).  A dense embedding mode —
     boilerplate pages are common in web data — can land millions of
     vectors in ONE k-means cell, going quadratic in the self-join below
     no matter what K is; cells over the cap are excluded from pairing and
     RETURNED as (cell, bsz) (the no-silent-caps rule: callers surface the
-    report).  Same guard as the sibling LSH path's _bucket_capped.
-
-    ``arrow_dot``: verify with the Arrow-batched exact int64 dot
-    (`emb_dot_udf` — bit-identical, see there) instead of the
-    interpreted DOT_S fold; the production path sets it, the registry
-    query keeps the SQL form so its static plan/oracle stay pinned."""
+    report).  Same guard as the sibling LSH path's _bucket_capped."""
     kept, dropped = _occupancy_capped(m, ["cell"], cap, skew_safe)
     a = kept.select("cell", F.col("vec_id").alias("vec_a"),
                     F.col("qv").alias("qa"), F.col("nrm").alias("na"))
     y = kept.select("cell", F.col("vec_id").alias("vec_b"),
                     F.col("qv").alias("qb"), F.col("nrm").alias("nb"))
-    dot_col = (emb_dot_udf()(F.col("qa"), F.col("qb")) if arrow_dot
-               else F.expr(DOT_S))
     pairs = (a.join(y, "cell")
              .filter(F.col("vec_a") < F.col("vec_b"))
-             .withColumn("dot", dot_col)
+             .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
              .withColumn("cos_sim", F.expr(COS))
              .filter(F.col("cos_sim") >= threshold))
     return pairs, dropped
@@ -2203,8 +2034,7 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
                        threshold_pct: int = 98, lloyd_iters: int = 1,
                        iterations: int = 20, target_cell_size: int = 1024,
                        cap: int = EMB_BUCKET_CAP,
-                       skew_safe: bool = False,
-                       arrow_sig: bool = True) -> dict:
+                       skew_safe: bool = False) -> dict:
     """Production SemDeDup entry point (``cli.py --dedup-semantic``,
     VERDICT r4 item 2): the ``kmeans_k`` derivation seam exercised end to
     end over a (vec_id, embedding array<float/double>) parquet.
@@ -2212,89 +2042,43 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
     The registry's ``dedup_semantic`` pins K at the sf default because
     its DuckDB oracle is a static string; at real corpus sizes K=8 puts
     every cell over the hot-cell cap and the guard would drop the whole
-    corpus.  Here K is DERIVED from the parquet-footer row estimate
-    (K ~ n / target_cell_size, broadcast-capped — see ``kmeans_k``), so
-    expected cell occupancy stays ~target_cell_size regardless of n.
+    corpus.  Here K is DERIVED from the footer row count (K ~ n /
+    target_cell_size, broadcast-capped — see ``kmeans_k``), so expected
+    cell occupancy stays ~target_cell_size regardless of n.
 
-    Pipeline: footer n → derived K → deterministic seeds (the K lowest
-    vec_ids) → ``lloyd_iters`` Lloyd rounds (broadcast crossJoin +
-    map-side max_by assignment carrying the vector, exact int64 per-dim
-    avg means) → final assignment against the FINAL centroids →
-    hot-cell-capped intra-cell exact-cosine pairing → fixpoint min-label
-    components (convergence surfaced) → keep-canonical decisions.  Sinks
-    (pairs, decisions, dropped_cells) land under ``output_dir``; derived
-    K, expected occupancy, the drop count and the component convergence
-    metrics are all returned (no-silent-caps)."""
+    Pipeline: ``_dedup_input`` → derived K → deterministic seeds (the K
+    lowest vec_ids) → ``lloyd_iters`` Lloyd rounds (`_lloyd` with the
+    Arrow argmax) → final assignment against the FINAL centroids →
+    hot-cell-capped intra-cell exact-cosine pairing → ``_dedup_sinks``.
+    Derived K, expected occupancy, the drop and rejected counts and the
+    component convergence metrics are all returned (no-silent-caps)."""
     import time
     t0 = time.perf_counter()
-    n_est = estimate_parquet_rows(spark, input_path)
-    k = kmeans_k(n_est, target_cell_size)
-    data = (spark.read.parquet(input_path)
-            .select("vec_id", F.expr(QUANT_S).alias("qv")))
-    data = _persist(data)   # read per Lloyd round + final assignment
+    e, rows = _dedup_input(spark, input_path, output_dir,
+                           ("vec_id", "embedding"), EMB_REJECT_S)
+    k = kmeans_k(rows["rows_in"], target_cell_size)
+    data = _persist(e.select("vec_id", F.expr(QUANT_S).alias("qv")))
     # deterministic seeds: the K lowest vec_ids (TakeOrdered — no full
     # sort); cell id = the seed's vec_id, as in the registry query
     seeds = (data.orderBy("vec_id").limit(k)
              .select(F.col("vec_id").alias("cell"),
                      F.expr("transform(qv, x -> CAST(x AS DOUBLE))")
                      .alias("cv")))
-    if arrow_sig:
-        # Arrow argmax covers any derived K under the broadcast budget
-        # in one branch (the literal/crossJoin split below only matters
-        # for the SQL engines) — see kmeans_assign_udf for the parity
-        # contract
-        _cents, assigned = _lloyd_arrow(spark, data, seeds, lloyd_iters)
-    elif k <= LIT_CENTS_MAX:
-        # small derived K: driver-collected literal centroids, zero-
-        # shuffle assignment per round (see _lloyd_lit)
-        _cents, assigned = _lloyd_lit(spark, data, seeds, lloyd_iters)
-    else:
-        # large derived K: broadcast-crossJoin assignment (map-side
-        # max_by carrying the vector, one n-row exchange per round) —
-        # a K x 64-double literal plan stops being worth building here
-        cents = seeds
-        for _ in range(lloyd_iters):
-            joined = _assign_nearest(data, cents, carry_vec=True)
-            avgs = joined.groupBy("cell").agg(
-                *[F.avg(F.col("qv")[i]).alias(f"c{i}")
-                  for i in range(EMB_DIM)])
-            cents = avgs.select(
-                "cell",
-                F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv"))
-        assigned = _assign_nearest(data, cents, materialize=False,
-                                   carry_vec=True)
-    nrm_col = (emb_dot_udf()(F.col("qv"), F.col("qv")) if arrow_sig
-               else F.expr("aggregate(zip_with(qv, qv, (x, y) -> x * y), "
-                           "0L, (acc, v) -> acc + v)"))
-    m = assigned.withColumn("nrm", nrm_col)
+    _cents, assigned = _lloyd(
+        spark, data, seeds, lloyd_iters,
+        assign=lambda cents: kmeans_assign_udf(cents)(F.col("qv")))
+    m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
     pairs, dropped = semantic_cell_pairs(m, cap, threshold_pct / 100.0,
-                                         skew_safe, arrow_dot=arrow_sig)
+                                         skew_safe)
     pairs = _persist(pairs.select("vec_a", "vec_b", "cos_sim"), fresh=False)
-    edges = (pairs.select(F.col("vec_a").alias("src"),
-                          F.col("vec_b").alias("dst"))
-             .unionByName(pairs.select(F.col("vec_b").alias("src"),
-                                       F.col("vec_a").alias("dst"))))
-    labels, cc = min_label_components_fixpoint(edges, max_rounds=iterations)
-    decisions = labels.select(F.col("node").alias("vec_id"),
-                              F.col("label").alias("component"),
-                              (F.col("label") == F.col("node"))
-                              .alias("is_canonical"))
-    pairs.write.mode("overwrite").parquet(f"{output_dir}/pairs")
-    decisions.write.mode("overwrite").parquet(f"{output_dir}/decisions")
-    dropped.write.mode("overwrite").parquet(f"{output_dir}/dropped_cells")
-    out_pairs = spark.read.parquet(f"{output_dir}/pairs")
-    out_dec = spark.read.parquet(f"{output_dir}/decisions")
-    n_dropped = spark.read.parquet(f"{output_dir}/dropped_cells").count()
     return {
-        "mode": "dedup_semantic", "n_est": n_est, "k": k,
+        "mode": "dedup_semantic", "k": k,
         "target_cell_size": target_cell_size,
-        "expected_occupancy": (round(n_est / k, 1) if k else None),
+        "expected_occupancy": (round(rows["rows_in"] / k, 1) if k else None),
         "lloyd_iters": lloyd_iters, "cell_cap": cap,
-        "threshold_pct": threshold_pct,
-        "sig_engine": "arrow" if arrow_sig else "sql",
-        "pairs": out_pairs.count(),
-        "non_canonical": out_dec.filter(~F.col("is_canonical")).count(),
-        "dropped_hot_cells": n_dropped, "skew_safe": skew_safe, **cc,
+        "threshold_pct": threshold_pct, "skew_safe": skew_safe,
+        **rows, **_dedup_sinks(pairs, "vec_id", dropped, "cells",
+                               output_dir, iterations),
         "wall_s": round(time.perf_counter() - t0, 3),
     }
 

@@ -1,0 +1,91 @@
+"""Spark SQL reference forms of the near-dup signatures.
+
+The package computes these signatures with Arrow-batched numpy engines
+(``corpus.simhash_bands_udf``, ``corpus.emb_bands_nrm_udf``).  The SQL
+higher-order-function forms below compute the same values row at a time
+inside Spark; the parity tests compare the engines against them, and the
+pure-Python replicas in tests/test_sig_parity.py check them in turn.  The
+DuckDB dialect of each form stays in the package as the registry oracles.
+"""
+
+from pyspark.sql import functions as F
+
+from pdf_extractor_spark.corpus import (N_EMB_BANDS, WORDS_S, _plane_signs,
+                                        let1)
+
+
+def _simhash_nib_from_text_s(nbits: int = 60) -> str:
+    """Spark dialect of the wide simhash, single aggregate pass (see
+    corpus._simhash_from_text_s for why one pass matters).  Per word hash
+    the ceil(nbits/4) hex nibbles are decoded ONCE (let-bound), then the
+    nbits per-bit votes are cheap shifts — instr/substr per BIT would
+    quadruple the string work in the inner loop."""
+    ndigits = (nbits + 3) // 4
+    nibs = (f"transform(sequence(1, {ndigits}), d -> "
+            "instr('0123456789abcdef', substr(h, d, 1)) - 1)")
+    bitvotes = (f"transform(sequence(1, {nbits}), j -> "
+                "CASE WHEN shiftright(nb[(j - 1) div 4], (j - 1) % 4) % 2 = 1 "
+                "THEN 1 ELSE -1 END)")
+    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
+             f"(acc, h) -> zip_with(acc, {let1(nibs, 'nb', bitvotes)}, "
+             "(x, y) -> x + y))")
+    bits = (f"cast(aggregate(sequence(0, {nbits - 1}), cast(0 as bigint), "
+            "(a, j) -> a + (CASE WHEN vt[j] > 0 "
+            "THEN shiftleft(cast(1 as bigint), j) ELSE cast(0 as bigint) END)) "
+            "as bigint)")
+    return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
+                let1(votes, "vt", bits))
+
+
+def _simhash_bands_from_text_s(bits: int) -> str:
+    """SQL form of ``corpus._simhash_bands_batch``: an array of 4
+    pigeonhole bands of ``bits`` bits each over a 4·bits-wide signature,
+    in one aggregate pass.  Band k holds signature bits [k·bits,
+    (k+1)·bits) under the same vote rule as `_simhash_nib_from_text_s`
+    (bit j votes on bit j%4 of word-digest hex digit j//4), so at bits=15
+    the 4 values equal the 60-bit signature's band split exactly.  Beyond
+    md5's 32 hex digits the word digest doubles (md5(w) ++ md5('#'+w)),
+    supporting bits <= 63 (bigint band)."""
+    if not 1 <= bits <= 63:
+        raise ValueError(f"band width {bits} outside [1, 63]")
+    nbits = 4 * bits
+    src = ("md5(w)" if bits <= 32
+           else "concat(md5(w), md5(concat('#', w)))")
+    nibs = (f"transform(sequence(1, {bits}), d -> "
+            "instr('0123456789abcdef', substr(h, d, 1)) - 1)")
+    bitvotes = (f"transform(sequence(1, {nbits}), j -> "
+                "CASE WHEN shiftright(nb[(j - 1) div 4], (j - 1) % 4) % 2 = 1 "
+                "THEN 1 ELSE -1 END)")
+    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
+             f"(acc, h) -> zip_with(acc, {let1(nibs, 'nb', bitvotes)}, "
+             "(x, y) -> x + y))")
+    band = (f"transform(sequence(0, 3), k -> "
+            f"cast(aggregate(sequence(k * {bits}, k * {bits} + {bits - 1}), "
+            "cast(0 as bigint), (a, j) -> a + (CASE WHEN vt[j] > 0 "
+            f"THEN shiftleft(cast(1 as bigint), j - k * {bits}) "
+            "ELSE cast(0 as bigint) END)) as bigint))")
+    return let1(f"transform({WORDS_S}, w -> {src})", "hs",
+                let1(votes, "vt", band))
+
+
+def _plane_dot(vec: str, h: int) -> str:
+    """Spark signed dot against the literal sign vector of plane ``h``
+    (exact int64 sum).  The signs ride as a small array literal +
+    zip_with — NOT a 64-term ±element chain, which balloons the
+    expression tree past what Catalyst will codegen."""
+    signs = ", ".join(str(s) for s in _plane_signs(h))
+    return (f"aggregate(zip_with({vec}, array({signs}), "
+            f"(x, s) -> x * CAST(s AS BIGINT)), 0L, (acc, v) -> acc + v)")
+
+
+def _band_bucket(vec: str, band: int, ppb: int) -> str:
+    """Bucket id of `band`: ppb sign bits of planes [band*ppb, band*ppb+ppb)."""
+    bits = [f"(CASE WHEN {_plane_dot(vec, band * ppb + i)} > 0 "
+            f"THEN {1 << i} ELSE 0 END)" for i in range(ppb)]
+    return "CAST((" + " + ".join(bits) + ") AS INT)"
+
+
+def _bands_array_s(vec: str, ppb: int):
+    """SQL form of the ``bands`` field of ``corpus.emb_bands_nrm_udf``."""
+    return F.array(*[F.expr(_band_bucket(vec, k, ppb))
+                     for k in range(N_EMB_BANDS)])

@@ -1,10 +1,10 @@
-"""Fixpoint component labeling (VERDICT r4 item 1): the production dedup
-CLIs must never silently split a dup-chain whose diameter exceeds the
-propagation budget — they iterate to fixpoint and SURFACE convergence.
+"""Fixpoint component labeling (VERDICT r4 item 1): the dedup CLIs and
+the registry must never silently split a dup-chain whose diameter exceeds
+the propagation budget — they iterate to fixpoint and SURFACE convergence.
 
-The adversarial fixture is a 12-node chain (diameter 11 >> the old fixed
-3 hops): the legacy unrolled form provably splits it; the fixpoint form
-labels it exactly and reports converged."""
+The adversarial fixture is a 12-node chain (diameter 11): the fixpoint
+form labels it exactly and reports converged, and a budget below the
+diameter is reported as not converged."""
 
 import pyspark.sql.functions as F
 import pytest
@@ -20,15 +20,6 @@ def _chain_edges(spark, n=CHAIN_N, stride=10):
         "src long, dst long")
     return half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-
-
-def test_fixed_hops_split_long_chain(spark):
-    """The r4 bug, demonstrated: 3 unrolled hops leave a diameter-11
-    chain with >1 distinct label — wrong components, no error."""
-    from pdf_extractor_spark.corpus import _min_label_components
-    labels = _min_label_components(_chain_edges(spark), iterations=3)
-    n_components = labels.select("label").distinct().count()
-    assert n_components > 1
 
 
 def test_fixpoint_labels_long_chain_exactly(spark):

@@ -4,8 +4,13 @@ drives ``emb_lsh_geometry`` end to end, and the dup decisions match a
 brute-force all-pairs cosine oracle on a small slice."""
 
 import json
+import os
+import random
+import subprocess
+import sys
 
 import pyspark.sql.functions as F
+import pytest
 
 from pdf_extractor_spark.corpus import (
     COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry, estimate_parquet_rows)
@@ -123,17 +128,17 @@ class TestDedupTexts:
     brute-force hamming oracle."""
 
     def test_band_array_matches_registry_signature_at_15_bits(self, spark):
-        """At bits=15 the 4-band array must equal the 60-bit registry
-        signature's band split bit for bit (same vote rule)."""
+        """At bits=15 the 4-band Arrow engine the registry runs must equal
+        the 60-bit SQL reference signature's band split bit for bit."""
         from pdf_extractor_spark.corpus import (
-            WORDS_S, _neardup_corpus_s, _simhash_bands_from_text_s,
-            _simhash_nib_from_text_s)
+            WORDS_S, _neardup_corpus_s, simhash_bands_udf)
+        from sig_reference import _simhash_nib_from_text_s
         corpus = (_neardup_corpus_s(spark, SF_DIR)
                   .filter(F.expr(f"size({WORDS_S}) >= 1")))
         rows = (corpus.select(
             "doc_id",
             F.expr(_simhash_nib_from_text_s(60)).alias("sig60"),
-            F.expr(_simhash_bands_from_text_s(15)).alias("bands"))
+            simhash_bands_udf(15)(F.col("text")).alias("bands"))
             .collect())
         assert rows
         for r in rows:
@@ -154,13 +159,13 @@ class TestDedupTexts:
         """bits > 32 switches to the doubled word digest (signature wider
         than one md5); planted exact dups must still collide in every
         band and verify at hamming 0."""
-        from pdf_extractor_spark.corpus import _simhash_bands_from_text_s
+        from pdf_extractor_spark.corpus import simhash_bands_udf
         sigs = (spark.createDataFrame(
             [(1, "alpha beta gamma delta"), (2, "alpha beta gamma delta"),
              (3, "wholly different words here")],
             "doc_id long, text string")
             .select("doc_id",
-                    F.expr(_simhash_bands_from_text_s(40)).alias("bands"))
+                    simhash_bands_udf(40)(F.col("text")).alias("bands"))
             .collect())
         by_id = {r.doc_id: list(r.bands) for r in sigs}
         assert by_id[1] == by_id[2]
@@ -169,8 +174,8 @@ class TestDedupTexts:
 
     def test_cli_decisions_match_bruteforce(self, spark, tmp_path, capsys):
         from pdf_extractor_spark.corpus import (WORDS_S, _neardup_corpus_s,
-                                                _simhash_bands_from_text_s,
                                                 simhash_band_bits)
+        from sig_reference import _simhash_bands_from_text_s
         inp = str(tmp_path / "txt_in")
         out = str(tmp_path / "txt_out")
         _neardup_corpus_s(spark, SF_DIR).write.parquet(inp)
@@ -180,8 +185,14 @@ class TestDedupTexts:
         assert rc == 0
         metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert metrics["mode"] == "dedup_texts"
-        assert metrics["band_bits"] == simhash_band_bits(metrics["n_est"])
+        assert metrics["band_bits"] == simhash_band_bits(metrics["rows_in"])
         assert metrics["dropped_hot_bands"] == 0
+
+        # every input row is kept or quarantined as word-less
+        wordless = (spark.read.parquet(inp)
+                    .filter(F.expr(f"NOT size({WORDS_S}) >= 1")).count())
+        assert metrics["rejected"] == wordless
+        assert metrics["rows_in"] == metrics["kept"] + metrics["rejected"]
 
         # brute-force oracle: all-pairs hamming over the SAME signature
         sigs = (spark.read.parquet(inp)
@@ -262,7 +273,7 @@ class TestDedupSemantic:
         assert rc == 0
         metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
         assert metrics["mode"] == "dedup_semantic"
-        assert metrics["k"] == kmeans_k(metrics["n_est"], 64)
+        assert metrics["k"] == kmeans_k(metrics["rows_in"], 64)
         assert metrics["k"] > 8                  # derived, not pinned
         assert metrics["dropped_hot_cells"] == 0
         assert metrics["cc_converged"] is True
@@ -295,3 +306,128 @@ class TestDedupSemantic:
         dec = spark.read.parquet(f"{out}/decisions").collect()
         assert {r.vec_id for r in dec if not r.is_canonical} == want_noncanon
         assert metrics["non_canonical"] == len(want_noncanon)
+
+
+def _random_vec(rng):
+    return [rng.uniform(-1.0, 1.0) for _ in range(64)]
+
+
+class TestMalformedRows:
+    """Malformed input rows are quarantined under --output/rejected with a
+    reason and counted — never a crash, never silently dropped."""
+
+    # vec_ids 10..19 are exact copies of 0..9 (random 64-dim vectors
+    # otherwise sit far below cosine 0.98); 100.. are malformed
+    PLANTED = {(i, i + 10) for i in range(10)}
+    BAD_EMB = [(100, None), (101, None), (102, [0.1] * 63),
+               (103, [0.1] * 65), (104, [])]
+
+    @pytest.mark.parametrize("mode, dropped_key", [
+        ("--dedup-embeddings", "dropped_hot_buckets"),
+        ("--dedup-semantic", "dropped_hot_cells")])
+    def test_bad_embeddings_rejected_with_reason(self, spark, tmp_path,
+                                                 capsys, mode, dropped_key):
+        rng = random.Random(7)
+        vecs = [_random_vec(rng) for _ in range(10)]
+        rows = [(i, vecs[i % 10]) for i in range(20)] + self.BAD_EMB
+        inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+        (spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+         .write.parquet(inp))
+
+        from pdf_extractor_spark.cli import main
+        assert main([mode, inp, "--output", out]) == 0
+        metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert metrics["rows_in"] == 25
+        assert metrics["kept"] == 20
+        assert metrics["rejected"] == 5
+        assert metrics["rejected_by_reason"] == {"null_embedding": 2,
+                                                 "bad_dim": 3}
+        assert metrics[dropped_key] == 0
+        rejected = {(r.vec_id, r.reason)
+                    for r in spark.read.parquet(f"{out}/rejected").collect()}
+        assert rejected == {(100, "null_embedding"), (101, "null_embedding"),
+                            (102, "bad_dim"), (103, "bad_dim"),
+                            (104, "bad_dim")}
+        got = {(r.vec_a, r.vec_b)
+               for r in spark.read.parquet(f"{out}/pairs").collect()}
+        assert got == self.PLANTED
+        assert metrics["pairs"] == metrics["non_canonical"] == 10
+
+    def test_wordless_texts_rejected_and_stale_quarantine_removed(
+            self, spark, tmp_path, capsys):
+        rng = random.Random(11)
+        texts = [" ".join(f"w{rng.randrange(1000)}" for _ in range(20))
+                 for _ in range(10)]
+        good = [(i, texts[i % 10]) for i in range(15)]   # 10..14 copy 0..4
+        bad = [(100, None), (101, ""), (102, "   ")]
+        inp, clean = str(tmp_path / "in"), str(tmp_path / "clean")
+        out = str(tmp_path / "out")
+        spark.createDataFrame(good + bad, "doc_id long, text string") \
+            .write.parquet(inp)
+        spark.createDataFrame(good, "doc_id long, text string") \
+            .write.parquet(clean)
+
+        from pdf_extractor_spark.cli import main
+        assert main(["--dedup-texts", inp, "--output", out]) == 0
+        metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert (metrics["rows_in"], metrics["kept"], metrics["rejected"]) \
+            == (18, 15, 3)
+        assert metrics["rejected_by_reason"] == {"no_words": 3}
+        rejected = spark.read.parquet(f"{out}/rejected").collect()
+        assert {(r.doc_id, r.reason) for r in rejected} == {
+            (100, "no_words"), (101, "no_words"), (102, "no_words")}
+        got = {(r.doc_a, r.doc_b)
+               for r in spark.read.parquet(f"{out}/pairs").collect()}
+        assert got == {(i, i + 10) for i in range(5)}
+
+        # a clean rerun into the same directory leaves no stale quarantine
+        assert main(["--dedup-texts", clean, "--output", out]) == 0
+        metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert metrics["rejected"] == 0
+        assert metrics["rows_in"] == metrics["kept"] == 15
+        assert not os.path.exists(f"{out}/rejected")
+
+
+def test_hamming_max_beyond_pigeonhole_is_usage_error(capsys):
+    """--hamming-max above the 4-band pigeonhole bound is rejected by the
+    argument parser (exit 2) before any session starts."""
+    from pdf_extractor_spark.cli import main
+    with pytest.raises(SystemExit) as exc:
+        main(["--dedup-texts", "unused.parquet", "--output", "unused",
+              "--hamming-max", "4"])
+    assert exc.value.code == 2
+    assert "--hamming-max" in capsys.readouterr().err
+
+
+_RESTART_SCRIPT = """
+import random
+import sys
+from pdf_extractor_spark.corpus import dedup_embeddings_run
+from pdf_extractor_spark.session import get_spark
+
+inp, out = sys.argv[1], sys.argv[2]
+rng = random.Random(3)
+vecs = [[rng.uniform(-1.0, 1.0) for _ in range(64)] for _ in range(5)]
+spark = get_spark("restart", master="local[2]", shuffle_partitions=2)
+spark.createDataFrame(   # 5 groups of 4 identical vectors: 30 pairs
+    [(i, vecs[i % 5]) for i in range(20)],
+    "vec_id long, embedding array<double>").write.parquet(inp)
+first = dedup_embeddings_run(spark, inp, out + "/first")
+spark.stop()
+spark = get_spark("restart", master="local[2]", shuffle_partitions=2)
+second = dedup_embeddings_run(spark, inp, out + "/second")
+spark.stop()
+assert first["pairs"] == second["pairs"] == 30, (first, second)
+"""
+
+
+def test_rerun_after_session_restart(tmp_path):
+    """Frames cached by a run on a session that was since stopped must
+    not break the next run on a new session in the same process."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, SPARK_GRAFT_DRIVER_MEM="1g")
+    r = subprocess.run(
+        [sys.executable, "-c", _RESTART_SCRIPT, str(tmp_path / "in"),
+         str(tmp_path / "out")],
+        cwd=repo, env=env, capture_output=True, text=True, timeout=600)
+    assert r.returncode == 0, r.stderr[-4000:]

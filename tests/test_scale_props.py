@@ -82,7 +82,7 @@ class TestSimhashBlocking:
         """Every engineered original/truncated pair within 60-bit hamming
         distance 3 must be found by the banded variant (4 disjoint 15-bit
         bands + hamming 3 => at least one band matches exactly)."""
-        from pdf_extractor_spark.corpus import _simhash_nib_from_text_s
+        from sig_reference import _simhash_nib_from_text_s
         sigs = (
             _neardup_corpus_s(spark, SF_DIR)
             .filter(F.expr(f"size({WORDS_S}) >= 1"))
@@ -104,8 +104,8 @@ class TestSimhashBlocking:
 
 class TestComponents:
     def test_fixpoint_and_chains(self, spark):
-        """3 min-label iterations must reach the fixpoint on the fixture
-        (chains have diameter 2), and 3-node chains share one component."""
+        """Labels must be at the fixpoint on the fixture, and the 4-node
+        chains share one component."""
         rows = REGISTRY["dedup_components"].spark(spark, SF_DIR).collect()
         label = {r.doc_id: r.component for r in rows}
         # fixpoint: one more propagation step changes nothing
@@ -157,8 +157,9 @@ class TestLshGeometry:
         the cell must be excluded (kept occupancy <= cap), its exclusion
         REPORTED, and unrelated vectors' candidates unaffected."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _bands_array_s, _bucket_capped, emb_band_candidates,
-            PPB_DEDUP, N_EMB_BANDS)
+            QUANT_S, _bucket_capped, emb_band_candidates, PPB_DEDUP,
+            N_EMB_BANDS)
+        from sig_reference import _bands_array_s
         hot = [(i, [0.5] * 64) for i in range(40)]
         cold = [(100 + i, [0.01 * (i + j) for j in range(64)])
                 for i in range(4)]
@@ -229,7 +230,8 @@ class TestLshGeometry:
         """At the default cap the sf fixture drops nothing — the guard is
         provably inert where the DuckDB oracle pins exact pairs."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _bands_array_s, _bucket_capped, PPB_DEDUP)
+            QUANT_S, _bucket_capped, PPB_DEDUP)
+        from sig_reference import _bands_array_s
         e = (spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
              .select("vec_id", F.expr(QUANT_S).alias("qv"))
              .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))

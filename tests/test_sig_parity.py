@@ -1,12 +1,14 @@
-"""Fuzzed cross-engine parity of the let-bound signature expressions.
+"""Fuzzed cross-engine parity of the signature engines.
 
-The round-2 perf rewrite moved minhash/simhash/shingle computation into
-single let-bound SQL expressions (corpus.let1).  These tests pin their
-semantics against independent pure-python replicas over adversarial texts
-(empty, repeated separators, unicode, 1-2 word docs, duplicate words) —
-the oracle gate only exercises the fixture corpus, so an edge-case
-divergence (e.g. a boundary slip in the lane slicing or vote parity)
-would otherwise surface only at deploy.
+The minhash/shingle signatures are single let-bound SQL expressions
+(corpus.let1); the simhash and sign-LSH signatures run as Arrow-batched
+numpy engines, with their Spark SQL forms kept as references in
+tests/sig_reference.py.  These tests pin each against independent
+pure-python replicas over adversarial texts (empty, repeated separators,
+unicode, 1-2 word docs, duplicate words), and each Arrow engine against
+its SQL reference inside Spark — the oracle gate only exercises the
+fixture corpus, so an edge-case divergence (e.g. a boundary slip in the
+lane slicing or vote parity) would otherwise surface only at deploy.
 """
 
 import hashlib
@@ -17,8 +19,9 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from pdf_extractor_spark.corpus import (MINHASH_SIG_S, SHINGLES_FROM_TEXT_S,
-                                        _simhash_nib_from_text_s)
+from pdf_extractor_spark.corpus import MINHASH_SIG_S, SHINGLES_FROM_TEXT_S
+from sig_reference import (_bands_array_s, _simhash_bands_from_text_s,
+                           _simhash_nib_from_text_s)
 
 # words are split on a single space and empties dropped; include unicode,
 # punctuation and runs of spaces to stress the boundary conditions
@@ -134,8 +137,8 @@ def spark_session_holder(spark):
 # ---- Arrow-batch production signature (_simhash_bands_batch) parity ----
 
 def _py_simhash_bands(text, bits):
-    """Independent replica of the SQL band rule (`_simhash_bands_from_
-    text_s`): bit j of the 4*bits signature votes on bit j%4 of hex
+    """Independent replica of the band rule (`_simhash_bands_batch` and
+    its SQL reference): bit j of the 4*bits signature votes on bit j%4 of hex
     digit j//4 of the (possibly doubled) word digest; band k packs bits
     [k*bits, (k+1)*bits)."""
     ws = _words(text)
@@ -169,10 +172,9 @@ def test_simhash_bands_batch_matches_replica(fuzz_texts, bits):
 
 @pytest.mark.parametrize("bits", [15, 21, 40])
 def test_simhash_bands_udf_matches_sql_expr(spark, fuzz_texts, bits):
-    """The production Arrow path vs the SQL/oracle reference, in Spark,
-    including unicode (exercises UTF-8 digest parity end to end)."""
-    from pdf_extractor_spark.corpus import (_simhash_bands_from_text_s,
-                                            simhash_bands_udf)
+    """The Arrow engine vs the SQL reference, in Spark, including
+    unicode (exercises UTF-8 digest parity end to end)."""
+    from pdf_extractor_spark.corpus import simhash_bands_udf
     texts = [t for t in fuzz_texts if _words(t)]
     rows = _run_texts(
         spark, texts,
@@ -197,14 +199,13 @@ def test_simhash_bands_batch_fuzz(texts):
 
 @pytest.mark.parametrize("ppb", [8, 12])
 def test_emb_bands_nrm_udf_matches_sql_expr(spark, ppb):
-    """Production Arrow banding vs the SQL/oracle reference on quantized
+    """Arrow banding vs the SQL reference on quantized
     vectors spanning negatives, zeros, and the planted-dup case.  The
     plane dots are integer-valued < 2^53, so any float64 summation order
     is exact — the two paths must agree bit for bit."""
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.corpus import (EMB_DIM, _bands_array_s,
-                                            emb_bands_nrm_udf)
+    from pdf_extractor_spark.corpus import EMB_DIM, emb_bands_nrm_udf
     df = (spark.range(64).select(
         F.col("id").alias("vec_id"),
         F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
