@@ -274,7 +274,7 @@ def main(argv: list[str] | None = None) -> int:
         spark, args.input, args.output,
         num_partitions=args.partitions, resume=not args.no_resume,
     )
-    metrics["docs_per_sec"] = round(metrics["docs_total_committed"] / metrics["wall_s"], 2)
+    metrics["docs_per_sec"] = round(metrics["docs_processed"] / metrics["wall_s"], 2)
     print(json.dumps(metrics))
     return 0
 

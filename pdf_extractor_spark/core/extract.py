@@ -1,7 +1,7 @@
 """Per-document extraction driver: input spans → ordered output spans.
 
 This is the single per-document code path shared by the pure-Python
-oracle and the Spark ``mapInPandas`` operator, guaranteeing bit-exact
+oracle and the Spark ``mapInArrow`` operator, guaranteeing bit-exact
 parity (SURVEY.md §7.4).
 
 Input (FIXTURES.md §1): ``spans = [{kind, text, media_ref, offset}, ...]``

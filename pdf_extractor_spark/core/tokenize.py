@@ -6,7 +6,7 @@ The corpus grammar (FIXTURES.md §2) serializes what PyMuPDF's
 record per text line carrying page, bbox y0/y1, font size (1 decimal,
 per extractor.py:52), bold flag, font name, and text.
 
-These are pure functions so the oracle and the Spark ``mapInPandas``
+These are pure functions so the oracle and the Spark ``mapInArrow``
 operator share them verbatim.
 """
 

@@ -39,6 +39,8 @@ provably *finds* those engineered near-dups and the oracle agrees.
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import SparkSession, Window as W
 from pyspark.sql import functions as F
 
@@ -2447,6 +2449,11 @@ def multimodal_meta_features(spark, sf_dir):
     return mm.join(mf, "doc_id")
 
 
+# the persisted extraction golden ships with the tests, beside the package
+EXTRACT_GOLDEN = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+                              "tests", "golden", "extract_spans.parquet")
+
+
 @register(
     "extract_pipeline",
     # The per-doc heuristic chain is not SQL-expressible, so the DuckDB
@@ -2456,9 +2463,9 @@ def multimodal_meta_features(spark, sf_dir):
     # that pair and doc_ids collide across scales with different texts.
     # Exact north-rule parity is additionally enforced by
     # tests/test_extract_spark.py against the same pure-Python oracle.
-    sql="""
+    sql=f"""
     SELECT g.doc_id, g.kind, g.text, g.media_ref, g.offset
-    FROM read_parquet('/root/repo/tests/golden/extract_spans.parquet') g
+    FROM read_parquet('{EXTRACT_GOLDEN}') g
     JOIN documents d
       ON d.doc_id = g.src_doc_id
      AND md5(COALESCE(d.text, '')) = g.text_md5

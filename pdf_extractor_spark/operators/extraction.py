@@ -4,13 +4,13 @@ Logical plan::
 
     read documents (doc_id, spans)
       -> deterministic partition assignment (hash + jumbo isolation)   [1 shuffle]
-      -> mapInPandas(extract_batch)                                    [pipelined]
+      -> mapInArrow(_extract_batches_arrow)                            [pipelined]
       -> ordered output spans + per-doc metrics
 
 Design notes for 10^12-document scale (BASELINE.json north_rule):
 
 * **One shuffle.** Everything per-document happens inside a single
-  ``mapInPandas`` stage; the only exchange is the explicit repartition
+  ``mapInArrow`` stage; the only exchange is the explicit repartition
   that balances documents across tasks.
 * **Skew salting.** ``part_id`` is a pure function of ``doc_id`` (so the
   assignment is reproducible across runs — required for checkpoint
@@ -32,9 +32,7 @@ Design notes for 10^12-document scale (BASELINE.json north_rule):
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -83,26 +81,6 @@ def with_partition_id(df: DataFrame, num_partitions: int) -> DataFrame:
     )
 
 
-def _extract_batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """pandas-batch variant (kept for the streaming path and as the readable
-    reference implementation; the batch operator uses the Arrow variant)."""
-    for pdf in it:
-        rows = []
-        for doc_id, part_id, spans in zip(pdf["doc_id"], pdf["part_id"], pdf["spans"]):
-            t0 = time.perf_counter_ns()
-            span_list = [
-                {"kind": s["kind"], "text": s["text"],
-                 "media_ref": s["media_ref"], "offset": int(s["offset"])}
-                for s in spans
-            ]
-            out_spans, failures = extract_document(span_list)
-            dt_us = (time.perf_counter_ns() - t0) // 1000
-            rows.append((doc_id, int(part_id), out_spans, len(out_spans),
-                         failures, dt_us))
-        yield pd.DataFrame(rows, columns=["doc_id", "part_id", "spans", "n_spans",
-                                          "parse_failures", "proc_us"])
-
-
 def _extract_batches_arrow(it):
     """Arrow-native batch loop: same per-doc extraction, but the output
     ``list<struct>`` column is assembled directly from flat Arrow arrays
@@ -113,11 +91,6 @@ def _extract_batches_arrow(it):
 
     span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
                         ("media_ref", pa.string()), ("offset", pa.int32())])
-    out_schema = pa.schema([
-        ("doc_id", pa.string()), ("part_id", pa.int32()),
-        ("spans", pa.list_(span_t)), ("n_spans", pa.int32()),
-        ("parse_failures", pa.int32()), ("proc_us", pa.int64()),
-    ])
     buf: dict = {}
 
     def _reset():
@@ -141,7 +114,8 @@ def _extract_batches_arrow(it):
              pa.array(buf["n_spans"], pa.int32()),
              pa.array(buf["fails"], pa.int32()),
              pa.array(buf["procs"], pa.int64())],
-            schema=out_schema)
+            names=["doc_id", "part_id", "spans", "n_spans", "parse_failures",
+                   "proc_us"])
         _reset()
         return rb
 
@@ -170,7 +144,7 @@ def _extract_batches_arrow(it):
             buf["part_ids"].append(int(part_id))
             buf["in_spans"] += len(spans)
         # one output batch per input batch boundary (plus any intra-batch
-        # budget flushes above) — keeps the pipelined shape of the r2 loop
+        # budget flushes above), so the stage stays pipelined
         if buf["doc_ids"]:
             yield _flush()
 

@@ -8,17 +8,23 @@ Commit protocol (SURVEY.md §4.3):
 * Output is written partitioned by ``part_id`` with dynamic partition
   overwrite → re-processing a partition replaces exactly its files
   (idempotent).
-* A lineage row ``(source_snapshot, partition_id, doc_count, span_count,
-  parse_failures, wall_ms, status)`` is appended only *after* the data
-  write succeeds, and is computed by reading the written output back
-  (never by re-running extraction), so a lineage row implies durable data.
-* Resume = anti-filter pending partitions against committed lineage.
+* One typed lineage row per partition per run, ``(source_snapshot,
+  partition_id, run_seq, doc_count, span_count, parse_failures, wall_ms,
+  violations, status='committed')``, is appended only *after* the data
+  write succeeds.  One aggregate over the written output read back (never
+  a re-run of extraction) computes its counts and its contract
+  validation, so a lineage row implies durable, checked data.
+* Resume = anti-filter pending partitions against committed lineage.  The
+  latest row per partition (highest ``run_seq``) describes the data on
+  disk, and run totals are summed over those rows.
 """
 
 from __future__ import annotations
 
+import os
 import time
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +48,9 @@ def validate_extracted(df: DataFrame) -> DataFrame:
     A row is valid iff EITHER it is an error record (parse_failures=1,
     empty spans) OR: spans non-empty, title first, offsets dense 0..n-1,
     every kind in the closed set, and n_spans consistent.  Returns
-    (part_id, docs_checked, violations).
+    (part_id, docs_checked, violations) plus the partition's lineage sums
+    over written rows: doc_count, span_count (Σ n_spans), parse_failures
+    and wall_ms (Σ proc_us / 1000).
 
     Relational form: posexplode + per-span scalar predicates + a two-level
     aggregate, NOT per-row array lambdas (forall/transform/sequence) —
@@ -56,14 +64,14 @@ def validate_extracted(df: DataFrame) -> DataFrame:
     """
     kind_set = ", ".join(f"'{k}'" for k in OUTPUT_KINDS)
     ex = (df.select(
-        "part_id", "doc_id", "n_spans", "parse_failures",
+        "part_id", "doc_id", "n_spans", "parse_failures", "proc_us",
         # strip span text BEFORE the explode: only (kind, offset) matter
         # to the contract, and 13M exploded rows carrying body text would
         # dominate the stage's bytes.  arrays_zip of the extracted field
         # arrays stays in codegen (a lambda transform would not)
         F.arrays_zip(F.col("spans.kind").alias("kind"),
                      F.col("spans.offset").alias("offset")).alias("ko"))
-        .select("part_id", "doc_id", "n_spans", "parse_failures",
+        .select("part_id", "doc_id", "n_spans", "parse_failures", "proc_us",
                 F.size("ko").alias("sz"),
                 F.posexplode_outer("ko").alias("pos", "s")))
     span_ok = (F.col("s.offset") == F.col("pos")) \
@@ -73,33 +81,43 @@ def validate_extracted(df: DataFrame) -> DataFrame:
     # false — coalesce so a NULL field counts as a violation, as it did in
     # the array-predicate form (where forall/== propagated NULL to invalid)
     span_bad = F.col("pos").isNotNull() & ~F.coalesce(span_ok, F.lit(False))
+    # each written row explodes to exactly one row with pos 0 (or NULL, for
+    # empty spans): the lineage sums count rows over it, not doc_id groups
+    row_mark = F.col("pos").isNull() | (F.col("pos") == 0)
     per_doc = (ex.groupBy("part_id", "doc_id")
                .agg(F.first("n_spans").alias("n_spans"),
                     F.first("parse_failures").alias("parse_failures"),
                     F.first("sz").alias("sz"),
-                    F.sum(F.when(span_bad, 1).otherwise(0)).alias("bad_spans")))
+                    F.sum(F.when(span_bad, 1).otherwise(0)).alias("bad_spans"),
+                    F.count_if(row_mark).alias("rows"),
+                    *(F.sum(F.when(row_mark, F.col(c))).alias(f"row_{c}")
+                      for c in ("n_spans", "parse_failures", "proc_us"))))
     consistent = F.col("n_spans") == F.col("sz")
     is_error_rec = (F.col("parse_failures") == 1) & (F.col("sz") == 0)
-    valid = consistent & (
-        is_error_rec
-        | ((F.col("sz") >= 1) & (F.col("bad_spans") == 0)))
+    valid = consistent & (is_error_rec | ((F.col("sz") >= 1) & (F.col("bad_spans") == 0)))
     return (per_doc.withColumn("ok", valid)
             .groupBy("part_id")
             .agg(F.count("*").alias("docs_checked"),
-                 F.sum(F.when(F.col("ok"), 0).otherwise(1)).alias("violations")))
+                 F.sum(F.when(F.col("ok"), 0).otherwise(1)).alias("violations"),
+                 F.sum("rows").alias("doc_count"),
+                 F.sum("row_n_spans").cast("long").alias("span_count"),
+                 F.sum("row_parse_failures").cast("long").alias("parse_failures"),
+                 (F.sum("row_proc_us") / F.lit(1000)).cast("long").alias("wall_ms")))
 
 
-def committed_partitions(spark: SparkSession, lineage_loc: str) -> list[int]:
-    import os
+def committed_partitions(spark: SparkSession, lineage_loc: str) -> dict[int, int]:
+    """Committed partition ids, each mapped to its latest ``run_seq``; empty
+    while no lineage has been written at ``lineage_loc``."""
     if "://" not in lineage_loc and not os.path.exists(lineage_loc):
-        return []
+        return {}
     try:
         lin = spark.read.parquet(lineage_loc)
-    except Exception:
-        return []
-    rows = (lin.filter(F.col("status") == "committed")
-               .select("partition_id").distinct().collect())
-    return [r.partition_id for r in rows]
+    except AnalysisException as e:
+        if e.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        return {}
+    rows = lin.groupBy("partition_id").agg(F.max("run_seq").alias("seq")).collect()
+    return {r.partition_id: r.seq for r in rows}
 
 
 def run_extraction(
@@ -128,84 +146,49 @@ def run_extraction(
 
     salted = with_partition_id(docs.select("doc_id", "spans"), num_partitions)
 
-    committed = committed_partitions(spark, lin_loc) if resume else []
+    # the one pre-write lineage read: resume's skip set, and the run
+    # sequence even when not resuming (a re-extracted partition's new row
+    # must outrank its old one)
+    committed = committed_partitions(spark, lin_loc)
+    run_seq = max(committed.values(), default=0) + 1
+    skip = list(committed) if resume else []
     pending = salted
-    if committed:
-        pending = pending.filter(~F.col("part_id").isin(committed))
+    if skip:
+        pending = pending.filter(~F.col("part_id").isin(skip))
     if limit_partitions is not None:
         pending = pending.filter(F.col("part_id") < limit_partitions)
 
     extracted = extract_operator(pending, num_partitions)
     catalog.write_partitioned(extracted, out_loc, ["part_id"], overwrite_partitions=True)
 
-    # lineage from the *written* output (read-back, column-pruned: the spans
-    # column is never touched), appended only after the durable write
+    # one aggregate over the *written* output read back (span text is never
+    # touched) gives each new partition's counts and contract validation;
+    # its row is appended only after the durable write
     out = spark.read.parquet(out_loc)
-    newly = out if not committed else out.filter(~F.col("part_id").isin(committed))
-    lineage = (
-        newly.groupBy(F.col("part_id").cast("int").alias("partition_id"))
-        .agg(
-            F.count("doc_id").alias("doc_count"),
-            F.sum("n_spans").cast("long").alias("span_count"),
-            F.sum("parse_failures").cast("long").alias("parse_failures"),
-            (F.sum("proc_us") / F.lit(1000)).cast("long").alias("wall_ms"),
-        )
-        .withColumn("source_snapshot", F.lit(snapshot))
-        .withColumn("status", F.lit("committed"))
-        .select("source_snapshot", "partition_id", "doc_count", "span_count",
-                "parse_failures", "wall_ms", "status")
-    )
+    newly = out.filter(~F.col("part_id").isin(skip)) if skip else out
+    lineage = validate_extracted(newly).select(
+        F.lit(snapshot).alias("source_snapshot"),
+        F.col("part_id").cast("int").alias("partition_id"),
+        F.lit(run_seq).cast("long").alias("run_seq"),
+        "doc_count", "span_count", "parse_failures", "wall_ms",
+        F.col("violations").cast("long").alias("violations"),
+        F.lit("committed").alias("status"))
     catalog.append(lineage, lin_loc)
 
-    # post-write validation pass (1A/validate_outputs.py analog): appended
-    # as its own lineage status so failures surface durably, not silently.
-    # Column reuse: doc_count = docs checked, parse_failures = violations,
-    # wall_ms = run sequence — a partition is only re-validated when it is
-    # re-extracted, so the LATEST validation row per partition is the truth
-    # about the data currently on disk.  The sequence is MONOTONIC over the
-    # lineage's own prior validation rows (max existing + 1), not raw wall
-    # clock: two sub-millisecond runs or an NTP step backwards must never
-    # let a stale validation_failed row outrank a newer clean one.
-    prev_seq = (spark.read.parquet(lin_loc)
-                .filter(F.col("status").isin("validated", "validation_failed"))
-                .agg(F.max("wall_ms")).collect()[0][0])
-    run_seq = max(int(time.time() * 1000), int(prev_seq or 0) + 1)
-    vstats = validate_extracted(newly)
-    validation = (
-        vstats.select(
-            F.lit(snapshot).alias("source_snapshot"),
-            F.col("part_id").cast("int").alias("partition_id"),
-            F.col("docs_checked").cast("long").alias("doc_count"),
-            F.lit(0).cast("long").alias("span_count"),
-            F.col("violations").cast("long").alias("parse_failures"),
-            F.lit(run_seq).cast("long").alias("wall_ms"),
-            F.when(F.col("violations") > 0, "validation_failed")
-             .otherwise("validated").alias("status"),
-        ))
-    catalog.append(validation, lin_loc)
-    # DURABLE violations for this output dir: a resumed run skips committed
-    # partitions and never re-validates them, so an earlier run's
-    # validation_failed partition must keep flagging until its data is
-    # actually re-extracted and re-validated clean (ADVICE r2).  Latest
-    # validation row per partition wins (wall_ms run sequence; ties —
-    # e.g. pre-fix rows with wall_ms=0 — resolve to the failed row,
-    # surfacing conservatively).
-    from pyspark.sql import Window
-    wv = Window.partitionBy("partition_id").orderBy(
-        F.desc("wall_ms"),
-        F.desc((F.col("status") == "validation_failed").cast("int")))
-    violations_total = int(
-        spark.read.parquet(lin_loc)
-        .filter(F.col("status").isin("validated", "validation_failed"))
-        .withColumn("rn", F.row_number().over(wv)).filter("rn = 1")
-        .filter(F.col("status") == "validation_failed")
-        .agg(F.sum("parse_failures")).collect()[0][0] or 0)
-
-    stats = (spark.read.parquet(lin_loc).filter(F.col("status") == "committed")
+    # totals over the latest row per partition: that row describes the data
+    # on disk, so a re-extracted partition counts once, and a committed
+    # partition (never validated again) keeps its violations until it is
+    # re-extracted clean
+    cols = ("run_seq", "doc_count", "span_count", "parse_failures", "violations")
+    stats = (spark.read.parquet(lin_loc).groupBy("partition_id")
+             .agg(F.max_by(F.struct(*cols), "run_seq").alias("r")).select("r.*")
              .agg(F.count("*").alias("parts"),
                   F.sum("doc_count").alias("docs"),
+                  F.sum(F.when(F.col("run_seq") == run_seq, F.col("doc_count")))
+                  .alias("processed"),
                   F.sum("span_count").alias("spans"),
-                  F.sum("parse_failures").alias("failures")).collect()[0])
+                  F.sum("parse_failures").alias("failures"),
+                  F.sum("violations").alias("violations")).collect()[0])
     wall_s = time.perf_counter() - t_start
     catalog.write_manifest(output_dir, {
         "input": input_location, "snapshot": snapshot,
@@ -217,11 +200,12 @@ def run_extraction(
         "num_partitions": num_partitions,
         "committed_partitions": int(stats.parts),
         "docs_total_committed": int(stats.docs or 0),
+        "docs_processed": int(stats.processed or 0),
         "spans_total": int(stats.spans or 0),
         "parse_failures": int(stats.failures or 0),
-        "validation_violations": violations_total,
+        "validation_violations": int(stats.violations or 0),
         "wall_s": wall_s,
-        "skipped_committed": len(committed),
+        "skipped_committed": len(skip),
     }
 
 

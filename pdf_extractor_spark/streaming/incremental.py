@@ -12,8 +12,8 @@ Semantics vs the batch path:
   in the checkpoint WAL; re-running with the same checkpoint processes
   only files that arrived since the last run (the streaming analog of the
   lineage anti-join).
-* **Same operator, same results.** The extraction stage is the identical
-  ``mapInPandas`` chain, so per-doc outputs are bit-identical to batch —
+* **Same operator, same results.** The extraction stage is the batch
+  job's ``mapInArrow`` loop, so per-doc outputs are bit-identical to batch —
   verified by tests/test_streaming.py against the pure-Python oracle.
 * **Stateless stage ⇒ no watermarks needed.** Extraction is per-document;
   there is no cross-row state, so AvailableNow processes the backlog in
@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 
 from ..operators.extraction import (INPUT_SCHEMA, OUTPUT_SCHEMA,
-                                    _extract_batches, with_partition_id)
+                                    _extract_batches_arrow, with_partition_id)
 
 
 def incremental_extraction(
@@ -47,7 +47,7 @@ def incremental_extraction(
     docs = reader.parquet(input_location)
 
     salted = with_partition_id(docs.select("doc_id", "spans"), num_partitions)
-    extracted = salted.mapInPandas(_extract_batches, schema=OUTPUT_SCHEMA)
+    extracted = salted.mapInArrow(_extract_batches_arrow, schema=OUTPUT_SCHEMA)
 
     q = (
         extracted.writeStream

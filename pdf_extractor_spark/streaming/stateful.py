@@ -19,7 +19,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from ..operators.extraction import INPUT_SCHEMA, OUTPUT_SCHEMA, _extract_batches, with_partition_id
+from ..operators.extraction import (INPUT_SCHEMA, OUTPUT_SCHEMA,
+                                    _extract_batches_arrow, with_partition_id)
 
 STATS_SCHEMA = ("part_id int, docs_total long, spans_total long, "
                 "failures_total long")
@@ -57,7 +58,7 @@ def stateful_partition_stats(
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     docs = reader.parquet(input_location)
     salted = with_partition_id(docs.select("doc_id", "spans"), num_partitions)
-    extracted = salted.mapInPandas(_extract_batches, schema=OUTPUT_SCHEMA)
+    extracted = salted.mapInArrow(_extract_batches_arrow, schema=OUTPUT_SCHEMA)
     return (
         extracted.select("part_id", "n_spans", "parse_failures")
         .groupBy("part_id")

@@ -45,11 +45,12 @@ class TestEndToEnd:
 
     def test_lineage_consistency(self, spark, run_dir):
         out, metrics = run_dir
-        lin = pipeline.read_lineage(spark, out)
-        all_rows = lin.collect()
-        # commit rows + the post-write validation pass rows, nothing else
-        assert {r.status for r in all_rows} == {"committed", "validated"}
-        rows = [r for r in all_rows if r.status == "committed"]
+        rows = pipeline.read_lineage(spark, out).collect()
+        # one typed row per partition: committed, with the contract
+        # validation of the same read-back in its own column
+        assert {r.status for r in rows} == {"committed"}
+        assert all(r.violations == 0 for r in rows)
+        assert len(rows) == metrics["committed_partitions"]
         assert sum(r.doc_count for r in rows) == metrics["docs_total_committed"]
         ext = pipeline.read_extracted(spark, out)
         per_part = {r.part_id: r["cnt"] for r in

@@ -2,7 +2,8 @@
 show up in `.explain` output, or a refactor silently regressed them.
 
 * extraction: exactly ONE exchange (the AQE rebalance) feeding one
-  Arrow-batched MapInPandas — no sampling pass, no extra shuffle;
+  MapInArrow — no sampling pass, no extra shuffle;
+* a fresh-dir extraction run is exactly four SQL executions;
 * dimension joins broadcast instead of shuffling the fact side;
 * filters and column pruning reach the parquet scan.
 """
@@ -38,6 +39,26 @@ def test_extraction_single_exchange(spark):
                           plan)) == 1, plan
     # no range-sampling repartition (would appear as rangepartitioning)
     assert "rangepartitioning" not in plan, plan
+
+
+def _last_execution_id(spark) -> int:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+    it = (spark._jsparkSession.sharedState().statusStore()
+          .executionsList().iterator())
+    last = -1
+    while it.hasNext():
+        last = max(last, it.next().executionId())
+    return last
+
+
+def test_extraction_run_is_four_executions(spark, corpus_path, tmp_path):
+    """Footer count, write, lineage aggregate + append, totals: a pass
+    added after the write shows up here, not only in a benchmark."""
+    from pdf_extractor_spark.plans import pipeline
+
+    before = _last_execution_id(spark)
+    pipeline.run_extraction(spark, corpus_path, str(tmp_path / "out"))
+    assert _last_execution_id(spark) - before == 4
 
 
 def test_q03_broadcasts_dimension(spark):

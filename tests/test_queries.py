@@ -3,6 +3,8 @@ query on Spark AND its DuckDB oracle SQL on the same parquet, compare
 row count, column names, and order-insensitive values (exact)."""
 
 import math
+import os
+import re
 
 import duckdb
 import pytest
@@ -87,3 +89,13 @@ def test_query_matches_oracle(spark, name):
     mism = [i for i, (a, b) in enumerate(zip(s_norm, d_norm)) if a != b]
     assert not mism, f"{name}: first value mismatch at {mism[0]}: " \
                      f"spark={s_norm[mism[0]]} duck={d_norm[mism[0]]}"
+
+
+def test_extract_golden_path_is_in_this_checkout():
+    """The extraction oracle's golden path derives from the package
+    location, so the oracle works from any checkout."""
+    here = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    m = re.search(r"read_parquet\('([^']+)'\)", REGISTRY["extract_pipeline"].sql)
+    assert m and os.path.exists(m.group(1)), REGISTRY["extract_pipeline"].sql
+    assert os.path.samefile(os.path.dirname(m.group(1)),
+                            os.path.join(here, "tests", "golden"))

@@ -2,6 +2,8 @@
 must skip committed partitions and converge to output identical to a
 single clean run (FIXTURES.md §6)."""
 
+import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.plans import pipeline
@@ -77,3 +79,43 @@ def test_crash_between_write_and_lineage(spark, corpus_path, tmp_path_factory):
     assert got == want  # no duplicates, no losses — overwrite was idempotent
     n_rows = pipeline.read_extracted(spark, out).count()
     assert n_rows == len(want)
+
+
+def test_rerun_without_resume_counts_latest_rows(spark, corpus_path, corpus_rows,
+                                                 tmp_path_factory):
+    """``resume=False`` re-extracts every partition into the same dir: the
+    totals describe the output on disk (latest lineage row per partition),
+    not every committed row ever appended; a fully-skipped resume then
+    processes no docs."""
+    out = str(tmp_path_factory.mktemp("rerun"))
+    m1 = pipeline.run_extraction(spark, corpus_path, out, num_partitions=11)
+    m2 = pipeline.run_extraction(spark, corpus_path, out, num_partitions=11,
+                                 resume=False)
+    assert pipeline.read_extracted(spark, out).count() == len(corpus_rows)
+    for k in ("docs_total_committed", "spans_total", "parse_failures",
+              "committed_partitions"):
+        assert m2[k] == m1[k], k
+    assert m1["docs_total_committed"] == len(corpus_rows)
+    assert m2["skipped_committed"] == 0
+    assert m2["docs_processed"] == len(corpus_rows)
+
+    m3 = pipeline.run_extraction(spark, corpus_path, out, num_partitions=11)
+    assert m3["skipped_committed"] == m1["committed_partitions"]
+    assert m3["docs_processed"] == 0
+    assert m3["docs_total_committed"] == len(corpus_rows)
+
+
+def test_resume_read_catches_only_missing_lineage(spark, tmp_path):
+    """No lineage yet (absent or empty dir) means nothing committed; any
+    other lineage read error, such as the older layout without run_seq,
+    propagates instead of passing for "nothing committed"."""
+    assert pipeline.committed_partitions(spark, str(tmp_path / "absent")) == {}
+    (tmp_path / "empty").mkdir()
+    assert pipeline.committed_partitions(spark, str(tmp_path / "empty")) == {}
+    old = str(tmp_path / "old")
+    spark.createDataFrame([("s", 0, 1, 1, 0, 0, "committed")],
+                          "source_snapshot string, partition_id int, doc_count long, "
+                          "span_count long, parse_failures long, wall_ms long, "
+                          "status string").write.parquet(old)
+    with pytest.raises(AnalysisException):
+        pipeline.committed_partitions(spark, old)

@@ -1,6 +1,6 @@
 """Output schema-validation pass (1A/validate_outputs.py analog):
 clean runs validate green, contract violations are counted and surface
-as a lineage status rather than silence."""
+in the lineage's violations column rather than silence."""
 
 from pyspark.sql import functions as F
 
@@ -66,29 +66,24 @@ class TestValidateExtracted:
 
 def test_resumed_run_keeps_durable_violation(spark, corpus_path,
                                              tmp_path_factory):
-    """A validation_failed partition from an earlier run must keep flagging
-    in later resumed runs: committed partitions are never re-extracted or
-    re-validated, so the durable violation cannot silently drop to 0
-    (ADVICE r2).  Latest validation row per partition wins."""
-    import time
-
+    """A partition committed with violations by an earlier run must keep
+    flagging in later resumed runs: committed partitions are never
+    re-extracted or re-validated, so the durable violation cannot silently
+    drop to 0 (ADVICE r2).  Latest row per partition (by run_seq) wins."""
     out = str(tmp_path_factory.mktemp("vdur"))
     m1 = pipeline.run_extraction(spark, corpus_path, out, num_partitions=7)
     assert m1["validation_violations"] == 0
-    # simulate an earlier run that committed a partition whose validation
-    # FAILED: append a later-sequenced validation_failed row for part 0
+    # simulate a later run that committed partition 0 with 3 violations
+    lin = pipeline.read_lineage(spark, out)
+    seq = lin.agg(F.max("run_seq")).collect()[0][0]
     bad = spark.createDataFrame(
-        [("snap-old", 0, 5, 0, 3, int(time.time() * 1000) + 1000,
-          "validation_failed")],
-        schema="source_snapshot string, partition_id int, doc_count long, "
-               "span_count long, parse_failures long, wall_ms long, "
-               "status string")
+        [("snap-later", 0, seq + 1, 5, 0, 0, 0, 3, "committed")], schema=lin.schema)
     bad.write.mode("append").parquet(f"{out}/{pipeline.LINEAGE_SUBDIR}")
     # resumed run: nothing pending, nothing re-validated — the durable
-    # violation must still be reported (old code scoped to the current
-    # snapshot and read 0 here)
+    # violation must still be reported
     m2 = pipeline.run_extraction(spark, corpus_path, out, num_partitions=7)
     assert m2["skipped_committed"] == m1["committed_partitions"]
+    assert m2["docs_processed"] == 0
     assert m2["validation_violations"] == 3
 
 
@@ -96,8 +91,30 @@ def test_pipeline_run_validates_green(spark, corpus_path, tmp_path_factory):
     out = str(tmp_path_factory.mktemp("vrun"))
     m = pipeline.run_extraction(spark, corpus_path, out, num_partitions=7)
     assert m["validation_violations"] == 0
-    lin = pipeline.read_lineage(spark, out)
-    statuses = {r.status for r in lin.select("status").distinct().collect()}
-    assert statuses == {"committed", "validated"}
-    n_validated = lin.filter(F.col("status") == "validated").count()
-    assert n_validated == m["committed_partitions"]
+    rows = pipeline.read_lineage(spark, out).collect()
+    assert {r.status for r in rows} == {"committed"}
+    assert all(r.violations == 0 for r in rows)
+    assert len(rows) == m["committed_partitions"]
+
+
+def test_lineage_counts_rows_not_doc_ids(spark, corpus_rows, tmp_path_factory):
+    """An input that repeats a doc_id writes two rows: the partition's
+    lineage doc_count is the rows written and span_count their summed
+    n_spans, not one per doc_id group of the validation aggregate."""
+    from pdf_extractor_spark.operators.extraction import INPUT_SCHEMA
+
+    base = tmp_path_factory.mktemp("dupdoc")
+    docs, out = str(base / "docs"), str(base / "out")
+    rows = corpus_rows[:20] + [corpus_rows[0]]
+    spark.createDataFrame(rows, schema=INPUT_SCHEMA).write.parquet(docs)
+    m = pipeline.run_extraction(spark, docs, out, num_partitions=3)
+
+    written = {r.part_id: (r.n, r.spans) for r in
+               pipeline.read_extracted(spark, out).groupBy("part_id")
+               .agg(F.count("*").alias("n"),
+                    F.sum("n_spans").alias("spans")).collect()}
+    lineage = {r.partition_id: (r.doc_count, r.span_count)
+               for r in pipeline.read_lineage(spark, out)
+               .filter(F.col("status") == "committed").collect()}
+    assert lineage == written
+    assert m["docs_total_committed"] == len(rows)
