@@ -45,7 +45,7 @@ def _extract(spans: list[dict]) -> list[dict]:
         raise ParseError("duplicate span offsets")
     spans = sorted(spans, key=lambda s: s["offset"])
     pdf_blocks: list[dict] = []          # concatenated across all pdf_page spans
-    per_span_items: dict[int, list[dict]] = {}
+    per_span_items: dict[int, list[tuple]] = {}   # offset -> (kind, text, media_ref)
     html_title: str | None = None
     has_pdf = False
 
@@ -59,15 +59,9 @@ def _extract(spans: list[dict]) -> list[dict]:
             t, items = classify_html_blocks(tokenize_html(s["text"] or "", src_span=off))
             if html_title is None and t is not None:
                 html_title = t
-            per_span_items[off] = [
-                {"kind": it["kind"], "text": it["text"], "media_ref": it["media_ref"]}
-                for it in items
-            ]
+            per_span_items[off] = [(it["kind"], it["text"], it["media_ref"]) for it in items]
         elif kind == "media":
-            per_span_items[off] = [
-                {"kind": "media", "text": s.get("text") or "",
-                 "media_ref": s.get("media_ref") or ""}
-            ]
+            per_span_items[off] = [("media", s.get("text") or "", s.get("media_ref") or "")]
         else:
             raise ParseError(f"unknown input span kind: {kind!r}")
 
@@ -77,19 +71,14 @@ def _extract(spans: list[dict]) -> list[dict]:
         pdf_title, items = pdfheur.extract_pdf_document(pdf_blocks)
         title = pdf_title
         for it in items:
-            per_span_items.setdefault(it["src_span"], []).append(
-                {"kind": it["kind"], "text": it["text"], "media_ref": ""}
-            )
+            per_span_items.setdefault(it["src_span"], []).append((it["kind"], it["text"], ""))
     elif html_title is not None:
         title = html_title
     else:
         title = "Untitled Document"
 
     out: list[dict] = [{"kind": "title", "text": title, "media_ref": "", "offset": 0}]
-    n = 1
     for off in sorted(per_span_items):
-        for it in per_span_items[off]:
-            out.append({"kind": it["kind"], "text": it["text"],
-                        "media_ref": it["media_ref"], "offset": n})
-            n += 1
+        for kind, text, ref in per_span_items[off]:
+            out.append({"kind": kind, "text": text, "media_ref": ref, "offset": len(out)})
     return out

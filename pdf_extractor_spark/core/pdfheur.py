@@ -24,6 +24,24 @@ reference at extractor.py:35-71)::
 All thresholds, tie-breaks, and quirks of the reference are preserved
 exactly (including e.g. the substring-based form-field veto where
 ``'si' in text`` matches "design"/"signature", extractor.py:23-32).
+
+Fast paths.  The per-line loops are the cost of the extraction stage, so
+:func:`extract_pdf_document` skips work that cannot change its result:
+
+* *Heading fast reject.*  A block that is not bold, whose size is not a
+  heading candidate and whose stripped text does not start with a decimal
+  digit (``str.isdecimal`` accepts exactly what ``re``'s ``\\d`` does, so
+  "٣ Overview" still reaches the scorer) never calls
+  :func:`is_potential_heading`.  Its best score is 3: the colon and bold
+  points need bold, the candidate points a candidate size, the numbered
+  points a leading digit, and the Appendix/Phase prefix (+3) and all-caps
+  (+2) exclude each other, as "Appendix"/"Phase" hold lower-case letters.
+  The scorer's threshold is 4.
+* *Grouped recurring filter.*  :func:`filter_recurring_headers` compares
+  a block only with the recurring texts of its own (size, bold).
+
+``tests/core_reference.py`` keeps the straightforward forms, and
+``tests/test_core_parity.py`` fuzzes the two against each other.
 """
 
 from __future__ import annotations
@@ -190,8 +208,27 @@ def is_recurring_header(block: dict, recurring_headers: set) -> bool:
 
 
 def filter_recurring_headers(blocks: list[dict], recurring_headers: set) -> list[dict]:
-    """extractor.py:347-359."""
-    return [b for b in blocks if not is_recurring_header(b, recurring_headers)]
+    """extractor.py:347-359 — drop every block :func:`is_recurring_header` matches.
+
+    Same predicate, grouped: a header can only match a block of its exact
+    (size, bold), so the header texts are indexed by that pair and each
+    block is compared only with the texts of its own formatting.  (The
+    dict lookup agrees with ``==`` because the parser rejects NaN sizes.)
+    """
+    if not recurring_headers:
+        return list(blocks)
+    texts_by_format: dict[tuple, list[str]] = {}
+    for h_text, h_size, h_bold in recurring_headers:
+        texts_by_format.setdefault((h_size, h_bold), []).append(h_text)
+    out = []
+    for b in blocks:
+        h_texts = texts_by_format.get((b["size"], b["bold"]))
+        if h_texts:
+            text = b["text"].strip()
+            if any(h in text or text in h for h in h_texts):
+                continue
+        out.append(b)
+    return out
 
 
 def _local_font_patterns(blocks: list[dict], center: int, window: int = 5) -> tuple[list[float], list[int]]:
@@ -269,20 +306,16 @@ def skip_table_body(blocks: list[dict]) -> list[dict]:
         & (short_neighbors / total > 0.5)
 
     filtered = []
-    for i, b in enumerate(blocks):
-        if not texts_nonempty[i]:
+    for b, text, nonempty, maybe_table in zip(blocks, texts, texts_nonempty.tolist(),
+                                              maybe.tolist()):
+        if not nonempty:
             is_table = True          # blank text → table content (ref behavior)
-        elif maybe[i]:
-            sentences = texts[i].split(".")
-            is_table = not any(len(s.strip()) > 50 for s in sentences)
+        elif maybe_table:
+            is_table = not any(len(s.strip()) > 50 for s in text.split("."))
         else:
             is_table = False
-        if not is_table:
+        if not is_table or ((b["bold"] or len(text) > 20) and not is_obvious_table_cell(text)):
             filtered.append(b)
-        else:
-            text = texts[i]
-            if (b["bold"] or len(text) > 20) and not is_obvious_table_cell(text):
-                filtered.append(b)
     return filtered
 
 
@@ -534,10 +567,16 @@ def extract_pdf_document(blocks: list[dict]) -> tuple[str, list[dict]]:
 
     font_analysis = analyze_font_distribution(filtered)
 
+    candidates = font_analysis["heading_candidates"]
+    # fast reject, see the module notes: the scorer gives any other block
+    # at most 3, below its threshold of 4
+    maybe_heading = [i for i, b in enumerate(filtered)
+                     if b["bold"] or b["size"] in candidates
+                     or b["text"].strip()[:1].isdecimal()]
     potential: list[dict] = []
-    for i, block in enumerate(filtered):
-        next_blocks = filtered[i + 1:i + 4]
-        is_heading, level = is_potential_heading(block, font_analysis, next_blocks)
+    for i in maybe_heading:
+        block = filtered[i]
+        is_heading, level = is_potential_heading(block, font_analysis, filtered[i + 1:i + 4])
         if is_heading:
             h = dict(block)
             h["detected_level"] = level
@@ -557,15 +596,11 @@ def extract_pdf_document(blocks: list[dict]) -> tuple[str, list[dict]]:
         heading_at[block_indices[0]] = h
         skip_idx.update(block_indices[1:])      # merged-away fragments
 
-    items = []
-    for i, block in enumerate(filtered):
-        if i in heading_at:
-            h = heading_at[i]
-            items.append({"kind": f"h{h['detected_level']}", "text": h["text"],
-                          "src_span": block.get("src_span", 0)})
-        elif i in skip_idx:
-            continue
-        else:
-            items.append({"kind": "body", "text": block["text"],
-                          "src_span": block.get("src_span", 0)})
+    items = [{"kind": "body", "text": block["text"], "src_span": block.get("src_span", 0)}
+             for block in filtered]
+    for i, h in heading_at.items():
+        items[i] = {"kind": f"h{h['detected_level']}", "text": h["text"],
+                    "src_span": items[i]["src_span"]}
+    if skip_idx:
+        items = [it for i, it in enumerate(items) if i not in skip_idx]
     return title, items

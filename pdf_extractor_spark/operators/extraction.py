@@ -10,8 +10,8 @@ Logical plan::
 Design notes for 10^12-document scale (BASELINE.json north_rule):
 
 * **One shuffle.** Everything per-document happens inside a single
-  ``mapInArrow`` stage; the only exchange is the explicit repartition
-  that balances documents across tasks.
+  ``mapInArrow`` stage; the only exchange is the AQE REBALANCE on
+  ``part_id`` that spreads documents across tasks.
 * **Skew salting.** ``part_id`` is a pure function of ``doc_id`` (so the
   assignment is reproducible across runs — required for checkpoint
   resume), but jumbo documents (span count >= JUMBO_SPANS) are isolated
@@ -19,6 +19,16 @@ Design notes for 10^12-document scale (BASELINE.json north_rule):
   behind — or OOMs with — a full batch of normal docs.  No global
   window / driver collect is involved, so the scheme costs the same at
   10^12 docs as at 10^3.
+* **Buckets for AQE to pack.** The ids span ``[0, 2P)`` and the
+  REBALANCE starts from ``2P`` hash buckets, not from the session's
+  (smaller) shuffle-partition count.  With fewer buckets than ids,
+  Murmur3 alone decides which ids share a task, the same way on every
+  run: at 2 shuffle partitions the ids 0..3 split 1:3, and AQE does not
+  split a bucket below the advisory size, so one core extracts three
+  quarters of the docs.  With ``2P`` buckets most hold one id; AQE
+  coalesces adjacent buckets by bytes toward total / parallelism, so the
+  tasks come out near-equal, and each id still lands in one task (one
+  output file per id) unless AQE splits a bucket over the advisory size.
 * **Bounded batches.** ``spark.sql.execution.arrow.maxRecordsPerBatch``
   (session.py) caps docs per Arrow batch, and the output assembler
   additionally flushes every ``MAX_BATCH_SPANS`` cumulative input spans,
@@ -132,11 +142,10 @@ def _extract_batches_arrow(it):
             t0 = time.perf_counter_ns()
             out_spans, failures = extract_document(spans)
             buf["procs"].append((time.perf_counter_ns() - t0) // 1000)
-            for s in out_spans:
-                buf["kinds"].append(s["kind"])
-                buf["texts"].append(s["text"])
-                buf["refs"].append(s["media_ref"])
-                buf["offs"].append(s["offset"])
+            buf["kinds"].extend([s["kind"] for s in out_spans])
+            buf["texts"].extend([s["text"] for s in out_spans])
+            buf["refs"].extend([s["media_ref"] for s in out_spans])
+            buf["offs"].extend([s["offset"] for s in out_spans])
             buf["list_offsets"].append(len(buf["kinds"]))
             buf["n_spans"].append(len(out_spans))
             buf["fails"].append(failures)
@@ -161,9 +170,11 @@ def extract_operator(df: DataFrame, num_partitions: int | None = None) -> DataFr
     salted = with_partition_id(df.select("doc_id", "spans"), num_partitions)
     # AQE REBALANCE by part_id: one exchange, no range-sampling pass (a
     # repartitionByRange would decode the whole spans column a second time
-    # just to sample split points), and AQE splits oversized shuffle
-    # partitions — splitting a part_id across tasks is safe because the
-    # extraction is per-doc and the partitioned write just emits one more
-    # file into that part_id's directory
-    balanced = salted.hint("rebalance", "part_id")
+    # just to sample split points).  2P initial buckets, as many as there
+    # are possible part_ids, so AQE packs the tasks by bytes instead of
+    # Murmur3 fixing them (module notes, "Buckets for AQE to pack").  AQE may split an
+    # oversized bucket — safe, because the extraction is per-doc and the
+    # partitioned write just emits one more file into that part_id's
+    # directory
+    balanced = salted.hint("rebalance", 2 * num_partitions, "part_id")
     return balanced.mapInArrow(_extract_batches_arrow, schema=OUTPUT_SCHEMA)

@@ -77,6 +77,24 @@ class TestEndToEnd:
         if jumbo.count():
             assert jumbo.filter(F.col("part_id") < 13).count() == 0
 
+    def test_rebalance_spreads_docs_over_tasks(self, spark):
+        """REBALANCE on part_id: no task takes the bulk of the docs, and each
+        part_id is extracted by exactly one task (one output file per id)."""
+        from pdf_extractor_spark.gen import gen_doc
+        from pdf_extractor_spark.operators.extraction import INPUT_SCHEMA
+        rows = [gen_doc(f"doc-{i:05d}", seed=7, archetype="report", jumbo_rate=1.0)
+                for i in range(160)]
+        docs = spark.createDataFrame(rows, schema=INPUT_SCHEMA)
+        tasks = (extract_operator(docs, 8)
+                 .groupBy(F.spark_partition_id().alias("task"))
+                 .agg(F.count("*").alias("docs"),
+                      F.collect_set("part_id").alias("part_ids"))
+                 .collect())
+        assert sum(t.docs for t in tasks) == 160
+        assert max(t.docs for t in tasks) <= 0.30 * 160, sorted(t.docs for t in tasks)
+        part_ids = [p for t in tasks for p in t.part_ids]
+        assert len(part_ids) == len(set(part_ids)), tasks
+
     def test_no_python_row_udfs_in_plan(self, spark, corpus_path):
         # plan sanity: extraction stage is ArrowEvalPython/MapInPandas, and the
         # parquet scan prunes to the two input columns
