@@ -12,7 +12,7 @@ n (pairs within 3x of planted), drop report empty or justified, cc
 converged.
 
 Usage: python bench/dedup_scale_smoke.py [--n-texts 1000000]
-       [--n-vecs 200000] [--workdir /tmp/dedup_smoke] [--skew-safe]
+       [--n-vecs 200000] [--workdir /tmp/dedup_smoke]
 Prints one JSON line per mode and a summary line.
 """
 
@@ -75,7 +75,6 @@ def main() -> int:
     ap.add_argument("--n-texts", type=int, default=1_000_000)
     ap.add_argument("--n-vecs", type=int, default=200_000)
     ap.add_argument("--workdir", default="/tmp/dedup_smoke")
-    ap.add_argument("--skew-safe", action="store_true")
     args = ap.parse_args()
 
     from pdf_extractor_spark.corpus import (dedup_embeddings_run,
@@ -90,8 +89,7 @@ def main() -> int:
     n_rows = gen_texts(spark, f"{wd}/texts", args.n_texts)
     gen_s = round(time.perf_counter() - t0, 1)
     planted = args.n_texts // DUP_EVERY
-    m = dedup_texts_run(spark, f"{wd}/texts", f"{wd}/texts_out",
-                        skew_safe=args.skew_safe)
+    m = dedup_texts_run(spark, f"{wd}/texts", f"{wd}/texts_out")
     m["gen_s"] = gen_s
     m["rows"] = n_rows
     m["planted_dups"] = planted
@@ -105,8 +103,7 @@ def main() -> int:
     n_rows = gen_vecs(spark, f"{wd}/vecs", args.n_vecs)
     gen_s = round(time.perf_counter() - t0, 1)
     planted = args.n_vecs // DUP_EVERY
-    m = dedup_embeddings_run(spark, f"{wd}/vecs", f"{wd}/vecs_out",
-                             skew_safe=args.skew_safe)
+    m = dedup_embeddings_run(spark, f"{wd}/vecs", f"{wd}/vecs_out")
     m["gen_s"] = gen_s
     m["rows"] = n_rows
     m["planted_dups"] = planted
@@ -114,8 +111,7 @@ def main() -> int:
     print(json.dumps(m))
     results["embeddings"] = m
 
-    m = dedup_semantic_run(spark, f"{wd}/vecs", f"{wd}/sem_out",
-                           skew_safe=args.skew_safe)
+    m = dedup_semantic_run(spark, f"{wd}/vecs", f"{wd}/sem_out")
     m["rows"] = n_rows
     m["planted_dups"] = planted
     m["pass"] = (m["non_canonical"] >= planted and m["cc_converged"])

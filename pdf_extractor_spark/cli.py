@@ -125,9 +125,10 @@ def main(argv: list[str] | None = None) -> int:
                          "(vec_id, embedding array<float>); corpus size is "
                          "estimated from the parquet footers and the LSH "
                          "band geometry DERIVED from it (emb_lsh_geometry), "
-                         "then banding -> capped candidates -> exact cosine "
-                         "verify -> components -> keep-canonical decisions "
-                         "land under --output")
+                         "then banding -> candidates (a block over 4096 rows "
+                         "is reported in dropped_*/, not paired) -> exact "
+                         "cosine verify -> components -> keep-canonical "
+                         "decisions land under --output")
     ap.add_argument("--threshold-pct", type=int, default=98,
                     help="dedup cosine threshold x100 (default 98)")
     ap.add_argument("--dedup-texts", default=None, metavar="PARQUET",
@@ -155,13 +156,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--target-cell-size", type=int, default=1024,
                     help="SemDeDup expected vectors per k-means cell "
                          "(drives the derived K; default 1024)")
-    ap.add_argument("--skew-safe", action="store_true",
-                    help="count blocking-key occupancy with a map-side-"
-                         "combining aggregate + broadcast anti-join instead "
-                         "of the single-exchange window form: ~1.4x slower "
-                         "when no block is hot, but no task ever ingests a "
-                         "whole pathological block (use when the corpus has "
-                         "multi-million-row duplicate regions)")
     ap.add_argument("--cc-iterations", type=int, default=20,
                     help="max min-label propagation rounds for the dedup "
                          "component labeling; the run iterates to fixpoint "
@@ -202,8 +196,7 @@ def main(argv: list[str] | None = None) -> int:
 
     if dedup:
         from . import corpus
-        common = {"iterations": args.cc_iterations,
-                  "skew_safe": args.skew_safe}
+        common = {"iterations": args.cc_iterations}
         if args.dedup_embeddings:
             metrics = corpus.dedup_embeddings_run(
                 spark, args.dedup_embeddings, args.output,

@@ -485,14 +485,10 @@ def merge_consecutive_headings(potential_headings: list[dict]) -> list[dict]:
 # --- title extraction (extractor.py:515-573) --------------------------------
 
 def extract_title(blocks: list[dict]) -> str:
-    """extractor.py:549-573 — keyword concat, else top-1 by (size,text) tuple."""
-    title_parts = []
-    for block in blocks[:10]:
-        text = block["text"].strip()
-        if any(w in text.upper() for w in TITLE_KEYWORDS):
-            title_parts.append(text)
-    if title_parts:
-        return " ".join(title_parts)
+    """extractor.py:549-573 — top-1 by (size,text) tuple.  The reference's
+    keyword-concatenation branch is left out: its only caller,
+    ``extract_title_with_merging``, already returns whenever one of the
+    first 10 blocks holds a title keyword."""
     candidates = []
     for block in blocks[:5]:
         if len(block["text"]) < 150:

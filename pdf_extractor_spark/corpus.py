@@ -479,18 +479,25 @@ def _simhash_from_text_s(nbits: int = 16) -> str:
                 let1(votes, "vt", bits))
 
 
+def _band_pairs(ex, id_col: str, a: str, b: str):
+    """The band self-join of the LSH and simhash paths: distinct pairs
+    (``a`` < ``b``) of ``id_col`` values agreeing on some (band_idx,
+    bucket) row of ``ex``."""
+    x, y = ex.alias("x"), ex.alias("y")
+    return (x.join(y, (F.col("x.band_idx") == F.col("y.band_idx"))
+                   & (F.col("x.bucket") == F.col("y.bucket"))
+                   & (F.col(f"x.{id_col}") < F.col(f"y.{id_col}")))
+            .select(F.col(f"x.{id_col}").alias(a),
+                    F.col(f"y.{id_col}").alias(b))
+            .distinct())
+
+
 def _simhash_pairs(sigs, ex, hamming_max: int):
     """Simhash near-dup pairs shared by `dedup_simhash_blocked` and
     `dedup_texts_run`: candidates agree exactly on some band row of
-    ``ex`` (doc_id, band_idx, band_bits), then the full-signature hamming
+    ``ex`` (doc_id, band_idx, bucket), then the full-signature hamming
     over ``sigs`` (doc_id, bands) must be <= ``hamming_max``."""
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-                   & (F.col("a.band_bits") == F.col("b.band_bits"))
-                   & (F.col("a.doc_id") < F.col("b.doc_id")))
-            .select(F.col("a.doc_id").alias("doc_a"),
-                    F.col("b.doc_id").alias("doc_b"))
-            .distinct())
+    cand = _band_pairs(ex, "doc_id", "doc_a", "doc_b")
     sa = sigs.select(F.col("doc_id").alias("doc_a"),
                      F.col("bands").alias("bands_a"))
     sb = sigs.select(F.col("doc_id").alias("doc_b"),
@@ -588,7 +595,7 @@ def dedup_simhash_blocked(spark, sf_dir):
             .filter(F.col("bands").isNotNull()))
     sigs = _persist(sigs)   # referenced 3x: band explode + both verify legs
     ex = sigs.select("doc_id",
-                     F.posexplode("bands").alias("band_idx", "band_bits"))
+                     F.posexplode("bands").alias("band_idx", "bucket"))
     return _simhash_pairs(sigs, ex, hamming_max=3)
 
 
@@ -1085,41 +1092,19 @@ def emb_lsh_geometry(n_est: int, target_occupancy: int = 64,
     return max(min_ppb, need)
 
 
-def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP,
-                      skew_safe: bool = False):
+def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP):
     """Split ``df`` into (kept, dropped_report) by blocking-key occupancy.
     dropped_report = (*keys, bsz) for blocks over the cap — BOUNDED small
     by construction (only pathological blocks exceed 4096).  Guards every
-    intra-block self-join in this module (LSH buckets, k-means cells)
-    against a degenerate data region going quadratic.
+    intra-block self-join in this module (LSH buckets, simhash bands,
+    k-means cells) against a degenerate data region going quadratic.
 
-    Default SINGLE-EXCHANGE form: one shuffle by the blocking keys,
-    occupancy counted with a window over that same partitioning, split
-    persisted — so the downstream intra-block self-join (and the drop
-    report) reuse the exchange instead of re-shuffling.  Measured
-    interleaved at sf0.1 (bench/emb_cosine_probe.py): uncapped self-join
-    2.21 s, aggregate+anti-join form 3.82 s, this form 2.63 s.
-
-    ``skew_safe=True`` (VERDICT r4 item 5, the production escape hatch):
-    the window form buffers each block's rows in ONE WindowExec task
-    before the over-cap filter runs — the multi-million-row pathological
-    block the cap exists for is exactly the one that concentrates in a
-    single straggler.  The skew-safe form counts with a hash aggregate
-    instead: partial counts combine MAP-SIDE before the exchange, so no
-    task ever ingests a whole hot key (per-key reducer input = one thin
-    partial row per map task), the over-cap key set is tiny by
-    construction, and the kept split is a broadcast anti-join against it.
-    Costs one extra job over the exploded rows (~1.4× in-suite at sf0.1,
-    where no block is hot), which is why it is a flag and not the
-    default; at the 10⁸-duplicate design point it is the only form whose
-    max task input is bounded."""
-    if skew_safe:
-        df = _persist(df, fresh=False)
-        dropped = (df.groupBy(*keys).agg(F.count("*").alias("bsz"))
-                   .filter(F.col("bsz") > cap))
-        dropped = _persist(dropped, fresh=False)
-        kept = df.join(F.broadcast(dropped.select(*keys)), keys, "left_anti")
-        return kept, dropped
+    One shuffle by the blocking keys, occupancy counted with a window over
+    that same partitioning, split persisted — so the downstream
+    intra-block self-join (and the drop report) reuse the exchange
+    instead of re-shuffling.  Measured interleaved at sf0.1: uncapped
+    self-join 2.21 s, a map-side aggregate + broadcast anti-join form
+    3.82 s, this form 2.63 s."""
     sized = df.withColumn("bsz", F.count("*").over(W.partitionBy(*keys)))
     sized = _persist(sized, fresh=False)
     kept = sized.filter(F.col("bsz") <= cap).drop("bsz")
@@ -1128,13 +1113,7 @@ def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP,
     return kept, dropped
 
 
-def _bucket_capped(ex, cap: int = EMB_BUCKET_CAP, skew_safe: bool = False):
-    """(kept, dropped) over exploded band rows (vec_id, band_idx, bucket)."""
-    return _occupancy_capped(ex, ["band_idx", "bucket"], cap, skew_safe)
-
-
-def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP,
-                        skew_safe: bool = False):
+def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP):
     """Candidate near-dup pairs from banded sign-LSH rows ``b`` =
     (vec_id, bands, ...), hot-bucket capped.  Returns (cand, dropped):
     cand = distinct (vec_a < vec_b) pairs agreeing on any surviving band
@@ -1142,16 +1121,8 @@ def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP,
     cells (no-silent-caps: the caller surfaces it — empty at every sf
     fixture, so registry oracles are unaffected)."""
     ex = b.select("vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
-    kept, dropped = _bucket_capped(ex, cap, skew_safe)
-    a, y = kept.alias("a"), kept.alias("y")
-    cand = (
-        a.join(y, (F.col("a.band_idx") == F.col("y.band_idx"))
-               & (F.col("a.bucket") == F.col("y.bucket"))
-               & (F.col("a.vec_id") < F.col("y.vec_id")))
-        .select(F.col("a.vec_id").alias("vec_a"), F.col("y.vec_id").alias("vec_b"))
-        .distinct()
-    )
-    return cand, dropped
+    kept, dropped = _occupancy_capped(ex, ["band_idx", "bucket"], cap)
+    return _band_pairs(kept, "vec_id", "vec_a", "vec_b"), dropped
 
 
 def simhash_band_bits(n_est: int, min_bits: int = 15) -> int:
@@ -1923,9 +1894,8 @@ def _dedup_sinks(pairs, key: str, dropped, unit: str, output_dir: str,
 
 
 def dedup_embeddings_run(spark, input_path: str, output_dir: str,
-                         threshold_pct: int = 98, iterations: int = 20,
-                         cap: int = EMB_BUCKET_CAP,
-                         skew_safe: bool = False) -> dict:
+                         threshold_pct: int = 98,
+                         iterations: int = 20) -> dict:
     """Production embedding near-dup entry point (``cli.py
     --dedup-embeddings``): the derived-geometry seam exercised end to end.
 
@@ -1945,14 +1915,14 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
     ppb = emb_lsh_geometry(rows["rows_in"])
     b = _emb_signature(e.select("vec_id", F.expr(QUANT_S).alias("qv")), ppb)
     b = _persist(b)   # band explode + both verify re-joins
-    cand, dropped = emb_band_candidates(b, cap, skew_safe)
+    cand, dropped = emb_band_candidates(b)
     pairs = (_emb_verify(cand, b)
              .filter(F.col("cos_sim") * 100 >= threshold_pct)
              .select("vec_a", "vec_b", "cos_sim"))
     pairs = _persist(pairs)
     return {
         "mode": "dedup_embeddings", "ppb": ppb,
-        "bands": N_EMB_BANDS, "bucket_cap": cap, "skew_safe": skew_safe,
+        "bands": N_EMB_BANDS, "bucket_cap": EMB_BUCKET_CAP,
         **rows, **_dedup_sinks(pairs, "vec_id", dropped, "buckets",
                                output_dir, iterations),
         "wall_s": round(time.perf_counter() - t0, 3),
@@ -1960,9 +1930,7 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
 
 
 def dedup_texts_run(spark, input_path: str, output_dir: str,
-                    hamming_max: int = 3, iterations: int = 20,
-                    cap: int = EMB_BUCKET_CAP,
-                    skew_safe: bool = False) -> dict:
+                    hamming_max: int = 3, iterations: int = 20) -> dict:
     """Production simhash near-dup entry point (``cli.py --dedup-texts``):
     the `simhash_band_bits` seam exercised end to end over a (doc_id,
     text) parquet.
@@ -1994,14 +1962,13 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
                     simhash_bands_udf(bits)(F.col("text")).alias("bands"))
     sigs = _persist(sigs)   # band explode + both verify legs
     ex = sigs.select(
-        "doc_id", F.posexplode("bands").alias("band_idx", "band_bits"))
-    kept, dropped = _occupancy_capped(ex, ["band_idx", "band_bits"],
-                                      cap, skew_safe)
+        "doc_id", F.posexplode("bands").alias("band_idx", "bucket"))
+    kept, dropped = _occupancy_capped(ex, ["band_idx", "bucket"])
     pairs = _persist(_simhash_pairs(sigs, kept, hamming_max), fresh=False)
     return {
         "mode": "dedup_texts", "band_bits": bits,
         "signature_bits": 4 * bits, "hamming_max": hamming_max,
-        "band_cap": cap, "skew_safe": skew_safe,
+        "band_cap": EMB_BUCKET_CAP,
         **rows, **_dedup_sinks(pairs, "doc_id", dropped, "bands",
                                output_dir, iterations),
         "wall_s": round(time.perf_counter() - t0, 3),
@@ -2009,8 +1976,7 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
 
 
 def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
-                        threshold: float = 0.98,
-                        skew_safe: bool = False):
+                        threshold: float = 0.98):
     """Intra-cell >=``threshold`` cosine pairing over assigned rows ``m`` =
     (cell, vec_id, qv, nrm), hot-cell capped, verified with the exact
     Arrow dot (`emb_dot_udf`).  A dense embedding mode —
@@ -2018,8 +1984,8 @@ def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
     vectors in ONE k-means cell, going quadratic in the self-join below
     no matter what K is; cells over the cap are excluded from pairing and
     RETURNED as (cell, bsz) (the no-silent-caps rule: callers surface the
-    report).  Same guard as the sibling LSH path's _bucket_capped."""
-    kept, dropped = _occupancy_capped(m, ["cell"], cap, skew_safe)
+    report).  Same guard as the LSH and simhash band joins."""
+    kept, dropped = _occupancy_capped(m, ["cell"], cap)
     a = kept.select("cell", F.col("vec_id").alias("vec_a"),
                     F.col("qv").alias("qa"), F.col("nrm").alias("na"))
     y = kept.select("cell", F.col("vec_id").alias("vec_b"),
@@ -2032,11 +1998,12 @@ def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
     return pairs, dropped
 
 
+SEMANTIC_LLOYD_ROUNDS = 1   # Lloyd rounds of the production SemDeDup
+
+
 def dedup_semantic_run(spark, input_path: str, output_dir: str,
-                       threshold_pct: int = 98, lloyd_iters: int = 1,
-                       iterations: int = 20, target_cell_size: int = 1024,
-                       cap: int = EMB_BUCKET_CAP,
-                       skew_safe: bool = False) -> dict:
+                       threshold_pct: int = 98, iterations: int = 20,
+                       target_cell_size: int = 1024) -> dict:
     """Production SemDeDup entry point (``cli.py --dedup-semantic``,
     VERDICT r4 item 2): the ``kmeans_k`` derivation seam exercised end to
     end over a (vec_id, embedding array<float/double>) parquet.
@@ -2049,8 +2016,8 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
     cell occupancy stays ~target_cell_size regardless of n.
 
     Pipeline: ``_dedup_input`` → derived K → deterministic seeds (the K
-    lowest vec_ids) → ``lloyd_iters`` Lloyd rounds (`_lloyd` with the
-    Arrow argmax) → final assignment against the FINAL centroids →
+    lowest vec_ids) → ``SEMANTIC_LLOYD_ROUNDS`` Lloyd rounds (`_lloyd`
+    with the Arrow argmax) → final assignment against the FINAL centroids →
     hot-cell-capped intra-cell exact-cosine pairing → ``_dedup_sinks``.
     Derived K, expected occupancy, the drop and rejected counts and the
     component convergence metrics are all returned (no-silent-caps)."""
@@ -2067,18 +2034,17 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
                      F.expr("transform(qv, x -> CAST(x AS DOUBLE))")
                      .alias("cv")))
     _cents, assigned = _lloyd(
-        spark, data, seeds, lloyd_iters,
+        spark, data, seeds, SEMANTIC_LLOYD_ROUNDS,
         assign=lambda cents: kmeans_assign_udf(cents)(F.col("qv")))
     m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
-    pairs, dropped = semantic_cell_pairs(m, cap, threshold_pct / 100.0,
-                                         skew_safe)
+    pairs, dropped = semantic_cell_pairs(m, threshold=threshold_pct / 100.0)
     pairs = _persist(pairs.select("vec_a", "vec_b", "cos_sim"), fresh=False)
     return {
         "mode": "dedup_semantic", "k": k,
         "target_cell_size": target_cell_size,
         "expected_occupancy": (round(rows["rows_in"] / k, 1) if k else None),
-        "lloyd_iters": lloyd_iters, "cell_cap": cap,
-        "threshold_pct": threshold_pct, "skew_safe": skew_safe,
+        "lloyd_iters": SEMANTIC_LLOYD_ROUNDS, "cell_cap": EMB_BUCKET_CAP,
+        "threshold_pct": threshold_pct,
         **rows, **_dedup_sinks(pairs, "vec_id", dropped, "cells",
                                output_dir, iterations),
         "wall_s": round(time.perf_counter() - t0, 3),

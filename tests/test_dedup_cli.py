@@ -388,6 +388,43 @@ class TestMalformedRows:
         assert not os.path.exists(f"{out}/rejected")
 
 
+@pytest.mark.parametrize("mode, unit", [
+    ("--dedup-texts", "bands"), ("--dedup-embeddings", "buckets")])
+def test_hot_block_dropped_and_reported(spark, tmp_path, capsys, mode, unit):
+    """EMB_BUCKET_CAP + 1 identical rows share their block in every band,
+    so each of the 4 bands reports one dropped block and the hot rows
+    pair with nothing; exact copies among a few cold rows are still
+    paired, and nothing else is."""
+    from pdf_extractor_spark.corpus import EMB_BUCKET_CAP
+    hot_n = EMB_BUCKET_CAP + 1
+    rng = random.Random(5)
+    if mode == "--dedup-texts":
+        schema, a, b = "doc_id long, text string", "doc_a", "doc_b"
+        hot = "the same boilerplate page repeated across the whole crawl"
+        cold = [" ".join(f"w{rng.randrange(10**6)}" for _ in range(20))
+                for _ in range(5)]
+    else:
+        schema, a, b = "vec_id long, embedding array<double>", "vec_a", "vec_b"
+        hot = _random_vec(rng)
+        cold = [_random_vec(rng) for _ in range(5)]
+    rows = ([(i, hot) for i in range(hot_n)]
+            + [(10_000 + i, v) for i, v in enumerate(cold)]
+            + [(20_000 + i, v) for i, v in enumerate(cold)])
+    inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+    spark.createDataFrame(rows, schema).write.parquet(inp)
+
+    from pdf_extractor_spark.cli import main
+    assert main([mode, inp, "--output", out]) == 0
+    metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    dropped = spark.read.parquet(f"{out}/dropped_{unit}").collect()
+    assert metrics[f"dropped_hot_{unit}"] == len(dropped) == 4
+    assert all(r.bsz >= hot_n for r in dropped)
+    got = {(r[a], r[b]) for r in spark.read.parquet(f"{out}/pairs").collect()}
+    assert not any(x < hot_n or y < hot_n for x, y in got)
+    assert got == {(10_000 + i, 20_000 + i) for i in range(5)}
+    assert metrics["pairs"] == metrics["non_canonical"] == 5
+
+
 def test_hamming_max_beyond_pigeonhole_is_usage_error(capsys):
     """--hamming-max above the 4-band pigeonhole bound is rejected by the
     argument parser (exit 2) before any session starts."""

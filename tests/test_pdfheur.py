@@ -195,11 +195,6 @@ class TestMerge:
 class TestTitle:
     # extractor.py:515-573
 
-    def test_keyword_concat_fallback(self):
-        bs = [blk("intro text here that is long enough to not be a candidate" * 3),
-              blk("REQUEST FOR QUOTES"), blk("PROPOSAL DETAILS")]
-        assert H.extract_title(bs) == "REQUEST FOR QUOTES PROPOSAL DETAILS"
-
     def test_fallback_tuple_sort_desc(self):
         # (size, text) reverse sort: size desc then text desc (extractor.py:570)
         bs = [blk("alpha", size=12.0), blk("zeta", size=12.0), blk("small", size=9.0)]

@@ -151,13 +151,13 @@ class TestLshGeometry:
         for n in (10**6, 10**9):
             assert n * n / 2 ** simhash_band_bits(n) <= n
 
-    def test_hot_bucket_capped_and_reported(self, spark):
+    def test_hot_bucket_dropped_and_reported(self, spark):
         """Adversarial identical-vector fixture: 40 copies of one vector
         land in the same (band, bucket) cell in EVERY band.  With cap=10
         the cell must be excluded (kept occupancy <= cap), its exclusion
         REPORTED, and unrelated vectors' candidates unaffected."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _bucket_capped, emb_band_candidates, PPB_DEDUP,
+            QUANT_S, _occupancy_capped, emb_band_candidates, PPB_DEDUP,
             N_EMB_BANDS)
         from sig_reference import _bands_array_s
         hot = [(i, [0.5] * 64) for i in range(40)]
@@ -169,7 +169,7 @@ class TestLshGeometry:
              .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))
         ex = b.select(
             "vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
-        kept, dropped = _bucket_capped(ex, cap=10)
+        kept, dropped = _occupancy_capped(ex, ["band_idx", "bucket"], cap=10)
         drop_rows = dropped.collect()
         assert drop_rows, "hot cell must be reported, not silently kept"
         # every reported cell contains at least the 40 identical vectors
@@ -230,14 +230,14 @@ class TestLshGeometry:
         """At the default cap the sf fixture drops nothing — the guard is
         provably inert where the DuckDB oracle pins exact pairs."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _bucket_capped, PPB_DEDUP)
+            QUANT_S, _occupancy_capped, PPB_DEDUP)
         from sig_reference import _bands_array_s
         e = (spark.read.parquet(f"{SF_DIR}/embeddings.parquet")
              .select("vec_id", F.expr(QUANT_S).alias("qv"))
              .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))
         ex = e.select(
             "vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
-        _, dropped = _bucket_capped(ex)
+        _, dropped = _occupancy_capped(ex, ["band_idx", "bucket"])
         assert dropped.count() == 0
 
 
