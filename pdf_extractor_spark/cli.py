@@ -86,6 +86,15 @@ def _run_selection(spark, input_path: str, config_path: str, out_path: str,
     }
 
 
+def _rounds(value: str) -> int:
+    """argparse type of ``--cc-iterations``: an int of at least 1 (the
+    first component round is the seed, so there is always one)."""
+    n = int(value)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {n}")
+    return n
+
+
 def main(argv: list[str] | None = None) -> int:
     from .corpus import SIMHASH_BANDS
 
@@ -123,18 +132,19 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--dedup-embeddings", default=None, metavar="PARQUET",
                     help="embedding near-dup mode: input parquet of "
                          "(vec_id, embedding array<float>); corpus size is "
-                         "estimated from the parquet footers and the LSH "
-                         "band geometry DERIVED from it (emb_lsh_geometry), "
-                         "then banding -> candidates (a block over 4096 rows "
-                         "is reported in dropped_*/, not paired) -> exact "
+                         "counted by the malformed-row aggregate and the "
+                         "LSH band geometry DERIVED from it "
+                         "(emb_lsh_geometry), then banding -> candidates "
+                         "(a block over 4096 rows is reported in "
+                         "dropped_*/, not paired) -> exact "
                          "cosine verify -> components -> keep-canonical "
                          "decisions land under --output")
     ap.add_argument("--threshold-pct", type=int, default=98,
                     help="dedup cosine threshold x100 (default 98)")
     ap.add_argument("--dedup-texts", default=None, metavar="PARQUET",
                     help="simhash near-dup mode: input parquet of "
-                         "(doc_id, text); corpus size is estimated from "
-                         "the parquet footers and the pigeonhole band "
+                         "(doc_id, text); corpus size is counted by the "
+                         "malformed-row aggregate and the pigeonhole band "
                          "width DERIVED from it (simhash_band_bits), then "
                          "banding -> capped candidates -> exact hamming "
                          "verify -> components -> keep-canonical "
@@ -147,20 +157,22 @@ def main(argv: list[str] | None = None) -> int:
                          "values would silently lose recall)")
     ap.add_argument("--dedup-semantic", default=None, metavar="PARQUET",
                     help="SemDeDup mode: input parquet of (vec_id, "
-                         "embedding); corpus size is estimated from the "
-                         "parquet footers and the k-means cluster count "
-                         "DERIVED from it (kmeans_k ~ n/target_cell_size), "
-                         "then Lloyd rounds -> capped intra-cell cosine "
+                         "embedding); corpus size is counted by the "
+                         "malformed-row aggregate and the k-means cluster "
+                         "count DERIVED from it (kmeans_k ~ "
+                         "n/target_cell_size), then Lloyd rounds -> "
+                         "capped intra-cell cosine "
                          "pairing -> components -> keep-canonical "
                          "decisions land under --output")
     ap.add_argument("--target-cell-size", type=int, default=1024,
                     help="SemDeDup expected vectors per k-means cell "
                          "(drives the derived K; default 1024)")
-    ap.add_argument("--cc-iterations", type=int, default=20,
+    ap.add_argument("--cc-iterations", type=_rounds, default=20,
                     help="max min-label propagation rounds for the dedup "
-                         "component labeling; the run iterates to fixpoint "
-                         "inside this budget and surfaces cc_converged / "
-                         "cc_residual in the metrics (default 20)")
+                         "component labeling, at least 1; the run iterates "
+                         "to fixpoint inside this budget and surfaces "
+                         "cc_converged / cc_residual in the metrics "
+                         "(default 20)")
     ap.add_argument("--grade", default=None,
                     help="existing generated record JSON to grade against "
                          "--golden; report printed to stdout and written "

@@ -516,9 +516,8 @@ def extract_title_with_merging(blocks: list[dict]) -> str:
             cand["detected_level"] = 1
             title_candidates.append(cand)
     if title_candidates:
-        merged = merge_consecutive_headings(title_candidates)
-        if merged:
-            return merged[0]["text"]
+        # a non-empty candidate list merges to at least one heading
+        return merge_consecutive_headings(title_candidates)[0]["text"]
     return extract_title(blocks)
 
 

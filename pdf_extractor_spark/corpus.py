@@ -41,7 +41,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession, Window as W
+from pyspark.sql import Observation, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from .queries import register, t
@@ -99,9 +99,12 @@ _PERSISTED: list = []
 
 def _persist(df, fresh: bool = True):
     """Persist ``df``; ``fresh=True`` (a query's FIRST persist) first drains
-    every cache the previous registry query left behind.  Pass
-    ``fresh=False`` for additional persists inside the same query (e.g.
-    per-iteration state of an iterative algorithm).  Entries left behind
+    every cache the previous registry query left behind.  Only a query's
+    first persist may drain: every later persist in the same query passes
+    ``fresh=False`` (e.g. per-iteration state of an iterative algorithm),
+    because caches are filled lazily, so a second draining persist drops
+    the query's earlier caches before any job has read them and every
+    reader recomputes what they were meant to hold.  Entries left behind
     by a session that has since stopped are discarded without
     ``unpersist`` — their cache died with that session, and calling into
     a stopped context raises."""
@@ -806,30 +809,39 @@ def min_label_components_fixpoint(edges, max_rounds: int = 20):
     the ContextCleaner as Python drops the reference, so steady-state
     storage is a handful of (node, label) tables, not ``max_rounds``.
 
+    Round 1 is seeded straight from the edges: every node has an edge
+    (both directions are present), so one hop over the identity labels is
+    ``least(src, min(dst))`` per ``src`` — one aggregate, no identity-label
+    table.  One sum over the round-1 state gives both the identity sum
+    (Σnode) and the round-1 sum (Σlabel).
+
     Returns ``(labels, info)`` where info = {"cc_rounds", "cc_converged",
     "cc_residual"}; residual = changed-label count of the LAST round
     (0 when converged, computed with one thin node-keyed join only on the
     non-converged bail path).  Callers must surface ``cc_converged`` in
-    their metrics (no-silent-caps)."""
+    their metrics (no-silent-caps).  ``max_rounds`` must be at least 1:
+    the seed is round 1."""
+    if max_rounds < 1:
+        raise ValueError(f"max_rounds must be >= 1, got {max_rounds}")
     edges = _persist(edges, fresh=False)
-    labels = (edges.select(F.col("src").alias("node")).distinct()
-              .withColumn("label", F.col("node"))
+
+    def _sums(lab, *cols):
+        row = lab.agg(*[F.sum(F.col(c).cast("decimal(38,0)"))
+                        for c in cols]).first()
+        return [v or 0 for v in row]
+
+    labels = (edges.groupBy("src")
+              .agg(F.least(F.col("src"), F.min("dst")).alias("label"))
+              .withColumnRenamed("src", "node")
               .localCheckpoint(eager=True))
-
-    def _label_sum(lab):
-        return (lab.agg(F.sum(F.col("label").cast("decimal(38,0)"))
-                        .alias("s")).first()["s"]) or 0
-
-    prev_sum = _label_sum(labels)
-    rounds = 0
-    converged = False
-    for rounds in range(1, max_rounds + 1):
-        new = _minlabel_hop(labels, edges).localCheckpoint(eager=True)
-        new_sum = _label_sum(new)
-        labels = new
-        if new_sum == prev_sum:
-            converged = True
-            break
+    node_sum, prev_sum = _sums(labels, "node", "label")
+    rounds = 1
+    converged = prev_sum == node_sum
+    while not converged and rounds < max_rounds:
+        rounds += 1
+        labels = _minlabel_hop(labels, edges).localCheckpoint(eager=True)
+        (new_sum,) = _sums(labels, "label")
+        converged = new_sum == prev_sum
         prev_sum = new_sum
     residual = 0
     if not converged:
@@ -1082,8 +1094,9 @@ def emb_lsh_geometry(n_est: int, target_occupancy: int = 64,
     the static oracles stay valid, and grows as ceil(log2(n/occ)) beyond:
     n=10⁹ → 24 planes → 16.7M buckets/band.  The registry query pins the
     sf geometry because its DuckDB oracle is a static string; a production
-    call sites df.count() (parquet-footer cheap) or a catalog row-count
-    estimate here and passes the result to the band builders.  The same
+    call site passes the input row count (``rows_in`` of ``_dedup_input``,
+    taken from the malformed-row aggregate that already scans every row)
+    or a catalog row-count estimate here.  The same
     rule governs the simhash band split (dedup_simhash_blocked docstring):
     band space must outgrow the corpus."""
     import math
@@ -1244,7 +1257,16 @@ def emb_dot_udf():
     embedding dedup verify (candidates ~ 100x rows at the derived
     occupancy).  int64 in, int64 out, exact — drop-in for F.expr(DOT_S).
     Verify callers name its inputs ``qa``/``qb``: profiles tell the
-    verify UDF from the signature UDFs by those column names."""
+    verify UDF from the signature UDFs by those column names.
+
+    The function is exact and deterministic, but it is marked
+    nondeterministic so the optimizer evaluates it once per row.  A
+    threshold filter on ``cos_sim`` is otherwise pushed below the
+    projection that computes ``dot``, and since a deterministic UDF may
+    be copied, the dot then runs twice: in the filter and again in the
+    projection, as two chained ``ArrowEvalPython`` nodes of one stage.
+    A nondeterministic expression is neither copied nor moved, so the
+    filter stays above the one projection."""
     import pandas as pd
     from pyspark.sql.types import LongType
 
@@ -1254,7 +1276,7 @@ def emb_dot_udf():
         b = np.asarray(qb.tolist(), dtype=np.int64)
         return pd.Series((a * b).sum(axis=1))
 
-    return F.pandas_udf(_batch, LongType())
+    return F.pandas_udf(_batch, LongType()).asNondeterministic()
 
 
 def _emb_signature(q, ppb: int):
@@ -1810,13 +1832,6 @@ def dedup_semantic(spark, sf_dir):
             .agg(F.max("cos_sim").alias("max_sim")))
 
 
-def estimate_parquet_rows(spark, path: str) -> int:
-    """Row count of a parquet source from file metadata: Spark compiles a
-    bare count() over parquet to a metadata-only scan (no column data is
-    decoded), so this is footer-cheap at any corpus size."""
-    return spark.read.parquet(path).count()
-
-
 # Malformed-row rules of the production dedup inputs (reason, or NULL for a
 # well-formed row).  A word-less text is null or all spaces: words split on
 # ' ' with empties dropped, and trim strips exactly the ' ' character.
@@ -1827,23 +1842,24 @@ TEXT_REJECT_S = "CASE WHEN text IS NULL OR trim(text) = '' THEN 'no_words' END"
 
 def _dedup_input(spark, input_path: str, output_dir: str, cols: tuple,
                  reason: str):
-    """The shared input step of the production dedup runs.  ``rows_in``
-    is the parquet-footer row count (metadata only) the caller derives
-    its geometry from.  Malformed rows are split off before a signature
-    engine sees them (a bad embedding crashes the Arrow UDFs; a
-    word-less text has no signature): ``reason`` is a SQL expression
-    giving a row's reject reason, NULL when well-formed.  Rejected rows
-    land with a ``reason`` column in ``{output_dir}/rejected`` — written
-    only when a row is rejected; a stale one from an earlier run is
-    removed — and one aggregate counts rows per reason, so the metrics
-    show ``rows_in == kept + rejected``.  Returns (kept rows of
-    ``cols``, metrics)."""
+    """The shared input step of the production dedup runs.  Malformed
+    rows are split off before a signature engine sees them (a bad
+    embedding crashes the Arrow UDFs; a word-less text has no
+    signature): ``reason`` is a SQL expression giving a row's reject
+    reason, NULL when well-formed.  One aggregate counts rows per
+    reason; ``rows_in``, the row count the caller derives its geometry
+    from, is the sum of those counts, so no separate count job runs.
+    Rejected rows land with a ``reason`` column in
+    ``{output_dir}/rejected`` — written only when a row is rejected; a
+    stale one from an earlier run is removed — and the metrics show
+    ``rows_in == kept + rejected``.  Returns (kept rows of ``cols``,
+    metrics)."""
     from .sources.catalog import fs_delete
-    rows_in = estimate_parquet_rows(spark, input_path)
     tagged = (spark.read.parquet(input_path).select(*cols)
               .withColumn("reason", F.expr(reason)))
     by_reason = {r["reason"]: r["count"]
                  for r in tagged.groupBy("reason").count().collect()}
+    rows_in = sum(by_reason.values())
     kept = by_reason.pop(None, 0)
     path = f"{output_dir}/rejected"
     if by_reason:
@@ -1862,15 +1878,15 @@ def _dedup_sinks(pairs, key: str, dropped, unit: str, output_dir: str,
     """The shared tail of the production dedup runs: the pair graph
     (``pairs``' first two columns are the pair ids) -> fixpoint min-label
     components -> keep-canonical decisions keyed by ``key``, then the
-    pairs / decisions / ``dropped_{unit}`` sinks, counted from the
-    written files.
+    pairs / decisions / ``dropped_{unit}`` sinks.  Their counts are
+    observed while each sink is written (``DataFrame.observe``), not
+    re-read from the written files.
 
     ``iterations`` bounds min-label propagation (``--cc-iterations``);
     labeling iterates TO FIXPOINT inside that budget and the metrics
     carry ``cc_rounds`` / ``cc_converged`` / ``cc_residual`` — a
     dup-chain whose diameter exceeds the budget is DETECTED and
     surfaced, never silently split (VERDICT r4 item 1)."""
-    spark = pairs.sparkSession
     a, b = pairs.columns[:2]
     edges = (pairs.select(F.col(a).alias("src"), F.col(b).alias("dst"))
              .unionByName(pairs.select(F.col(b).alias("src"),
@@ -1880,15 +1896,19 @@ def _dedup_sinks(pairs, key: str, dropped, unit: str, output_dir: str,
                               F.col("label").alias("component"),
                               (F.col("label") == F.col("node"))
                               .alias("is_canonical"))
-    sinks = {"pairs": pairs, "decisions": decisions,
-             f"dropped_{unit}": dropped}
-    for name, df in sinks.items():
-        df.write.mode("overwrite").parquet(f"{output_dir}/{name}")
-    out = {name: spark.read.parquet(f"{output_dir}/{name}") for name in sinks}
+
+    def write(name, df, n):
+        obs = Observation(name)
+        (df.observe(obs, n.alias("n"))
+         .write.mode("overwrite").parquet(f"{output_dir}/{name}"))
+        return obs.get["n"]
+
+    rows = F.count(F.lit(1))
     return {
-        f"dropped_hot_{unit}": out[f"dropped_{unit}"].count(),
-        "pairs": out["pairs"].count(),
-        "non_canonical": out["decisions"].filter(~F.col("is_canonical")).count(),
+        "pairs": write("pairs", pairs, rows),
+        "non_canonical": write("decisions", decisions,
+                               F.count_if(~F.col("is_canonical"))),
+        f"dropped_hot_{unit}": write(f"dropped_{unit}", dropped, rows),
         **cc,
     }
 
@@ -1901,7 +1921,7 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
 
     Unlike the registry query (which pins the sf geometry because its
     DuckDB oracle is a static string), this path derives planes-per-band
-    from the footer row count via ``emb_lsh_geometry`` so bucket space
+    from the input row count via ``emb_lsh_geometry`` so bucket space
     grows with n, then runs the shared Arrow signature and verify steps
     of ``dedup_embedding_cosine`` around hot-bucket-capped candidate
     generation.  Input and tail are the shared ``_dedup_input`` /
@@ -1919,7 +1939,7 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
     pairs = (_emb_verify(cand, b)
              .filter(F.col("cos_sim") * 100 >= threshold_pct)
              .select("vec_a", "vec_b", "cos_sim"))
-    pairs = _persist(pairs)
+    pairs = _persist(pairs, fresh=False)   # edges + the pairs sink
     return {
         "mode": "dedup_embeddings", "ppb": ppb,
         "bands": N_EMB_BANDS, "bucket_cap": EMB_BUCKET_CAP,
@@ -1935,7 +1955,7 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
     the `simhash_band_bits` seam exercised end to end over a (doc_id,
     text) parquet.
 
-    The band width is DERIVED from the footer row count, so band space
+    The band width is DERIVED from the input row count, so band space
     outgrows the corpus (expected random collisions per band n²/2^bits
     <= n).  Pipeline: ``_dedup_input`` (word-less texts quarantined) →
     4-band pigeonhole simhash (`simhash_bands_udf`) → hot-band-capped
@@ -2011,7 +2031,7 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
     The registry's ``dedup_semantic`` pins K at the sf default because
     its DuckDB oracle is a static string; at real corpus sizes K=8 puts
     every cell over the hot-cell cap and the guard would drop the whole
-    corpus.  Here K is DERIVED from the footer row count (K ~ n /
+    corpus.  Here K is DERIVED from the input row count (K ~ n /
     target_cell_size, broadcast-capped — see ``kmeans_k``), so expected
     cell occupancy stays ~target_cell_size regardless of n.
 

@@ -62,6 +62,37 @@ def test_two_components_stay_separate(spark):
     assert cc["cc_converged"] is True
 
 
+def _both_ways(spark, pairs):
+    return spark.createDataFrame(
+        pairs + [(b, a) for a, b in pairs], "src long, dst long")
+
+
+def test_empty_edges_give_no_labels_in_one_round(spark):
+    from pdf_extractor_spark.corpus import min_label_components_fixpoint
+    labels, cc = min_label_components_fixpoint(_both_ways(spark, []))
+    assert labels.collect() == []
+    assert cc == {"cc_rounds": 1, "cc_converged": True, "cc_residual": 0}
+
+
+def test_one_round_over_a_three_chain(spark):
+    """Chain 1 - 2 - 3 with a one-round budget: round 1 takes each node's
+    minimum over itself and its neighbours, and one label (node 3's) is
+    still one hop short."""
+    from pdf_extractor_spark.corpus import min_label_components_fixpoint
+    labels, cc = min_label_components_fixpoint(
+        _both_ways(spark, [(1, 2), (2, 3)]), max_rounds=1)
+    assert {r.node: r.label for r in labels.collect()} == {1: 1, 2: 1, 3: 2}
+    assert cc == {"cc_rounds": 1, "cc_converged": False, "cc_residual": 1}
+
+
+@pytest.mark.parametrize("rounds", [0, -1])
+def test_budget_below_one_round_raises(spark, rounds):
+    from pdf_extractor_spark.corpus import min_label_components_fixpoint
+    with pytest.raises(ValueError, match="max_rounds"):
+        min_label_components_fixpoint(_both_ways(spark, [(1, 2)]),
+                                      max_rounds=rounds)
+
+
 def test_hamming_max_beyond_pigeonhole_raises(spark, tmp_path):
     """ADVICE r4 #2: the 4-band pigeonhole only guarantees candidate
     recall for hamming <= 3; a larger threshold must raise, not silently

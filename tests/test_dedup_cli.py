@@ -1,6 +1,6 @@
 """Production derived-geometry dedup entry point (``cli.py
---dedup-embeddings``, VERDICT r3 item 4): the parquet-footer row estimate
-drives ``emb_lsh_geometry`` end to end, and the dup decisions match a
+--dedup-embeddings``, VERDICT r3 item 4): the input row count drives
+``emb_lsh_geometry`` end to end, and the dup decisions match a
 brute-force all-pairs cosine oracle on a small slice."""
 
 import json
@@ -13,7 +13,7 @@ import pyspark.sql.functions as F
 import pytest
 
 from pdf_extractor_spark.corpus import (
-    COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry, estimate_parquet_rows)
+    COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -29,7 +29,7 @@ def test_geometry_derived_from_million_row_footer(spark, tmp_path):
         F.expr("transform(sequence(1, 64), i -> CAST(0.01 * i AS FLOAT))")
         .alias("embedding"))
      .write.parquet(p))
-    n = estimate_parquet_rows(spark, p)
+    n = spark.read.parquet(p).count()
     assert n == 10**6
     ppb = emb_lsh_geometry(n)
     assert ppb == 14
@@ -147,13 +147,12 @@ class TestDedupTexts:
 
     def test_band_width_derives_from_footer(self, spark, tmp_path):
         """10^6-row footer -> 20-bit bands (> the 15-bit sf default)."""
-        from pdf_extractor_spark.corpus import (estimate_parquet_rows,
-                                                simhash_band_bits)
+        from pdf_extractor_spark.corpus import simhash_band_bits
         p = str(tmp_path / "txt1m")
         (spark.range(10**6)
          .select(F.col("id").alias("doc_id"), F.lit("x y z").alias("text"))
          .write.parquet(p))
-        assert simhash_band_bits(estimate_parquet_rows(spark, p)) == 20
+        assert simhash_band_bits(spark.read.parquet(p).count()) == 20
 
     def test_wide_bands_double_digest_recall(self, spark, tmp_path, capsys):
         """bits > 32 switches to the doubled word digest (signature wider
@@ -237,15 +236,14 @@ class TestDedupSemantic:
         assert kmeans_k(0) == K_IVF
 
     def test_k_derives_from_million_row_footer(self, spark, tmp_path):
-        from pdf_extractor_spark.corpus import (estimate_parquet_rows,
-                                                kmeans_k)
+        from pdf_extractor_spark.corpus import kmeans_k
         p = str(tmp_path / "emb1m")
         (spark.range(10**6).select(
             F.col("id").alias("vec_id"),
             F.expr("transform(sequence(1, 64), i -> CAST(0.01 AS FLOAT))")
             .alias("embedding"))
          .write.parquet(p))
-        assert kmeans_k(estimate_parquet_rows(spark, p)) == 977
+        assert kmeans_k(spark.read.parquet(p).count()) == 977
 
     def test_cli_decisions_match_bruteforce(self, spark, tmp_path, capsys):
         """Engineered input: sf0.001 embeddings ∪ EXACT copies of
@@ -434,6 +432,18 @@ def test_hamming_max_beyond_pigeonhole_is_usage_error(capsys):
               "--hamming-max", "4"])
     assert exc.value.code == 2
     assert "--hamming-max" in capsys.readouterr().err
+
+
+@pytest.mark.parametrize("rounds", ["0", "-3"])
+def test_cc_iterations_below_one_is_usage_error(capsys, rounds):
+    """--cc-iterations below 1 is rejected by the argument parser (exit
+    2): the first component round is the seed, so there is always one."""
+    from pdf_extractor_spark.cli import main
+    with pytest.raises(SystemExit) as exc:
+        main(["--dedup-embeddings", "unused.parquet", "--output", "unused",
+              "--cc-iterations", rounds])
+    assert exc.value.code == 2
+    assert "--cc-iterations" in capsys.readouterr().err
 
 
 _RESTART_SCRIPT = """

@@ -4,6 +4,8 @@ show up in `.explain` output, or a refactor silently regressed them.
 * extraction: exactly ONE exchange (the AQE rebalance) feeding one
   MapInArrow — no sampling pass, no extra shuffle;
 * a fresh-dir extraction run is exactly four SQL executions;
+* a production embedding dedup pass runs each Arrow UDF once per row and
+  makes 4 + 2 per component round SQL executions;
 * dimension joins broadcast instead of shuffling the fact side;
 * filters and column pruning reach the parquet scan.
 """
@@ -12,6 +14,7 @@ import contextlib
 import io
 import re
 
+import pytest
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.operators.extraction import extract_operator
@@ -59,6 +62,91 @@ def test_extraction_run_is_four_executions(spark, corpus_path, tmp_path):
     before = _last_execution_id(spark)
     pipeline.run_extraction(spark, corpus_path, str(tmp_path / "out"))
     assert _last_execution_id(spark) - before == 4
+
+
+def _arrow_eval_nodes(spark, after: int) -> dict:
+    """{execution id: [(desc, output rows)]} of the ArrowEvalPython nodes
+    of every SQL execution after ``after``.  A cached plan drawn under
+    two scans shares its accumulators and is listed once; a cached plan
+    that a later execution only reads reports 0 rows there."""
+    _last_execution_id(spark)   # drain the listener bus
+    store = spark._jsparkSession.sharedState().statusStore()
+    it = store.executionsList().iterator()
+    out = {}
+    while it.hasNext():
+        eid = it.next().executionId()
+        if eid <= after:
+            continue
+        values, seen, nodes = store.executionMetrics(eid), set(), []
+        graph = store.planGraph(eid).allNodes().iterator()
+        while graph.hasNext():
+            n = graph.next()
+            if n.name() != "ArrowEvalPython":
+                continue
+            rows = None
+            ms = n.metrics().iterator()
+            while ms.hasNext():
+                m = ms.next()
+                if m.name() == "number of output rows":
+                    acc = m.accumulatorId()
+                    v = values.get(acc)
+                    if acc not in seen:
+                        seen.add(acc)
+                        rows = int(v.get().replace(",", "")) \
+                            if v.isDefined() else 0
+            if rows is not None:
+                nodes.append((n.desc(), rows))
+        out[eid] = nodes
+    return out
+
+
+@pytest.fixture(scope="module")
+def dedup_pass(spark, tmp_path_factory):
+    """One ``dedup_embeddings_run`` over 500 random vectors plus 100 exact
+    copies (no malformed row): (metrics, ArrowEvalPython nodes per SQL
+    execution of the run)."""
+    import random
+
+    from pdf_extractor_spark.corpus import dedup_embeddings_run
+    rng = random.Random(7)
+    base = [[rng.gauss(0.0, 1.0) for _ in range(64)] for _ in range(500)]
+    rows = ([(i, v) for i, v in enumerate(base)]
+            + [(1000 + i, base[i]) for i in range(0, 500, 5)])
+    d = tmp_path_factory.mktemp("dedup_pass")
+    spark.createDataFrame(rows, "vec_id long, embedding array<double>") \
+        .write.parquet(str(d / "in"))
+    before = _last_execution_id(spark)
+    m = dedup_embeddings_run(spark, str(d / "in"), str(d / "out"))
+    assert (m["kept"], m["rejected"], m["pairs"]) == (600, 0, 100)
+    return m, _arrow_eval_nodes(spark, before)
+
+
+def test_dedup_signature_udf_runs_once_per_row(dedup_pass):
+    """The band-signature UDF is cached with the signature frame: its
+    nodes output every kept row once over the whole run, not once per
+    reader of the frame."""
+    m, execs = dedup_pass
+    sig = sum(rows for nodes in execs.values() for desc, rows in nodes
+              if "qa#" not in desc)
+    assert sig == m["kept"]
+
+
+def test_dedup_verify_dot_is_one_node_per_plan(dedup_pass):
+    """The verify dot (the UDF reading ``qa``/``qb``) is one
+    ArrowEvalPython node in every plan holding it: the threshold filter
+    is not pushed below it, which would copy it into a second node."""
+    _m, execs = dedup_pass
+    per_plan = [sum("qa#" in desc for desc, _rows in nodes)
+                for nodes in execs.values()]
+    assert set(per_plan) - {0} == {1}, per_plan
+
+
+def test_dedup_run_is_four_plus_two_per_round_executions(dedup_pass):
+    """Input aggregate, two executions per component round (checkpoint and
+    label sum) and the three sink writes, whose counts are observed as
+    they are written."""
+    m, execs = dedup_pass
+    assert len(execs) == 4 + 2 * m["cc_rounds"]
 
 
 def test_q03_broadcasts_dimension(spark):
