@@ -14,6 +14,11 @@ Scale design (the point is 100 TB, not 500 rows):
   key), the inverted-index n-gram variant blocks by shared shingle, and
   embedding near-dup blocks by random-hyperplane bucket.  Candidate
   verification (exact Jaccard / exact cosine) runs only inside blocks.
+  The MinHash-LSH family has one core — ``minhash_signatures`` →
+  ``minhash_bands`` → ``_band_pairs`` (self-join) or ``_band_probe``
+  (batch vs stored index) → ``_jaccard_verified`` — shared by
+  ``dedup_minhash_lsh``, ``dedup_incremental`` and streaming/dedup.py;
+  ``dedup_ngram_jaccard`` shares the verify.
 * **All hashing is md5-based and engine-portable** — the same bytes hash
   identically on a 1000-executor cluster and in the DuckDB oracle, so
   blocking decisions (hence results) are reproducible, not
@@ -91,7 +96,7 @@ N_MINHASH = 8      # minhash lanes (two-digest variant: 32-bit md5 slices)
 N_BANDS = 4        # LSH bands of 2 lanes each (64-bit band keys)
 
 # Dedup queries persist their signature tables (referenced 3-4× in one
-# plan).  The registry shares one SparkSession across 35 queries, so
+# plan).  The registry shares one SparkSession across 50 queries, so
 # caches must not accumulate: each new persist first drains the previous
 # ones — the leak is bounded to one query's working set.
 _PERSISTED: list = []
@@ -157,23 +162,22 @@ _LANES8 = (f"transform(sequence(0, {N_MINHASH - 1}), j -> "
 
 _HS_OVER_SH = "transform(sh, x -> concat(md5(x), md5(concat('#', x))))"
 
-MINHASH_SIG_S = let1(
-    SHINGLES_FROM_TEXT_S, "sh",
-    let1(_HS_OVER_SH, "hs",
-         let1(_LANES8, "ln",
-              "named_struct("
-              "'n_shingles', size(sh), 'mh0', ln[0], 'mh1', ln[1], "
-              "'band0', concat(ln[0], ln[1]), 'band1', concat(ln[2], ln[3]), "
-              "'band2', concat(ln[4], ln[5]), 'band3', concat(ln[6], ln[7]))")))
+def _over_lanes_s(body: str) -> str:
+    """``body`` over the let-bound shingles ``sh``, their digests ``hs``
+    and the 8 lane mins ``ln``, each evaluated once per row from text."""
+    return let1(SHINGLES_FROM_TEXT_S, "sh",
+                let1(_HS_OVER_SH, "hs", let1(_LANES8, "ln", body)))
 
-MINHASH_LSH_SIG_S = let1(
-    SHINGLES_FROM_TEXT_S, "sh",
-    let1(_HS_OVER_SH, "hs",
-         let1(_LANES8, "ln",
-              "named_struct("
-              "'shset', array_distinct(sh), "
-              "'bands', array(concat(ln[0], ln[1]), concat(ln[2], ln[3]), "
-              "concat(ln[4], ln[5]), concat(ln[6], ln[7])))")))
+
+MINHASH_SIG_S = _over_lanes_s(
+    "named_struct('n_shingles', size(sh), 'mh0', ln[0], 'mh1', ln[1], "
+    "'band0', concat(ln[0], ln[1]), 'band1', concat(ln[2], ln[3]), "
+    "'band2', concat(ln[4], ln[5]), 'band3', concat(ln[6], ln[7]))")
+
+MINHASH_LSH_SIG_S = _over_lanes_s(
+    "named_struct('shset', array_distinct(sh), "
+    "'bands', array(concat(ln[0], ln[1]), concat(ln[2], ln[3]), "
+    "concat(ln[4], ln[5]), concat(ln[6], ln[7])))")
 
 
 # near-dup document working set: every doc_id % 7 == 0 gets a copy
@@ -250,8 +254,9 @@ def dedup_exact(spark, sf_dir):
            {_band_d(2)} AS band2, {_band_d(3)} AS band3
     FROM hashed
     """,
-    doc="MinHash over word-3-gram shingles (one-hash variant: 8 16-bit "
-        "md5-slice lanes) + 4-band LSH keys; per-row narrow compute, no shuffle",
+    doc="MinHash over word-3-gram shingles (two-digest variant: each "
+        "shingle hashed twice, 8 32-bit md5-slice lanes) + 4-band LSH keys "
+        "of 64 bits; per-row narrow compute, no shuffle",
 )
 def dedup_minhash_signatures(spark, sf_dir):
     # cheap pre-filter (≥3 words ⟺ ≥1 shingle) BEFORE the signature
@@ -261,6 +266,55 @@ def dedup_minhash_signatures(spark, sf_dir):
             .filter(F.expr(f"size({WORDS_S}) >= 3"))
             .select("doc_id", F.expr(MINHASH_SIG_S).alias("sig"))
             .select("doc_id", "sig.*"))
+
+
+# --- the MinHash-LSH core: signatures → band rows → band join → verify ------
+
+def minhash_signatures(docs):
+    """(doc_id, shset, bands) of every (doc_id, text) row of ``docs`` with
+    at least 3 words: the distinct shingle set and the 4 64-bit band keys.
+    The word-count filter runs BEFORE the signature projection, as in
+    dedup_minhash_signatures (see let1)."""
+    return (docs.filter(F.expr(f"size({WORDS_S}) >= 3"))
+            .select("doc_id", F.expr(MINHASH_LSH_SIG_S).alias("sig"))
+            .select("doc_id", "sig.*"))
+
+
+def minhash_bands(sigs, *cols):
+    """(doc_id, *cols, band_idx, bucket): one row per band of each
+    signature — the rows `_band_pairs` and `_band_probe` join on."""
+    return sigs.select("doc_id", *cols,
+                       F.posexplode("bands").alias("band_idx", "bucket"))
+
+
+def _band_probe(batch_ex, index_ex):
+    """Distinct (new_doc, index_doc) pairs of a batch band row and a
+    stored-index band row agreeing on (band_idx, bucket).  A doc is never
+    paired with its own id: a doc_id that re-arrives in a later streaming
+    batch is not a duplicate of its own earlier copy."""
+    b, i = batch_ex.alias("b"), index_ex.alias("i")
+    return (b.join(i, ["band_idx", "bucket"])
+            .filter(F.col("b.doc_id") != F.col("i.doc_id"))
+            .select(F.col("b.doc_id").alias("new_doc"),
+                    F.col("i.doc_id").alias("index_doc"))
+            .distinct())
+
+
+def _jaccard_verified(cand, sigs_a, sigs_b, a: str, b: str,
+                      threshold_pct: int = 50):
+    """(a, b, n_inter, n_union) of the candidate id pairs ``cand`` whose
+    exact shingle Jaccard is >= threshold_pct/100, as cross-multiplied
+    integers.  ``a`` ids look up their ``shset`` in ``sigs_a``, ``b`` ids
+    in ``sigs_b``; candidates carry bare ids, so the sets cross only this
+    join, never the candidate shuffle."""
+    sa = sigs_a.select(F.col("doc_id").alias(a), F.col("shset").alias("sa"))
+    sb = sigs_b.select(F.col("doc_id").alias(b), F.col("shset").alias("sb"))
+    n_inter = F.size(F.array_intersect("sa", "sb"))
+    return (cand.join(sa, a).join(sb, b)
+            .select(a, b, n_inter.alias("n_inter"),
+                    (F.size("sa") + F.size("sb") - n_inter).alias("n_union"))
+            .filter(F.col("n_inter") * 100
+                    >= threshold_pct * F.col("n_union")))
 
 
 @register(
@@ -295,38 +349,11 @@ def dedup_minhash_signatures(spark, sf_dir):
         "working set = docs ∪ 80%%-truncated copies of doc_id%%7==0",
 )
 def dedup_minhash_lsh(spark, sf_dir):
-    corpus = _neardup_corpus_s(spark, sf_dir)
-    # hash every shingle once (hs), then derive all 8 lanes + 4 bands from
-    # the digests — one md5 pass total per document (let-bound, see let1)
-    sigs = (
-        corpus.filter(F.expr(f"size({WORDS_S}) >= 3"))
-        .select("doc_id", F.expr(MINHASH_LSH_SIG_S).alias("sig"))
-        .select("doc_id", "sig.*")
-    )
-    # the signature table is referenced 4× below (both self-join branches +
-    # both verify re-joins); at scale you'd write it out once — here persist
-    # so the minhash pass isn't recomputed per branch
-    sigs = _persist(sigs)
-    # candidate pairs carry bare ids only — the distinct never shuffles the
-    # shingle arrays; sets are re-joined just for the verify step
-    ex = sigs.select("doc_id", F.posexplode("bands").alias("band_idx", "band_hash"))
-    a, b = ex.alias("a"), ex.alias("b")
-    cand = (
-        a.join(b, (F.col("a.band_idx") == F.col("b.band_idx"))
-               & (F.col("a.band_hash") == F.col("b.band_hash"))
-               & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    sa = sigs.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sa"))
-    sb = sigs.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sb"))
-    n_inter = F.size(F.array_intersect("sa", "sb"))
-    return (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", n_inter.alias("n_inter"),
-                (F.size("sa") + F.size("sb") - n_inter).alias("n_union"))
-        .filter(F.col("n_inter") * 2 >= F.col("n_union"))
-    )
+    # the signature table is read 3× (band explode + both verify re-joins):
+    # persisted so the minhash pass runs once
+    sigs = _persist(minhash_signatures(_neardup_corpus_s(spark, sf_dir)))
+    cand = _band_pairs(minhash_bands(sigs), "doc_id", "doc_a", "doc_b")
+    return _jaccard_verified(cand, sigs, sigs, "doc_a", "doc_b")
 
 
 # ---------------------------------------------------------------------------
@@ -485,7 +512,8 @@ def _simhash_from_text_s(nbits: int = 16) -> str:
 def _band_pairs(ex, id_col: str, a: str, b: str):
     """The band self-join of the LSH and simhash paths: distinct pairs
     (``a`` < ``b``) of ``id_col`` values agreeing on some (band_idx,
-    bucket) row of ``ex``."""
+    bucket) row of ``ex``.  MinHash callers: dedup_minhash_lsh and the
+    within-batch join of streaming/dedup.py, over ``minhash_bands``."""
     x, y = ex.alias("x"), ex.alias("y")
     return (x.join(y, (F.col("x.band_idx") == F.col("y.band_idx"))
                    & (F.col("x.bucket") == F.col("y.bucket"))
@@ -704,17 +732,9 @@ def dedup_ngram_jaccard(spark, sf_dir):
     )
     s = _persist(s)  # referenced 3× (inverted index + both verify re-joins)
     cand = _prefix_filtered_candidates(s, threshold_pct=50)
-    sa = s.select(F.col("doc_id").alias("doc_a"), F.col("shset").alias("sa"))
-    sb = s.select(F.col("doc_id").alias("doc_b"), F.col("shset").alias("sb"))
-    n_inter = F.size(F.array_intersect("sa", "sb"))
-    n_union = F.size("sa") + F.size("sb") - n_inter
-    return (
-        cand.join(sa, "doc_a").join(sb, "doc_b")
-        .select("doc_a", "doc_b", n_inter.alias("n_inter"), n_union.alias("n_union"))
-        .filter(F.col("n_inter") * 2 >= F.col("n_union"))
-        .withColumn("jaccard",
-                    F.col("n_inter").cast("double") / F.col("n_union").cast("double"))
-    )
+    return (_jaccard_verified(cand, s, s, "doc_a", "doc_b")
+            .withColumn("jaccard", F.col("n_inter").cast("double")
+                        / F.col("n_union").cast("double")))
 
 
 # ---------------------------------------------------------------------------
@@ -2680,34 +2700,14 @@ def dedup_incremental(spark, sf_dir):
                      F.expr(TRUNC_S).alias("text")))
     batch_docs = d.filter(F.col("doc_id") % 2 == 1).unionByName(trunc)
 
-    def sigs(docs):
-        return (docs.filter(F.expr(f"size({WORDS_S}) >= 3"))
-                .select("doc_id", F.expr(MINHASH_LSH_SIG_S).alias("sig"))
-                .select("doc_id", "sig.*"))
-
     # the index side is the stored table of a continuous-ingest pipeline —
     # persisted once, reused across batches (and across the two references
     # below: band probe + verify re-join)
-    index_sigs = _persist(sigs(index_docs))
-    batch_sigs = _persist(sigs(batch_docs), fresh=False)
-    ix = index_sigs.select("doc_id",
-                           F.posexplode("bands").alias("band_idx", "band_hash"))
-    bx = batch_sigs.select("doc_id",
-                           F.posexplode("bands").alias("band_idx", "band_hash"))
-    cand = (bx.alias("b")
-            .join(ix.alias("i"), ["band_idx", "band_hash"])
-            .select(F.col("b.doc_id").alias("new_doc"),
-                    F.col("i.doc_id").alias("index_doc"))
-            .distinct())
-    sb = batch_sigs.select(F.col("doc_id").alias("new_doc"),
-                           F.col("shset").alias("sb"))
-    si = index_sigs.select(F.col("doc_id").alias("index_doc"),
-                           F.col("shset").alias("si"))
-    n_inter = F.size(F.array_intersect("sb", "si"))
-    return (cand.join(sb, "new_doc").join(si, "index_doc")
-            .select("new_doc", "index_doc", n_inter.alias("n_inter"),
-                    (F.size("sb") + F.size("si") - n_inter).alias("n_union"))
-            .filter(F.col("n_inter") * 2 >= F.col("n_union")))
+    index_sigs = _persist(minhash_signatures(index_docs))
+    batch_sigs = _persist(minhash_signatures(batch_docs), fresh=False)
+    cand = _band_probe(minhash_bands(batch_sigs), minhash_bands(index_sigs))
+    return _jaccard_verified(cand, batch_sigs, index_sigs,
+                             "new_doc", "index_doc")
 
 
 # ---------------------------------------------------------------------------

@@ -1,13 +1,13 @@
 """Streaming near-duplicate detection against a growing signature index.
 
-The batch registry demonstrates the single-shot shapes
-(``dedup_minhash_lsh``) and the batch-vs-stored-index shape
-(``dedup_incremental``); this module is the streaming-native composition:
-documents arrive continuously, each micro-batch is MinHash-signed ONCE,
-probed against the **persisted band index of everything ingested before
-it**, and only first-occurrence docs extend the index.  That is the 100 TB
-steady state for corpus dedup: per-batch work scales with the batch (its
-own signatures + a thin band-key join), never with the corpus.
+The streaming-native composition of the MinHash-LSH core in
+:mod:`..corpus` that the registry's ``dedup_minhash_lsh`` and
+``dedup_incremental`` also run (``minhash_signatures`` →
+``minhash_bands`` → ``_band_probe`` / ``_band_pairs`` →
+``_jaccard_verified``): documents arrive continuously, each micro-batch
+is signed ONCE, probed against the **persisted band index of everything
+ingested before it** and within itself, and only first-occurrence docs
+extend the index.  Per-batch work scales with the batch, not the corpus.
 
 Exactly-once mechanics:
 
@@ -27,8 +27,8 @@ accumulated tail partitions are rewritten into ONE compacted generation:
 
 * ``catalog.write_bucketed`` lands two external tables under
   ``{state}/compacted/upto={N}/`` — ``bands`` (exploded, bucketed by
-  ``band_hash``: the probe's join key, so with a persistent metastore
-  the index side of the band join is pre-shuffled) and ``sigs``
+  ``band_hash``, read back as the probe's ``bucket`` key, so with a
+  persistent metastore the index side is pre-shuffled) and ``sigs``
   (bucketed by ``doc_id`` for the verify lookup).  Rows keep their
   ``batch_id`` so a replaying batch can still exclude its own rows.
 * Generations are crash-safe AND replay-idempotent: the new generation
@@ -58,13 +58,15 @@ pass, as in the batch path.
 
 from __future__ import annotations
 
+import functools
 import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
-from pyspark.sql.types import (ArrayType, IntegerType, LongType, StringType,
-                               StructField, StructType)
+from pyspark.sql.types import (ArrayType, LongType, StringType, StructField,
+                               StructType)
 
-from ..corpus import MINHASH_LSH_SIG_S, WORDS_S
+from ..corpus import (_band_pairs, _band_probe, _jaccard_verified,
+                      minhash_bands, minhash_signatures)
 from ..sources import catalog
 
 INPUT_SCHEMA = StructType([
@@ -78,54 +80,8 @@ _SIG_SCHEMA = StructType([
     StructField("bands", ArrayType(StringType())),
 ])
 
-_BANDS_SCHEMA = StructType([
-    StructField("doc_id", LongType()),
-    StructField("band_idx", IntegerType()),
-    StructField("band_hash", StringType()),
-])
-
 DEFAULT_COMPACT_EVERY = 8
 _N_BUCKETS = 16
-
-
-def _signatures(docs: DataFrame) -> DataFrame:
-    return (docs.filter(F.expr(f"size({WORDS_S}) >= 3"))
-            .select("doc_id", F.expr(MINHASH_LSH_SIG_S).alias("sig"))
-            .select("doc_id", "sig.*"))
-
-
-def _explode_bands(sigs: DataFrame) -> DataFrame:
-    return sigs.select(
-        "doc_id", F.posexplode("bands").alias("band_idx", "band_hash"))
-
-
-def _verified_pairs(new_sigs: DataFrame, ix_bands: DataFrame,
-                    ix_sigs: DataFrame, threshold_pct: int,
-                    ordered: bool = False) -> DataFrame:
-    """(new_doc, dup_of) pairs with exact shingle Jaccard >= t, candidates
-    blocked by band-key equality (never all-pairs).  The index side
-    arrives pre-exploded (compacted store layout).  ``ordered=True`` (the
-    within-batch self-join) keeps only index_doc < new_doc AT CANDIDATE
-    TIME — verifying both orientations of every pair and discarding half
-    afterwards would double the expensive verify-join work."""
-    bx = _explode_bands(new_sigs)
-    pair_cond = (F.col("i.doc_id") < F.col("b.doc_id")) if ordered \
-        else (F.col("b.doc_id") != F.col("i.doc_id"))
-    cand = (bx.alias("b")
-            .join(ix_bands.alias("i"), ["band_idx", "band_hash"])
-            .filter(pair_cond)
-            .select(F.col("b.doc_id").alias("new_doc"),
-                    F.col("i.doc_id").alias("index_doc"))
-            .distinct())
-    sb = new_sigs.select(F.col("doc_id").alias("new_doc"),
-                         F.col("shset").alias("sb"))
-    si = ix_sigs.select(F.col("doc_id").alias("index_doc"),
-                        F.col("shset").alias("si"))
-    n_inter = F.size(F.array_intersect("sb", "si"))
-    n_union = F.size("sb") + F.size("si") - n_inter
-    return (cand.join(sb, "new_doc").join(si, "index_doc")
-            .filter(n_inter * 100 >= threshold_pct * n_union)
-            .select("new_doc", "index_doc"))
 
 
 # --- compacted-store plumbing ------------------------------------------------
@@ -156,9 +112,7 @@ def _read_marker(spark: SparkSession, state_dir: str) -> dict | None:
     best = -1
     for name in catalog.fs_list_names(spark, f"{state_dir}/compacted"):
         upto = _dir_num(name, "upto")
-        if upto is None:
-            continue
-        if upto > best and catalog.fs_exists(
+        if upto is not None and upto > best and catalog.fs_exists(
                 spark, f"{_gen_dir(state_dir, upto)}/_COMMITTED"):
             best = upto
     if best < 0:
@@ -176,9 +130,7 @@ def _tail_batch_dirs(spark: SparkSession, state_dir: str, lo_exclusive: int,
     out = []
     for name in catalog.fs_list_names(spark, root):
         b = _dir_num(name, "batch_id")
-        if b is None:
-            continue
-        if lo_exclusive < b < hi_exclusive:
+        if b is not None and lo_exclusive < b < hi_exclusive:
             out.append((b, f"{root}/{name}"))
     return sorted(out)
 
@@ -191,26 +143,24 @@ def _load_index(spark: SparkSession, state_dir: str,
     < compact_every tail dirs — bounded regardless of total batch count."""
     marker = _read_marker(spark, state_dir)
     upto = marker["upto"] if marker else -1
-    bands = spark.createDataFrame([], _BANDS_SCHEMA)
-    sigs = spark.createDataFrame([], _SIG_SCHEMA).select("doc_id", "shset")
+    sigs = spark.createDataFrame([], _SIG_SCHEMA)
+    bands, sigs = minhash_bands(sigs), sigs.select("doc_id", "shset")
     n_loc = 0
     if marker:
         # batch_id guards: <= upto (ignore a half-written newer generation)
         # and < current (a replayed batch must not see its own rows)
-        cb = (spark.read.parquet(marker["bands_path"])
-              .filter((F.col("batch_id") <= upto)
-                      & (F.col("batch_id") < batch_id))
-              .select("doc_id", "band_idx", "band_hash"))
-        cs = (spark.read.parquet(marker["sigs_path"])
-              .filter((F.col("batch_id") <= upto)
-                      & (F.col("batch_id") < batch_id))
+        live = (F.col("batch_id") <= upto) & (F.col("batch_id") < batch_id)
+        cb = (spark.read.parquet(marker["bands_path"]).filter(live)
+              .select("doc_id", "band_idx",
+                      F.col("band_hash").alias("bucket")))
+        cs = (spark.read.parquet(marker["sigs_path"]).filter(live)
               .select("doc_id", "shset"))
         bands, sigs = bands.unionByName(cb), sigs.unionByName(cs)
         n_loc += 2
     tail = _tail_batch_dirs(spark, state_dir, upto, batch_id)
     if tail:
         tdf = spark.read.parquet(*[p for _, p in tail])
-        bands = bands.unionByName(_explode_bands(tdf))
+        bands = bands.unionByName(minhash_bands(tdf))
         sigs = sigs.unionByName(tdf.select("doc_id", "shset"))
         n_loc += len(tail)
     return bands, sigs, n_loc
@@ -252,20 +202,16 @@ def _compact(spark: SparkSession, state_dir: str, batch_id: int) -> None:
                             F.col("batch_id").cast("long").alias("batch_id")))
     if not srcs:
         return
-    allsigs = srcs[0]
-    for s in srcs[1:]:
-        allsigs = allsigs.unionByName(s)
-    bands = (allsigs.select(
-        "doc_id", "batch_id",
-        F.posexplode("bands").alias("band_idx", "band_hash")))
+    allsigs = functools.reduce(DataFrame.unionByName, srcs)
+    bands = (minhash_bands(allsigs, "batch_id")
+             .withColumnRenamed("bucket", "band_hash"))
     catalog.write_bucketed(bands, _table_name(state_dir, batch_id, "bands"),
                            "band_hash", _N_BUCKETS, path=f"{gen_dir}/bands")
-    # sigs keep their bands array too: the NEXT compaction re-folds this
-    # generation and must be able to rebuild the exploded band table
-    catalog.write_bucketed(
-        allsigs.select("doc_id", "shset", "bands", "batch_id"),
-        _table_name(state_dir, batch_id, "sigs"),
-        "doc_id", _N_BUCKETS, path=f"{gen_dir}/sigs")
+    # sigs (doc_id, shset, bands, batch_id) keep their bands array too: the
+    # NEXT compaction re-folds this generation and must be able to rebuild
+    # the exploded band table
+    catalog.write_bucketed(allsigs, _table_name(state_dir, batch_id, "sigs"),
+                           "doc_id", _N_BUCKETS, path=f"{gen_dir}/sigs")
     # commit flag = commit point (created only after both tables are
     # durable; readers ignore any generation without it)
     catalog.fs_touch(spark, f"{gen_dir}/_COMMITTED")
@@ -276,9 +222,7 @@ def _compact(spark: SparkSession, state_dir: str, batch_id: int) -> None:
         catalog.fs_delete(spark, p)
     for name in catalog.fs_list_names(spark, f"{state_dir}/compacted"):
         j = _dir_num(name, "upto")
-        if j is None:
-            continue
-        if j != batch_id:
+        if j is not None and j != batch_id:
             catalog.fs_delete(spark, _gen_dir(state_dir, j))
             for which in ("bands", "sigs"):
                 catalog.drop_table(spark, _table_name(state_dir, j, which))
@@ -287,13 +231,18 @@ def _compact(spark: SparkSession, state_dir: str, batch_id: int) -> None:
 def _process_batch(batch_df: DataFrame, batch_id: int, state_dir: str,
                    threshold_pct: int, compact_every: int | None) -> None:
     spark = batch_df.sparkSession
-    sigs = _signatures(batch_df.select("doc_id", "text")).persist()
+    sigs = minhash_signatures(batch_df.select("doc_id", "text")).persist()
     ix_bands, ix_sigs, _ = _load_index(spark, state_dir, batch_id)
-
-    vs_index = _verified_pairs(sigs, ix_bands, ix_sigs, threshold_pct)
-    vs_batch = _verified_pairs(sigs, _explode_bands(sigs), sigs,
-                               threshold_pct, ordered=True)
-    dup_of = (vs_index.unionByName(vs_batch)
+    bx = minhash_bands(sigs)
+    # candidates vs the stored index, and vs smaller ids of this batch (the
+    # self-join keeps index_doc < new_doc, so each pair is verified once)
+    vs_index = _band_probe(bx, ix_bands)
+    vs_batch = _band_pairs(bx, "doc_id", "index_doc", "new_doc")
+    dup_of = (_jaccard_verified(vs_index, sigs, ix_sigs, "new_doc",
+                                "index_doc", threshold_pct)
+              .unionByName(_jaccard_verified(vs_batch, sigs, sigs, "new_doc",
+                                             "index_doc", threshold_pct))
+              .select("new_doc", "index_doc")
               .groupBy("new_doc")
               .agg(F.min("index_doc").alias("dup_of")))
 

@@ -421,6 +421,13 @@ def test_streaming_dedup_compaction_bounded_and_parity(spark, tmp_path):
     assert tail == []
     gens = os.listdir(f"{state}/compacted")
     assert gens == ["upto=5"]
+    # on-disk column sets are the resumable state layout: the compacted
+    # band table keeps `band_hash` (the in-memory `bucket` never reaches
+    # disk) and a tail dir holds whole signatures
+    assert set(spark.read.parquet(f"{state}/compacted/upto=5/bands")
+               .columns) == {"doc_id", "batch_id", "band_idx", "band_hash"}
+    assert set(spark.read.parquet(f"{tmp_path}/plain/index/batch_id=0")
+               .columns) == {"doc_id", "shset", "bands"}
     _, _, n_loc = _load_index(spark, str(state), 6)
     assert n_loc == 2  # the generation's two tables, nothing else
 
