@@ -22,16 +22,27 @@ class ParseError(ValueError):
     (mirrors the total-function semantics of extractor.py:934-936)."""
 
 
+def _is_decimal(s: str) -> bool:
+    """``s`` matches ``-?[0-9]+(\\.[0-9]+)?``: ASCII digits, an optional
+    leading minus and at most one inner point.  str methods, no regex:
+    this runs for every line's coordinates."""
+    if s[:1] == "-":
+        s = s[1:]
+    whole, point, frac = s.partition(".")
+    return s.isascii() and whole.isdigit() and (frac.isdigit() or not point)
+
+
 def parse_pdf_page_stream(stream: str, src_span: int = 0) -> list[dict]:
     """Parse one ``pdf_page`` span payload into ordered block dicts.
 
     Line grammar: ``L <US> page <US> y0 <US> y1 <US> size <US> bold <US> font <US> text``.
     Blank-line filter (extractor.py:56): lines whose text strips to empty
     are dropped, after the line is validated, so a malformed blank line
-    still fails.  Any structural violation (wrong field count, a
-    non-integer or negative page, a non-numeric or non-finite coordinate
-    or size, a bold flag other than ``0``/``1``) raises
-    :class:`ParseError`.
+    still fails.  Any structural violation raises :class:`ParseError`:
+    a wrong field count, a page that is not ASCII ``[0-9]+``, a y0, y1 or
+    size that is not ``-?[0-9]+(\\.[0-9]+)?`` (``int``/``float`` would take
+    spaces, ``+``, ``_``, exponents, ``nan`` and non-ASCII digits) or
+    overflows to infinity, a bold flag other than ``0``/``1``.
     """
     blocks: list[dict] = []
     append = blocks.append
@@ -45,19 +56,23 @@ def parse_pdf_page_stream(stream: str, src_span: int = 0) -> list[dict]:
         if len(fields) != 8 or fields[0] != "L":
             raise ParseError(f"malformed line record: {raw[:80]!r}")
         _, page_s, y0_s, y1_s, size_s, bold_s, font, text = fields
+        if not (page_s.isascii() and page_s.isdigit()
+                and _is_decimal(y0_s) and _is_decimal(y1_s)):
+            raise ParseError(f"bad numeric field in: {raw[:80]!r}")
         try:
-            page = int(page_s)
-            y0 = float(y0_s)
-            y1 = float(y1_s)
-            size = rounded_size.get(size_s)
-            if size is None:
-                size = rounded_size[size_s] = round(float(size_s), 1)   # extractor.py:52
+            page = int(page_s)   # raises past sys.get_int_max_str_digits()
         except ValueError as e:
             raise ParseError(f"bad numeric field in: {raw[:80]!r}") from e
-        # float() accepts 'nan'/'inf'; NaN sizes would split the scalar
-        # (list.count) and vectorized (per-size grouping) table-filter
-        # paths, and non-finite y breaks block ordering — reject here
-        if page < 0 or not (isfinite(y0) and isfinite(y1) and isfinite(size)):
+        y0 = float(y0_s)
+        y1 = float(y1_s)
+        size = rounded_size.get(size_s)
+        # a digit run past ~309 places parses to inf; non-finite y breaks
+        # block ordering and a non-finite size the table-filter grouping
+        if size is None:
+            if not (_is_decimal(size_s) and isfinite(float(size_s))):
+                raise ParseError(f"bad numeric field in: {raw[:80]!r}")
+            size = rounded_size[size_s] = round(float(size_s), 1)   # extractor.py:52
+        if not (isfinite(y0) and isfinite(y1)):
             raise ParseError(f"bad numeric field in: {raw[:80]!r}")
         if bold_s == "1":
             bold, flags = True, 16      # bold bit = flags & 2**4 (extractor.py:59)

@@ -19,6 +19,11 @@ Scale design (the point is 100 TB, not 500 rows):
   (batch vs stored index) → ``_jaccard_verified`` — shared by
   ``dedup_minhash_lsh``, ``dedup_incremental`` and streaming/dedup.py;
   ``dedup_ngram_jaccard`` shares the verify.
+* **Similarity search is split, probe, score.** The four ``ann_*``
+  entries share one core: ``_ann_split`` (queries vs corpus, exact
+  norms), ``_nearest_cells`` (IVF probe over ``_cell_means`` centroids,
+  which are also Lloyd's update) and ``_ann_top5`` (exact Arrow dot,
+  cosine, per-query top 5).  An entry only picks the candidate pairs.
 * **All hashing is md5-based and engine-portable** — the same bytes hash
   identically on a 1000-executor cluster and in the DuckDB oracle, so
   blocking decisions (hence results) are reproducible, not
@@ -1016,20 +1021,85 @@ def pack_sequences(spark, sf_dir):
 
 
 # ---------------------------------------------------------------------------
-# Similarity search over embeddings (quantized-exact cosine)
+# Similarity search over embeddings (quantized-exact cosine; the ANN core)
 # ---------------------------------------------------------------------------
 
 # float32 → int64 quantization: floor is tie-free, so both engines agree
 QUANT_S = "transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 QUANT_D = "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 10000) AS BIGINT))"
 
-# exact int64 dot product of two quantized vectors qa, qb
-DOT_S = "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
+# exact int64 self-dot of a quantized vector q (DuckDB oracles)
 NORM_D = ("CAST(list_sum(list_transform(range(1, len(q) + 1), "
           "i -> q[i] * q[i])) AS BIGINT)")
 
 # cosine from exact ints: correctly-rounded IEEE double in both engines
 COS = "CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)))"
+
+# centroid-side cosine (int vector qv x double centroid cv).  Kept as SQL
+# on purpose: its sequential double sums follow the DuckDB forms' order, so
+# the probe ranks mean centroids bit for bit as the oracle does; a numpy
+# matmul may sum in another order (the mean-centroid ulp caveat)
+_CDOT_S = ("aggregate(zip_with(qv, cv, (x, y) -> CAST(x AS DOUBLE) * y), "
+           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
+_CNRM_S = ("sqrt(aggregate(zip_with(cv, cv, (x, y) -> x * y), "
+           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
+_CDOT_D = ("CAST(list_sum(list_transform(range(1, 65), "
+           "i -> CAST(d.qv[i] AS DOUBLE) * c.cv[i])) AS DOUBLE)")
+_CNRM_D = ("sqrt(CAST(list_sum(list_transform(range(1, 65), "
+           "i -> c.cv[i] * c.cv[i])) AS DOUBLE))")
+
+
+def _ann_split(rows):
+    """Quantized rows (vec_id, qv, *extra) -> (queries, corpus): the
+    queries (query_id, qa, na, *extra) are vec_id < 3, the corpus
+    (vec_id, qb, nb, *extra) the rest, so no query meets itself.  Norms
+    are the exact Arrow self-dot, computed after the filter (the dot is
+    nondeterministic, so the filter is not pushed below it)."""
+    dot = emb_dot_udf()
+    extra = [x for x in rows.columns if x not in ("vec_id", "qv")]
+
+    def side(cond, key, v, n):
+        return rows.filter(cond).select(
+            F.col("vec_id").alias(key), F.col("qv").alias(v),
+            dot(F.col("qv"), F.col("qv")).alias(n), *extra)
+
+    return (side(F.col("vec_id") < 3, "query_id", "qa", "na"),
+            side(F.col("vec_id") >= 3, "vec_id", "qb", "nb"))
+
+
+def _ann_top5(cand, *keep):
+    """Candidate rows (query_id, vec_id, qa, na, qb, nb, *keep) -> the
+    per-query top 5 by exact quantized cosine (Arrow dot, `COS`), ties to
+    the lower vec_id: (query_id, rank, vec_id, *keep, cos_sim)."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
+    return (cand.withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
+            .withColumn("cos_sim", F.expr(COS))
+            .select("query_id", "vec_id", *keep, "cos_sim")
+            .withColumn("rank", F.row_number().over(w))
+            .filter(F.col("rank") <= 5)
+            .select("query_id", "rank", "vec_id", *keep, "cos_sim"))
+
+
+def _cell_means(df, key: str):
+    """Per-``key`` mean of the int64 vectors ``qv`` -> (key, cv
+    array<double>): one groupBy of per-dimension avgs over the intact
+    array (map-side partials, no posexplode).  The integer sums are exact
+    in doubles, so the means do not depend on summation order."""
+    return (df.groupBy(key)
+            .agg(*[F.avg(F.col("qv")[i]).alias(f"c{i}") for i in range(EMB_DIM)])
+            .select(key, F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv")))
+
+
+def _nearest_cells(q, cents, key: str):
+    """IVF probe: the 2 nearest centroids (key, cv) of each query (query_id,
+    qa, ...) by `_CDOT_S / _CNRM_S`, ties to the lower cell ->
+    (query_id, key).  The centroids are few, so they are broadcast."""
+    w = W.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc(key))
+    return (q.select("query_id", F.col("qa").alias("qv"))
+            .crossJoin(F.broadcast(cents))
+            .withColumn("ccos", F.expr(f"{_CDOT_S} / {_CNRM_S}"))
+            .withColumn("rn", F.row_number().over(w))
+            .filter(F.col("rn") <= 2).select("query_id", key))
 
 
 @register(
@@ -1055,30 +1125,14 @@ COS = "CAST(dot AS DOUBLE) / (sqrt(CAST(na AS DOUBLE)) * sqrt(CAST(nb AS DOUBLE)
                                 ORDER BY cos_sim DESC, vec_id ASC) AS rank
       FROM scored) WHERE rank <= 5
     """,
-    doc="brute-force cosine top-k ANN baseline: broadcast the (tiny) query "
-        "set against the full embedding table, exact int64-quantized dot, "
-        "per-query top-5 window with vec_id tie-break",
+    doc="brute-force cosine top-k ANN baseline: the (tiny) broadcast query "
+        "set meets the full corpus, `_ann_top5` scores the exact "
+        "int64-quantized cosine, per-query top-5 with vec_id tie-break",
 )
 def ann_topk_cosine(spark, sf_dir):
-    e = t(spark, sf_dir, "embeddings")
-    q = (e.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.expr(QUANT_S).alias("qa"))
-         .withColumn("na", F.expr(
-             "aggregate(zip_with(qa, qa, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    c = (e.filter(F.col("vec_id") >= 3)
-         .select("vec_id", F.expr(QUANT_S).alias("qb"))
-         .withColumn("nb", F.expr(
-             "aggregate(zip_with(qb, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "rank", "vec_id", "cos_sim"))
+    q, c = _ann_split(t(spark, sf_dir, "embeddings")
+                      .select("vec_id", F.expr(QUANT_S).alias("qv")))
+    return _ann_top5(c.crossJoin(F.broadcast(q)))
 
 
 # Deterministic ±1 hyperplanes for sign-LSH, as an md5-seeded literal sign
@@ -1272,10 +1326,11 @@ def emb_bands_nrm_udf(ppb: int):
 
 
 def emb_dot_udf():
-    """Exact candidate-verify dot as an Arrow-batched projection — the
-    per-candidate `DOT_S` fold is the hot interpreted expression of the
-    embedding dedup verify (candidates ~ 100x rows at the derived
-    occupancy).  int64 in, int64 out, exact — drop-in for F.expr(DOT_S).
+    """Exact int64 dot of two quantized vectors as an Arrow-batched
+    projection: the one Spark engine of the dedup verify, the ANN scorer
+    and the ANN/semantic self-norms (its SQL fold, ``DOT_S`` in
+    tests/sig_reference.py, is interpreted row at a time).  int64 in,
+    int64 out, exact — equal to that fold (parity-tested).
     Verify callers name its inputs ``qa``/``qb``: profiles tell the
     verify UDF from the signature UDFs by those column names.
 
@@ -1359,36 +1414,21 @@ def _bands_array_d(vec: str, ppb: int) -> str:
     doc="sign-LSH bucketed ANN (the scale path): banded OR-construction — "
         "4 bands x 4 md5-seeded ±1 hyperplanes; candidates = pairs agreeing "
         "on ANY band's bucket (equi-join on (band, bucket), never a cross "
-        "join), then exact cosine top-5.  Bucket count per band grows "
+        "join), then `_ann_top5`.  Bucket count per band grows "
         "2^planes — at 10^9 vectors raise PPB_ANN, not the code",
 )
 def ann_lsh_bucketed(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
          .select("vec_id", F.expr(QUANT_S).alias("qv")))
-    # referenced 4x (qx/cx band explodes + q/c vector legs)
+    # referenced 4x (both band explodes + both vector legs)
     b = _persist(_emb_signature(e, PPB_ANN))
-    qx = (b.filter(F.col("vec_id") < 3)
-          .select(F.col("vec_id").alias("query_id"),
-                  F.posexplode("bands").alias("band_idx", "bucket")))
-    cx = (b.filter(F.col("vec_id") >= 3)
-          .select("vec_id", F.posexplode("bands").alias("band_idx", "bucket")))
+    q, c = _ann_split(b.select("vec_id", "qv", "bands"))
+    qx = q.select("query_id", F.posexplode("bands").alias("band_idx", "bucket"))
+    cx = c.select("vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
     cand = (cx.join(F.broadcast(qx), ["band_idx", "bucket"])
             .select("query_id", "vec_id").distinct())
-    q = (b.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"),
-                 F.col("nrm").alias("na")))
-    c = (b.filter(F.col("vec_id") >= 3)
-         .select("vec_id", F.col("qv").alias("qb"), F.col("nrm").alias("nb")))
-    scored = (
-        cand.join(F.broadcast(q), "query_id").join(c, "vec_id")
-        .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "rank", "vec_id", "cos_sim"))
+    return _ann_top5(cand.join(F.broadcast(q.drop("bands")), "query_id")
+                     .join(c.drop("bands"), "vec_id"))
 
 
 @register(
@@ -1429,60 +1469,19 @@ def ann_lsh_bucketed(spark, sf_dir):
                                 ORDER BY cos_sim DESC, vec_id ASC) AS rank
       FROM scored) WHERE rank <= 5
     """,
-    doc="IVF-style ANN: label-partitioned cells, exact-int centroid per cell, "
-        "probe the 2 nearest cells per query, exact cosine top-5 inside the "
-        "probed cells only — search cost scales with probed fraction, not n",
+    doc="IVF-style ANN: label-partitioned cells, `_cell_means` centroid per "
+        "label, `_nearest_cells` probes the 2 nearest per query, `_ann_top5` "
+        "inside them only — search cost scales with probed fraction, not n",
 )
 def ann_ivf_probe(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
          .select("vec_id", "label", F.expr(QUANT_S).alias("qv")))
-    dims = (e.select("label", F.posexplode("qv").alias("dim0", "val"))
-            .groupBy("label", "dim0").agg(F.avg("val").alias("cval")))
-    cent = (dims.groupBy("label")
-            .agg(F.transform(F.array_sort(F.collect_list(F.struct("dim0", "cval"))),
-                             lambda s: s["cval"]).alias("cv")))
-    q = (e.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"))
-         .withColumn("na", F.expr(
-             "aggregate(zip_with(qa, qa, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    qc = q.crossJoin(F.broadcast(cent))
-    cent_cos = F.expr(
-        "aggregate(zip_with(qa, cv, (x, y) -> CAST(x AS DOUBLE) * y), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v) / "
-        "sqrt(aggregate(zip_with(cv, cv, (x, y) -> x * y), "
-        "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
-    wp = W.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("label"))
-    probe = (qc.withColumn("ccos", cent_cos)
-             .withColumn("rn", F.row_number().over(wp))
-             .filter(F.col("rn") <= 2).select("query_id", "label"))
-    cand = (e.filter(F.col("vec_id") >= 3)
-            .withColumnRenamed("qv", "qb")
-            .withColumn("nb", F.expr(
-                "aggregate(zip_with(qb, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    scored = (
-        cand.join(F.broadcast(probe), "label")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "label", "cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "rank", "vec_id", "label", "cos_sim"))
+    q, c = _ann_split(e)
+    probe = _nearest_cells(q, _cell_means(e, "label"), "label")
+    cand = (c.join(F.broadcast(probe), "label")
+            .join(F.broadcast(q.drop("label")), "query_id"))
+    return _ann_top5(cand, "label")
 
-
-# centroid-side cosine helpers for k-means IVF (int vector x double centroid;
-# sequential double sums — same evaluation order both engines, a pattern the
-# existing ann_ivf_probe centroid math already hash-validates cross-engine)
-_CDOT_S = ("aggregate(zip_with(qv, cv, (x, y) -> CAST(x AS DOUBLE) * y), "
-           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v)")
-_CNRM_S = ("sqrt(aggregate(zip_with(cv, cv, (x, y) -> x * y), "
-           "CAST(0.0 AS DOUBLE), (acc, v) -> acc + v))")
-_CDOT_D = ("CAST(list_sum(list_transform(range(1, 65), "
-           "i -> CAST(d.qv[i] AS DOUBLE) * c.cv[i])) AS DOUBLE)")
-_CNRM_D = ("sqrt(CAST(list_sum(list_transform(range(1, 65), "
-           "i -> c.cv[i] * c.cv[i])) AS DOUBLE))")
 
 K_IVF = 8
 
@@ -1514,11 +1513,11 @@ def _kmeans_sql_iter(it: int) -> str:
 
 
 def _cents_rows(cents_df) -> list:
-    """Collect a (cell, cv) centroid table to the driver, sorted by cell
-    (deterministic plan).  Bounded: K <= KMEANS_K_MAX by the derivation
-    in ``kmeans_k``, so this is the classic Lloyd structure (MLlib's
-    KMeans collects centers every iteration the same way) — NOT a
-    driver-side loop over data."""
+    """Collect a (cell, cv) centroid table to the driver as doubles (int64
+    seeds convert exactly), sorted by cell for a deterministic plan.
+    Bounded: K <= KMEANS_K_MAX by the derivation in ``kmeans_k``, so this
+    is the classic Lloyd structure (MLlib's KMeans collects centers every
+    iteration the same way) — NOT a driver-side loop over data."""
     return sorted((int(r["cell"]), [float(x) for x in r["cv"]])
                   for r in cents_df.collect())
 
@@ -1596,9 +1595,9 @@ def kmeans_assign_udf(rows):
 
 def _lloyd(spark, data, seed_cents, rounds: int, assign=_assign_cell_lit):
     """Lloyd training with driver-collected centroids: each round is scan
-    -> zero-shuffle argmax projection ``assign(rows)`` -> per-cell exact
-    int64 avgs (map-side partials, the exchange carries K x 64 sums per
-    map partition) -> K-row collect.  No n-row exchange and no
+    -> zero-shuffle argmax projection ``assign(rows)`` -> `_cell_means`
+    (exact int64 avgs, map-side partials: the exchange carries K x 64
+    sums per map partition) -> K-row collect.  No n-row exchange and no
     assignment materialization barrier exist anywhere in the round.
     ``assign`` maps the collected centroid rows to a cell column over
     ``qv``: the literal-centroid SQL argmax `_assign_cell_lit` (registry,
@@ -1610,11 +1609,8 @@ def _lloyd(spark, data, seed_cents, rounds: int, assign=_assign_cell_lit):
     centroids."""
     rows = _cents_rows(seed_cents)
     for _ in range(rounds):
-        joined = data.withColumn("cell", assign(rows))
-        avgs = joined.groupBy("cell").agg(
-            *[F.avg(F.col("qv")[i]).alias(f"c{i}") for i in range(EMB_DIM)])
-        rows = _cents_rows(avgs.select(
-            "cell", F.array(*[f"c{i}" for i in range(EMB_DIM)]).alias("cv")))
+        rows = _cents_rows(
+            _cell_means(data.withColumn("cell", assign(rows)), "cell"))
     cents = spark.createDataFrame(rows, "cell long, cv array<double>")
     return cents, data.withColumn("cell", assign(rows))
 
@@ -1657,57 +1653,25 @@ def _lloyd(spark, data, seed_cents, rounds: int, assign=_assign_cell_lit):
       FROM scored) WHERE rank <= 5
     """,
     doc="IVF-ANN with LEARNED centroids: deterministic k-means (seed = the "
-        f"{K_IVF} lowest corpus vec_ids, 2 unrolled Lloyd iterations — "
-        "assign via a zero-shuffle argmax over driver-collected literal "
-        "centroids, means via per-dimension avg aggregates over the "
-        "intact array (no posexplode)), then probe "
-        "the 2 nearest learned cells per query and exact-cosine top-5 "
-        "inside them.  Replaces ann_ivf_probe's label-as-centroid "
-        "shortcut with the production construction; search cost still "
-        "scales with the probed fraction, training is O(iters * K * n) "
+        f"{K_IVF} lowest corpus vec_ids, 2 `_lloyd` rounds of a zero-shuffle "
+        "argmax over driver-collected literal centroids and `_cell_means`), "
+        "then `_nearest_cells` probes the 2 nearest learned cells per query "
+        "and `_ann_top5` scores inside them.  Training is O(iters * K * n) "
         "map-side with no n-row exchange",
 )
 def ann_ivf_kmeans(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
          .select("vec_id", F.expr(QUANT_S).alias("qv")))
-    data = e.filter(F.col("vec_id") >= 3)
-    data = _persist(data)
-    seeds = (e.filter((F.col("vec_id") >= 3) & (F.col("vec_id") < 3 + K_IVF))
-             .select((F.col("vec_id") - 3).alias("cell"),
-                     F.expr("transform(qv, x -> CAST(x AS DOUBLE))").alias("cv")))
-    # Driver-collected literal-centroid Lloyd (VERDICT r4 item 6): each
-    # round is a zero-shuffle argmax projection + per-cell exact int64
-    # avgs (map-side partials; the one exchange carries K·64 sums per map
-    # partition) + a K-row collect.  The FINAL assignment is
-    # against the FINAL centroids (the probe ranks cells by cent2
-    # geometry, so membership must use the same centroids) and stays
-    # lazy: its sole consumer is the scorer.
+    data = _persist(e.filter(F.col("vec_id") >= 3))   # the corpus rows
+    seeds = data.filter(F.col("vec_id") < 3 + K_IVF).select(
+        (F.col("vec_id") - 3).alias("cell"), F.col("qv").alias("cv"))
+    # the probe and the lazy final assignment both use the FINAL centroids
     cents, assign_last = _lloyd(spark, data, seeds, rounds=2)
-    q = (e.filter(F.col("vec_id") < 3)
-         .select(F.col("vec_id").alias("query_id"), F.col("qv").alias("qa"))
-         .withColumn("na", F.expr(
-             "aggregate(zip_with(qa, qa, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    wp = W.partitionBy("query_id").orderBy(F.desc("ccos"), F.asc("cell"))
-    probe = (q.select("query_id", F.col("qa").alias("qv"))
-             .crossJoin(F.broadcast(cents))
-             .withColumn("ccos", F.expr(f"{_CDOT_S} / {_CNRM_S}"))
-             .withColumn("rn", F.row_number().over(wp))
-             .filter(F.col("rn") <= 2).select("query_id", "cell"))
-    cand = (assign_last
-            .withColumnRenamed("qv", "qb")
-            .withColumn("nb", F.expr(
-                "aggregate(zip_with(qb, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)")))
-    scored = (
-        cand.join(F.broadcast(probe), "cell")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("dot", F.expr(DOT_S))
-        .withColumn("cos_sim", F.expr(COS))
-        .select("query_id", "vec_id", "cell", "cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-    return (scored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= 5)
-            .select("query_id", "rank", "vec_id", "cell", "cos_sim"))
+    q, _ = _ann_split(e)
+    _, c = _ann_split(assign_last)
+    cand = (c.join(F.broadcast(_nearest_cells(q, cents, "cell")), "cell")
+            .join(F.broadcast(q), "query_id"))
+    return _ann_top5(cand, "cell")
 
 
 def _with_perturbed_copies(spark, sf_dir, every: int, dims: int,
@@ -1834,14 +1798,11 @@ def dedup_embedding_cosine(spark, sf_dir):
 def dedup_semantic(spark, sf_dir):
     data = _with_perturbed_copies(spark, sf_dir, every=5, dims=4, scale=0.95)
     data = _persist(data)  # read per Lloyd round + final assignment
-    seeds = (data.filter(F.col("vec_id") < K_IVF)
-             .select(F.col("vec_id").alias("cell"),
-                     F.expr("transform(qv, x -> CAST(x AS DOUBLE))").alias("cv")))
-    # 1 Lloyd iteration, driver-collected literal centroids (zero-shuffle
-    # assignment; exact int64 avgs — order-independent, oracle-stable;
-    # see _lloyd / ann_ivf_kmeans).  The final assignment is lazy:
-    # its sole consumer is semantic_cell_pairs, whose occupancy split
-    # persists the cell-partitioned form both self-join sides read from.
+    seeds = data.filter(F.col("vec_id") < K_IVF).select(
+        F.col("vec_id").alias("cell"), F.col("qv").alias("cv"))
+    # 1 Lloyd round (see _lloyd); the lazy final assignment feeds
+    # semantic_cell_pairs, whose occupancy split persists the
+    # cell-partitioned rows both self-join sides read.
     _cents, assigned = _lloyd(spark, data, seeds, rounds=1)
     m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
     pairs, _dropped = semantic_cell_pairs(m)
@@ -2069,10 +2030,8 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
     data = _persist(e.select("vec_id", F.expr(QUANT_S).alias("qv")))
     # deterministic seeds: the K lowest vec_ids (TakeOrdered — no full
     # sort); cell id = the seed's vec_id, as in the registry query
-    seeds = (data.orderBy("vec_id").limit(k)
-             .select(F.col("vec_id").alias("cell"),
-                     F.expr("transform(qv, x -> CAST(x AS DOUBLE))")
-                     .alias("cv")))
+    seeds = data.orderBy("vec_id").limit(k).select(
+        F.col("vec_id").alias("cell"), F.col("qv").alias("cv"))
     _cents, assigned = _lloyd(
         spark, data, seeds, SEMANTIC_LLOYD_ROUNDS,
         assign=lambda cents: kmeans_assign_udf(cents)(F.col("qv")))

@@ -7,10 +7,15 @@ to leave every output unchanged.  The straightforward forms they replaced
 are kept here, test-only, so tests/test_core_parity.py can assert that the
 fast kernel and these forms agree on generated documents: equal span
 sequences, and a ``ParseError`` on the same streams.  Helpers the rewrite
-left alone are imported from the package.
+left alone are imported from the package.  The one rule changed since,
+on purpose, is the numeric field grammar of ``parse_pdf_page_stream``
+(page ``[0-9]+``, coordinates and size ``-?[0-9]+(\\.[0-9]+)?``); the
+replica checks it with regular expressions, the package with str methods.
 """
 
 from __future__ import annotations
+
+import re
 
 from pdf_extractor_spark.core.htmlheur import classify_html_blocks, tokenize_html
 from pdf_extractor_spark.core.pdfheur import (analyze_font_distribution,
@@ -39,6 +44,10 @@ def parse_pdf_page_stream(stream: str, src_span: int = 0) -> list[dict]:
         fields = raw.split(US)
         if len(fields) != 8 or fields[0] != "L":
             raise ParseError(f"malformed line record: {raw[:80]!r}")
+        if not (re.fullmatch(r"[0-9]+", fields[1])
+                and all(re.fullmatch(r"-?[0-9]+(\.[0-9]+)?", f)
+                        for f in fields[2:5])):
+            raise ParseError(f"bad numeric field in: {raw[:80]!r}")
         try:
             page = int(fields[1])
             y0 = float(fields[2])

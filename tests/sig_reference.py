@@ -1,17 +1,24 @@
-"""Spark SQL reference forms of the near-dup signatures.
+"""Spark SQL reference forms of the near-dup signatures and the int64 dot.
 
-The package computes these signatures with Arrow-batched numpy engines
-(``corpus.simhash_bands_udf``, ``corpus.emb_bands_nrm_udf``).  The SQL
-higher-order-function forms below compute the same values row at a time
-inside Spark; the parity tests compare the engines against them, and the
-pure-Python replicas in tests/test_sig_parity.py check them in turn.  The
-DuckDB dialect of each form stays in the package as the registry oracles.
+The package computes these with Arrow-batched numpy engines
+(``corpus.simhash_bands_udf``, ``corpus.emb_bands_nrm_udf``,
+``corpus.emb_dot_udf``).  The SQL higher-order-function forms below
+compute the same values row at a time inside Spark; the parity tests
+compare the engines against them, the pure-Python replicas in
+tests/test_sig_parity.py check them in turn, and the brute-force dedup
+oracles of tests/test_dedup_cli.py score with ``DOT_S``.  The DuckDB
+dialect of each form stays in the package as the registry oracles.
 """
 
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.corpus import (N_EMB_BANDS, WORDS_S, _plane_signs,
                                         let1)
+
+
+# exact int64 dot product of two quantized vectors qa, qb (the SQL form of
+# corpus.emb_dot_udf)
+DOT_S = "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
 
 
 def _simhash_nib_from_text_s(nbits: int = 60) -> str:

@@ -25,10 +25,13 @@ WORDS = ["design", "Overview", "name of", "plan", "the", "SCOPE", "FEES", "Timel
          "12", "3.5", "Summary", "data", "is", "reported", "per", "site.", "x",
          "maintenance procedures", "regional operations"]
 HEADERS = ["Acme Corp Confidential", "Acme Corp", "Draft", "Page Header Text"]
-# (field index, replacement): malformed, or at an edge the parser accepts
-# ("٣", "1e308", "-0.0"); "short"/"long" change the field count
+# (field index, replacement): malformed, outside the numeric grammar though
+# int()/float() take it ("٣", "1e308", "+3", "1_0.5", " 50.0 "), or at an
+# edge the parser accepts ("-0.0", "10.04"); "short"/"long" change the field count
 FAULTS = [(2, "nan"), (3, "inf"), (4, "nan"), (4, "-inf"), (4, "NaN"), (2, "x"), (4, ""),
           (4, "1e308"), (3, "-0.0"), (1, "-1"), (1, "-3"), (1, "x"), (1, "1.5"), (1, "٣"),
+          (1, "+3"), (1, " 1"), (2, "1_0.5"), (3, " 50.0 "), (4, ".5"), (4, "5."),
+          (4, "10.04"), (2, "٣٣.0"),
           (5, "2"), (5, ""), (5, "true"), (5, " 1"), (0, "X"), "short", "long"]
 
 

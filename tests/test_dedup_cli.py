@@ -13,7 +13,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from pdf_extractor_spark.corpus import (
-    COS, DOT_S, PPB_DEDUP, QUANT_S, emb_lsh_geometry)
+    COS, PPB_DEDUP, QUANT_S, emb_lsh_geometry)
+from sig_reference import DOT_S
 
 SF_DIR = "/root/testdata/sf0.001"
 

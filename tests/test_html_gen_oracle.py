@@ -79,6 +79,29 @@ class TestPdfStream:
             with pytest.raises(ParseError):
                 parse_pdf_page_stream(bad)
 
+    def test_numerics_outside_grammar_raise(self):
+        # int()/float() accept each of these: a non-ASCII digit, a leading
+        # '+', '_' separators, surrounding spaces (' 1_0.5 ' -> 10.5), an
+        # exponent, a bare point
+        for bad in ("L\x1f٣\x1f40.0\x1f50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    "L\x1f+1\x1f40.0\x1f50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    "L\x1f0\x1f4_0.0\x1f50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    "L\x1f0\x1f40.0\x1f50.0\x1f 1_0.5 \x1f0\x1fHelv\x1fhi",
+                    "L\x1f 0\x1f40.0\x1f50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    "L\x1f0\x1f40.0\x1f+50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    "L\x1f0\x1f40.0\x1f50.0\x1f1e1\x1f0\x1fHelv\x1fhi",
+                    "L\x1f0\x1f.5\x1f50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    # grammatical, but past int()'s digit limit / float's range
+                    "L\x1f" + "7" * 5000 + "\x1f40.0\x1f50.0\x1f10.0\x1f0\x1fHelv\x1fhi",
+                    "L\x1f0\x1f40.0\x1f50.0\x1f" + "9" * 400 + "\x1f0\x1fHelv\x1fhi"):
+            with pytest.raises(ParseError):
+                parse_pdf_page_stream(bad)
+
+    def test_numeric_grammar_edges_parse(self):
+        s = "L\x1f12\x1f-0.5\x1f7\x1f10.04\x1f0\x1fHelv\x1fhi"
+        b, = parse_pdf_page_stream(s)
+        assert (b["page"], b["y0"], b["y1"], b["size"]) == (12, -0.5, 7.0, 10.0)
+
 
 class TestGenerator:
     def test_deterministic(self):

@@ -229,7 +229,8 @@ def test_emb_bands_nrm_udf_matches_sql_expr(spark, ppb):
 def test_emb_dot_udf_matches_sql_expr(spark):
     from pyspark.sql import functions as F
 
-    from pdf_extractor_spark.corpus import DOT_S, EMB_DIM, emb_dot_udf
+    from pdf_extractor_spark.corpus import EMB_DIM, emb_dot_udf
+    from sig_reference import DOT_S
     df = (spark.range(80).select(
         F.expr(f"transform(sequence(0, {EMB_DIM - 1}), i -> "
                "CAST(pmod(xxhash64(id, i), 997) - 498 AS BIGINT))")
