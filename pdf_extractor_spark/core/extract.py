@@ -22,8 +22,6 @@ from . import pdfheur
 from .htmlheur import classify_html_blocks, tokenize_html
 from .tokenize import ParseError, parse_pdf_page_stream
 
-INPUT_KINDS = {"pdf_page", "html", "media"}
-
 
 def extract_document(spans: list[dict]) -> tuple[list[dict], int]:
     """Extract one document.  Returns (output_spans, parse_failures).

@@ -34,12 +34,11 @@ Scale design (the point is 100 TB, not 500 rows):
   double in both engines, so even cosine *values* hash-match.  Ratio
   thresholds are cross-multiplied integers.
 * **One engine per computation.** Relational work is built-in
-  `pyspark.sql.functions`.  The near-dup signatures and verify dots
-  (simhash bands, sign-LSH bands + norms, int64 dots, k-means argmax)
-  run as Arrow-batched numpy pandas UDFs: their SQL forms are
-  higher-order-function chains that Spark interprets row at a time.
-  Those SQL forms survive only as DuckDB oracle strings here and as
-  Spark-side references in tests/sig_reference.py.
+  `pyspark.sql.functions`.  Every md5 text signature (MinHash, simhash,
+  winnowing) runs on one Arrow digest kernel (``_md5_digests`` in
+  ``_text_udf``); sign-LSH bands, norms, int64 dots and the k-means
+  argmax run on numpy pandas UDFs.  Their SQL forms survive only as
+  DuckDB oracle strings here and as references in tests/sig_reference.py.
 
 Near-dup fixtures: the driver corpus has no natural duplicates, so dedup
 queries build a deterministic working set ``documents ∪ perturbed copies``
@@ -67,38 +66,18 @@ WORDS_D = "list_filter(string_split(text, ' '), x -> x <> '')"
 
 def let1(binding: str, var: str, body: str) -> str:
     """SQL let-binding: evaluate ``binding`` ONCE, bind it as lambda var
-    ``var`` inside ``body``.
-
-    Why this exists: Catalyst's CollapseProject inlines an aliased
-    expression into EVERY downstream reference, and PushDownPredicate
-    inlines it into filters below the projection.  For a scalar that is
-    harmless; for an O(n) array expression referenced k times (or
-    referenced per-element inside a higher-order lambda) it multiplies
-    work by k — measured here: ``select(shingles).filter(size >= 1)``
-    over sf0.1 ran 34 s vs 0.8 s without the pushed filter, because the
-    word-split was re-evaluated per array element (O(n²) per row).  At
-    100 TB that multiplier rides on every row, so the heavy per-row
-    signature expressions below are built as one let-bound expression
-    instead of chained selects.  ``transform`` evaluates its input
-    exactly once and lambda-variable references are value lookups.
-    """
+    ``var`` inside ``body``.  Catalyst's CollapseProject inlines an
+    aliased array expression into every reference, and PushDownPredicate
+    into filters below it: a word split re-evaluated per array element
+    measured 34 s vs 0.8 s over sf0.1.  ``transform`` evaluates its input
+    once and lambda-variable references are value lookups."""
     return f"transform(array({binding}), {var} -> {body})[0]"
 
-# word 3-gram shingles over a `words` column (Spark arrays are 0-based,
-# DuckDB 1-based; both emit shingle i = words[i..i+2] in order)
-SHINGLES_S = (
-    "CASE WHEN size(words) >= 3 THEN "
-    "transform(sequence(0, size(words) - 3), "
-    "i -> concat(words[i], ' ', words[i+1], ' ', words[i+2])) "
-    "ELSE array() END"
-)
+# word 3-gram shingles over a `words` column, shingle i = words[i..i+2]
 SHINGLES_D = (
     "list_transform(range(1, len(words) - 1), "
     "i -> words[i] || ' ' || words[i+1] || ' ' || words[i+2])"
 )
-
-N_MINHASH = 8      # minhash lanes (two-digest variant: 32-bit md5 slices)
-N_BANDS = 4        # LSH bands of 2 lanes each (64-bit band keys)
 
 # Dedup queries persist their signature tables (referenced 3-4× in one
 # plan).  The registry shares one SparkSession across 50 queries, so
@@ -128,14 +107,12 @@ def _persist(df, fresh: bool = True):
 
 
 # Few-hash minhash: hash each shingle TWICE (md5(x) ++ md5('#'+x) = 64 hex
-# chars), then treat the 8 disjoint 8-hex-char slices as 8 independent
-# 32-bit hash lanes and min each lane.  4x fewer digest computations than
-# seeded re-hashing per lane; 32-bit lanes make band keys 64-bit, so at
-# 10^9+ docs band collisions track similarity rather than the birthday
-# bound (16-bit lanes gave 32-bit band keys — false-candidate sets would
-# explode at corpus scale).  LSH candidates are still verified with exact
-# Jaccard.  Expressions below operate on a column `hs` = array of
-# per-shingle 64-hex digest concats.
+# chars) and min each of the 8 disjoint 8-hex-char slices as a 32-bit
+# lane: 4x fewer digests than seeded re-hashing per lane, and 64-bit band
+# keys, so at 10^9+ docs band collisions track similarity rather than the
+# birthday bound.  Candidates are verified with exact Jaccard.  The DuckDB
+# forms below read `hs` = per-shingle digest concats; Spark runs
+# `_minhash_batch`.
 
 HS_D = "list_transform(sh, x -> md5(x) || md5('#' || x))"
 
@@ -150,39 +127,95 @@ def _band_d(b: int) -> str:
     return f"{_minhash_d(2 * b)} || {_minhash_d(2 * b + 1)}"
 
 
-# --- Spark-side single-pass signature expressions ---------------------------
-# Each is ONE let-bound expression from `text`: words, shingles, digests and
-# lanes are each evaluated exactly once per row (see let1).  The DuckDB
-# oracle keeps the readable multi-CTE form — its vectorized engine doesn't
-# inline-recompute, and it is the correctness gate, not the benched path.
-
+# Word 3-gram shingles straight from `text`, one let-bound expression: the
+# words are split once per row (see let1).  The n-gram Jaccard and
+# decontamination paths use it; they compare shingles and never hash them.
 SHINGLES_FROM_TEXT_S = let1(
     WORDS_S, "ws",
     "CASE WHEN size(ws) >= 3 THEN transform(sequence(0, size(ws) - 3), "
     "i -> concat(ws[i], ' ', ws[i+1], ' ', ws[i+2])) ELSE array() END")
 
-# all 8 lane-mins in one pass structure over a bound `hs`
-_LANES8 = (f"transform(sequence(0, {N_MINHASH - 1}), j -> "
-           "array_min(transform(hs, h -> substring(h, cast(8 * j + 1 as int), 8))))")
 
-_HS_OVER_SH = "transform(sh, x -> concat(md5(x), md5(concat('#', x))))"
+# --- the one text-signature engine: every md5 text signature (MinHash
+# lanes, simhash votes, winnowing) is `_md5_digests` + numpy in `_text_udf`
 
-def _over_lanes_s(body: str) -> str:
-    """``body`` over the let-bound shingles ``sh``, their digests ``hs``
-    and the 8 lane mins ``ln``, each evaluated once per row from text."""
-    return let1(SHINGLES_FROM_TEXT_S, "sh",
-                let1(_HS_OVER_SH, "hs", let1(_LANES8, "ln", body)))
+def _split_words(text) -> list:
+    """WORDS_S in Python: split on ' ', empties dropped; None has none."""
+    return [w for w in text.split(" ") if w] if text is not None else []
 
 
-MINHASH_SIG_S = _over_lanes_s(
-    "named_struct('n_shingles', size(sh), 'mh0', ln[0], 'mh1', ln[1], "
-    "'band0', concat(ln[0], ln[1]), 'band1', concat(ln[2], ln[3]), "
-    "'band2', concat(ln[4], ln[5]), 'band3', concat(ln[6], ln[7]))")
+def _md5_digests(tokens, two: bool):
+    """(digest matrix, offsets) of ``tokens``, a list of per-row token
+    lists.  Matrix row k is the 16-byte md5(x) of the k-th token, or the
+    32-byte md5(x) ++ md5('#'+x) when ``two``; text row i owns matrix rows
+    offs[i]:offs[i+1]."""
+    import hashlib
 
-MINHASH_LSH_SIG_S = _over_lanes_s(
-    "named_struct('shset', array_distinct(sh), "
-    "'bands', array(concat(ln[0], ln[1]), concat(ln[2], ln[3]), "
-    "concat(ln[4], ln[5]), concat(ln[6], ln[7])))")
+    import numpy as np
+
+    buf = bytearray()
+    for toks in tokens:
+        for x in toks:
+            b = x.encode("utf-8")
+            buf += hashlib.md5(b).digest()
+            if two:
+                buf += hashlib.md5(b"#" + b).digest()
+    offs = np.zeros(len(tokens) + 1, dtype=np.int64)
+    np.cumsum([len(toks) for toks in tokens], out=offs[1:])
+    return (np.frombuffer(bytes(buf), dtype=np.uint8)
+            .reshape(-1, 32 if two else 16), offs)
+
+
+def _text_udf(kernel, schema: str, *args):
+    """``kernel(texts, *args)`` over a text column as an Arrow-batched
+    pandas UDF; a kernel returns one value per text, or a dict of columns
+    for a struct ``schema``.  Callers filter rows BEFORE it: a filter on
+    its output is pushed below the projection and copies the UDF into a
+    second ArrowEvalPython node.  Why not the SQL forms: every
+    higher-order function is CodegenFallback, run in Catalyst's row-at-a-
+    time interpreter — a 2.4M-row simhash run had all 32 executor threads
+    in ArrayTransform.eval/ZipWith.eval, ~19 core-ms/row, 10-40x this."""
+    import pandas as pd
+
+    # no type hints: `from __future__ import annotations` stringifies
+    # them and the lazy pandas import is not resolvable at decoration
+    def _batch(texts):
+        out = kernel(texts.tolist(), *args)
+        return pd.DataFrame(out) if isinstance(out, dict) else pd.Series(out)
+
+    return F.pandas_udf(_batch, schema)
+
+
+def _minhash_batch(texts):
+    """(n_shingles, shset, bands) of each text: the word 3-gram count, the
+    distinct shingles in first-occurrence order (`array_distinct`) and 4
+    band keys of two lanes each.  Lane j, the min of hex chars 8j..8j+7,
+    is the min of bytes 4j..4j+3 read big-endian.  No shingle: 0, [] and
+    4 null bands, as in the SQL reference."""
+    import numpy as np
+
+    n_sh, shsets = [], []
+    for t in texts:
+        ws = _split_words(t)
+        sh = [" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)]
+        n_sh.append(len(sh))
+        shsets.append(list(dict.fromkeys(sh)))
+    raw, offs = _md5_digests(shsets, True)
+    bands = [[None] * 4 for _ in shsets]
+    nz = np.flatnonzero(np.diff(offs))
+    if nz.size:
+        lanes = np.minimum.reduceat(raw.view(">u4"), offs[nz], axis=0)
+        hx = lanes.astype(">u4").tobytes().hex()
+        for r, i in enumerate(nz):
+            bands[i] = [hx[64 * r + 16 * k:64 * r + 16 * k + 16]
+                        for k in range(4)]
+    return {"n_shingles": n_sh, "shset": shsets, "bands": bands}
+
+
+def minhash_udf():
+    """The one Spark-side MinHash engine, over ``text``."""
+    return _text_udf(_minhash_batch, "struct<n_shingles:int,"
+                     "shset:array<string>,bands:array<string>>")
 
 
 # near-dup document working set: every doc_id % 7 == 0 gets a copy
@@ -264,13 +297,16 @@ def dedup_exact(spark, sf_dir):
         "of 64 bits; per-row narrow compute, no shuffle",
 )
 def dedup_minhash_signatures(spark, sf_dir):
-    # cheap pre-filter (≥3 words ⟺ ≥1 shingle) BEFORE the signature
-    # projection — a pushed filter on the signature column would inline
-    # and re-evaluate the whole digest chain per row (see let1)
-    return (t(spark, sf_dir, "documents")
-            .filter(F.expr(f"size({WORDS_S}) >= 3"))
-            .select("doc_id", F.expr(MINHASH_SIG_S).alias("sig"))
-            .select("doc_id", "sig.*"))
+    # cheap pre-filter (≥3 words ⟺ ≥1 shingle) BEFORE the kernel (see
+    # _text_udf); mh0/mh1 are the two lanes of band 0
+    sig = (t(spark, sf_dir, "documents")
+           .filter(F.expr(f"size({WORDS_S}) >= 3"))
+           .select("doc_id", minhash_udf()(F.col("text")).alias("sig")))
+    b = F.col("sig.bands")
+    return sig.select("doc_id", "sig.n_shingles",
+                      F.substring(b[0], 1, 8).alias("mh0"),
+                      F.substring(b[0], 9, 8).alias("mh1"),
+                      *[b[k].alias(f"band{k}") for k in range(4)])
 
 
 # --- the MinHash-LSH core: signatures → band rows → band join → verify ------
@@ -278,11 +314,10 @@ def dedup_minhash_signatures(spark, sf_dir):
 def minhash_signatures(docs):
     """(doc_id, shset, bands) of every (doc_id, text) row of ``docs`` with
     at least 3 words: the distinct shingle set and the 4 64-bit band keys.
-    The word-count filter runs BEFORE the signature projection, as in
-    dedup_minhash_signatures (see let1)."""
+    The word-count filter runs BEFORE the kernel (see _text_udf)."""
     return (docs.filter(F.expr(f"size({WORDS_S}) >= 3"))
-            .select("doc_id", F.expr(MINHASH_LSH_SIG_S).alias("sig"))
-            .select("doc_id", "sig.*"))
+            .select("doc_id", minhash_udf()(F.col("text")).alias("sig"))
+            .select("doc_id", "sig.shset", "sig.bands"))
 
 
 def minhash_bands(sigs, *cols):
@@ -369,7 +404,7 @@ def _simhash_expr_d(nbits: int = 16) -> str:
     """``nbits``-bit simhash over a column `hs` = array of per-word md5 hex
     strings (md5 has 32 hex digits, so nbits <= 32).  DuckDB dialect only
     (one vectorized list pass per bit is fine in the oracle; the Spark
-    side is the single-pass _simhash_from_text_s).
+    side gathers the 16 bits from `simhash_bands_udf(16)`, _SIMHASH16_S).
 
     Bit j votes +1/-1 on the parity of hex digit j of each word hash;
     bit set iff the vote sum is strictly positive.
@@ -416,44 +451,17 @@ def _simhash_bands_batch(texts, bits: int):
     digits), so at bits=15 the bands are the 60-bit signature's split.
     Bands PARTITION the signature, so pigeonhole recall (<= 3 flipped
     bits -> >= 1 band untouched) holds at ANY width.  Bit-identical to
-    the SQL reference in tests/sig_reference.py (fuzzed and
-    parity-tested in tests/test_sig_parity.py), ~10-40x faster per row.
-
-    Why a Python path beats the built-in expression HERE: every
-    higher-order function (transform/aggregate/zip_with) is
-    CodegenFallback in Spark — the per-word/per-bit vote fold runs in
-    Catalyst's row-at-a-time INTERPRETER, never whole-stage codegen
-    (verified by thread-dumping a 2.4M-row production run: all 32
-    executor threads inside ArrayTransform.eval/ZipWith.eval, ~19
-    core-ms/row).  The rewrite keeps md5 in C (hashlib) and folds the
-    votes as three numpy ops over ALL words of the batch at once
-    (nibble split -> ±1 vote matrix -> per-doc reduceat), so the hot
-    loop is one md5 call per word — the "UDFs are the slow path" rule
-    inverts when the built-in path is an interpreted HOF chain.
+    the SQL reference in tests/sig_reference.py (parity-tested).
 
     Returns a list aligned to ``texts``: array of 4 int64 band values,
     or None for word-less docs."""
-    import hashlib
-
     import numpy as np
 
-    need2 = bits > 32
-    counts: list[int] = []
-    digests: list[bytes] = []
-    for t in texts:
-        ws = [w for w in (t.split(" ") if t is not None else []) if w]
-        counts.append(len(ws))
-        for w in ws:
-            b = w.encode("utf-8")
-            d = hashlib.md5(b).digest()
-            if need2:
-                d += hashlib.md5(b"#" + b).digest()
-            digests.append(d)
-    out: list = [None] * len(counts)
-    if not digests:
+    raw, offs = _md5_digests([_split_words(t) for t in texts], bits > 32)
+    out: list = [None] * len(texts)
+    nz = np.flatnonzero(np.diff(offs))
+    if not nz.size:
         return out
-    raw = np.frombuffer(b"".join(digests), dtype=np.uint8)
-    raw = raw.reshape(len(digests), 32 if need2 else 16)
     # hexdigest digit d = high nibble of byte d//2 when d is even
     nib = np.empty((raw.shape[0], raw.shape[1] * 2), np.uint8)
     nib[:, 0::2] = raw >> 4
@@ -463,11 +471,7 @@ def _simhash_bands_batch(texts, bits: int):
     # flat order the SQL form's sequence(1, 4*bits) lambda walks
     bv = (nib[:, :, None] >> np.arange(4, dtype=np.uint8)) & 1
     pm = bv.reshape(bv.shape[0], 4 * bits).astype(np.int32) * 2 - 1
-    nw = np.asarray(counts, dtype=np.int64)
-    nz = np.flatnonzero(nw)
-    offs = np.zeros(len(nz), dtype=np.int64)
-    np.cumsum(nw[nz][:-1], out=offs[1:])
-    votes = np.add.reduceat(pm, offs, axis=0)
+    votes = np.add.reduceat(pm, offs[nz], axis=0)
     bitset = votes > 0
     weights = np.left_shift(np.int64(1), np.arange(bits, dtype=np.int64))
     bands = (bitset.reshape(-1, SIMHASH_BANDS, bits) * weights).sum(
@@ -480,38 +484,18 @@ def _simhash_bands_batch(texts, bits: int):
 def simhash_bands_udf(bits: int):
     """`_simhash_bands_batch` as an Arrow-batched pandas UDF column —
     the one Spark-side simhash band engine (`dedup_texts_run` and the
-    registry `dedup_simhash_blocked`)."""
+    registry `dedup_simhash_blocked` and `dedup_simhash`)."""
     if not 1 <= bits <= 63:
         raise ValueError(f"band width {bits} outside [1, 63]")
-    import pandas as pd
-    from pyspark.sql.types import ArrayType, LongType
-
-    # no type hints: `from __future__ import annotations` stringifies
-    # them and the lazy pandas import is not resolvable at decoration
-    def _batch(texts):
-        return pd.Series(_simhash_bands_batch(texts.tolist(), bits))
-
-    return F.pandas_udf(_batch, ArrayType(LongType()))
+    return _text_udf(_simhash_bands_batch, "array<bigint>", bits)
 
 
-def _simhash_from_text_s(nbits: int = 16) -> str:
-    """Spark-side simhash straight from `text`, ONE pass over the word
-    digests: aggregate folds every md5 into an nbits-wide vote vector
-    (zip_with adds the ±1 parity votes of all bits at once), then the
-    vote vector folds into the signature.  The naive per-bit form is
-    nbits separate aggregates over `hs`, and Catalyst additionally
-    inlines the md5 transform into each (see let1) — measured 6×
-    slower at sf0.1 and O(nbits·n) per row at scale instead of O(n)."""
-    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
-             f"(acc, h) -> zip_with(acc, transform(sequence(1, {nbits}), "
-             "j -> CASE WHEN (instr('0123456789abcdef', substr(h, j, 1)) - 1) % 2 = 1 "
-             "THEN 1 ELSE -1 END), (x, y) -> x + y))")
-    bits = (f"cast(aggregate(sequence(0, {nbits - 1}), cast(0 as bigint), "
-            "(a, j) -> a + (CASE WHEN vt[j] > 0 "
-            "THEN shiftleft(cast(1 as bigint), j) ELSE cast(0 as bigint) END)) "
-            "as bigint)")
-    return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
-                let1(votes, "vt", bits))
+# dedup_simhash's 16-bit signature gathered from `simhash_bands_udf(16)`:
+# its bit j votes on bit 0 of word-digest hex digit j, which is bit 4j of
+# the 64-bit signature, i.e. bit 4(j mod 4) of band j div 4
+_SIMHASH16_S = " | ".join(
+    f"shiftleft(shiftright(bands[{j // 4}], {4 * (j % 4)}) & 1, {j})"
+    for j in range(16))
 
 
 def _band_pairs(ex, id_col: str, a: str, b: str):
@@ -565,11 +549,11 @@ def _simhash_pairs(sigs, ex, hamming_max: int):
         "distance on engineered original/truncated pairs; near iff <= 3 bits",
 )
 def dedup_simhash(spark, sf_dir):
-    corpus = _neardup_corpus_s(spark, sf_dir)
-    sigs = (
-        corpus.filter(F.expr(f"size({WORDS_S}) >= 1"))
-        .select("doc_id", F.expr(_simhash_from_text_s()).alias("simhash"))
-    )
+    sigs = (_neardup_corpus_s(spark, sf_dir)
+            .filter(F.expr(f"size({WORDS_S}) >= 1"))   # see _text_udf
+            .select("doc_id",
+                    simhash_bands_udf(16)(F.col("text")).alias("bands"))
+            .select("doc_id", F.expr(_SIMHASH16_S).alias("simhash")))
     sigs = _persist(sigs)   # referenced 2×: both legs of the pair join
     o, c = sigs.alias("o"), sigs.alias("c")
     ham = F.expr("bit_count(o.simhash ^ c.simhash)").cast("int")
@@ -624,11 +608,11 @@ def dedup_simhash(spark, sf_dir):
 )
 def dedup_simhash_blocked(spark, sf_dir):
     # the 4 Arrow-computed 15-bit bands ARE the 60-bit signature's band
-    # split; word-less docs get null bands and drop out as in the oracle
+    # split; word-less docs drop out before the UDF (see _text_udf)
     sigs = (_neardup_corpus_s(spark, sf_dir)
+            .filter(F.expr(f"size({WORDS_S}) >= 1"))
             .select("doc_id",
-                    simhash_bands_udf(15)(F.col("text")).alias("bands"))
-            .filter(F.col("bands").isNotNull()))
+                    simhash_bands_udf(15)(F.col("text")).alias("bands")))
     sigs = _persist(sigs)   # referenced 3x: band explode + both verify legs
     ex = sigs.select("doc_id",
                      F.posexplode("bands").alias("band_idx", "bucket"))
@@ -940,7 +924,6 @@ def dedup_apply(spark, sf_dir):
 # Training-pipeline utilities: stratified sampling + sequence packing
 # ---------------------------------------------------------------------------
 
-SAMPLE_RATES = {"en": 50, "de": 30}   # percent; default 10
 _RATE_S = ("CASE lang WHEN 'en' THEN 50 WHEN 'de' THEN 30 ELSE 10 END")
 
 
@@ -1299,7 +1282,7 @@ def emb_bands_nrm_udf(ppb: int):
     aggregate — no rounding-order hazard (parity-tested in
     tests/test_sig_parity.py).  Why not the built-in expressions: each
     plane dot is an aggregate(zip_with(...)) — CodegenFallback, Catalyst
-    interprets 4*ppb*EMB_DIM ops per row (see _simhash_bands_batch);
+    interprets 4*ppb*EMB_DIM ops per row (see _text_udf);
     here it is one (batch x 64) @ (64 x 4*ppb) int64 matmul."""
     import pandas as pd
     from pyspark.sql.types import (ArrayType, IntegerType, LongType,
@@ -1561,7 +1544,7 @@ def kmeans_assign_udf(rows):
     production assignment path for derived K (bounded by the
     ``KMEANS_K_MAX`` broadcast budget: 64Ki x 64 doubles = 32 MB in the
     closure).  Why: the literal-expression argmax interprets K x EMB_DIM
-    ops per row (HOFs are CodegenFallback — see _simhash_bands_batch);
+    ops per row (HOFs are CodegenFallback — see _text_udf);
     here it is one (batch x 64) @ (64 x K) matmul.
 
     Parity vs the SQL forms: the SEED round is bit-identical (integer-
@@ -1814,10 +1797,14 @@ def dedup_semantic(spark, sf_dir):
 
 
 # Malformed-row rules of the production dedup inputs (reason, or NULL for a
-# well-formed row).  A word-less text is null or all spaces: words split on
-# ' ' with empties dropped, and trim strips exactly the ' ' character.
+# well-formed row).  A null, NaN or infinite element would crash the Arrow
+# UDFs or quantize to 0 or Long.MAX (overflowing the int64 dot).  A
+# word-less text is null or all spaces: words split on ' ' with empties
+# dropped, and trim strips exactly the ' ' character.
 EMB_REJECT_S = ("CASE WHEN embedding IS NULL THEN 'null_embedding' "
-                f"WHEN size(embedding) <> {EMB_DIM} THEN 'bad_dim' END")
+                f"WHEN size(embedding) <> {EMB_DIM} THEN 'bad_dim' "
+                "WHEN exists(embedding, x -> x IS NULL OR isnan(x) "
+                "OR abs(x) = double('inf')) THEN 'bad_value' END")
 TEXT_REJECT_S = "CASE WHEN text IS NULL OR trim(text) = '' THEN 'no_words' END"
 
 
@@ -2262,26 +2249,41 @@ FINGERPRINT_SQL = f"""
     """
 
 
+def _fingerprint_batch(texts):
+    """(n_fps, fp_min, fp_max) of each text's winnowing sketch: the md5
+    hex of every word 4-gram, the min of each window of 3 consecutive
+    ones, and the distinct count, min and max of those window mins.  The
+    hex order is the digest byte order, so `min` over hex strings is the
+    SQL `least`.  A text under 6 words has no sketch: 0, null, null."""
+    grams = []
+    for t in texts:
+        ws = _split_words(t)
+        grams.append([" ".join(ws[i:i + 4]) for i in range(len(ws) - 3)]
+                     if len(ws) >= 6 else [])
+    raw, offs = _md5_digests(grams, False)
+    hx = raw.tobytes().hex()
+    out = {"n_fps": [], "fp_min": [], "fp_max": []}
+    for a, b in zip(offs[:-1], offs[1:]):
+        kh = [hx[32 * k:32 * k + 32] for k in range(a, b)]
+        fps = {min(kh[i:i + 3]) for i in range(len(kh) - 2)}
+        out["n_fps"].append(len(fps))
+        out["fp_min"].append(min(fps, default=None))
+        out["fp_max"].append(max(fps, default=None))
+    return out
+
+
 def text_fingerprint(spark, sf_dir):
     """Document fingerprinting (winnowing): word-4-gram rolling md5
     hashes, min per sliding window of 3, distinct fingerprint set — the
-    standard near-copy sketch; per-row compute only.  Registry leg of
-    text_tokens_fingerprint."""
-    kh = ("CASE WHEN size(words) >= 6 THEN "
-          "transform(sequence(0, size(words) - 4), "
-          "i -> md5(concat(words[i], ' ', words[i+1], ' ', words[i+2], ' ', words[i+3]))) "
-          "ELSE array() END")
-    fps = ("array_distinct(transform(sequence(0, size(kh) - 3), "
-           "i -> least(kh[i], kh[i+1], kh[i+2])))")
-    return (
-        t(spark, sf_dir, "documents")
-        .select("doc_id", F.expr(WORDS_S).alias("words"))
-        .filter(F.size("words") >= 6)
-        .select("doc_id", F.expr(kh).alias("kh"))
-        .select("doc_id", F.expr(fps).alias("fps"))
-        .select("doc_id", F.size("fps").alias("n_fps"),
-                F.array_min("fps").alias("fp_min"), F.array_max("fps").alias("fp_max"))
-    )
+    standard near-copy sketch; per-row compute only (`_fingerprint_batch`).
+    Registry leg of text_tokens_fingerprint."""
+    fp = _text_udf(_fingerprint_batch,
+                   "struct<n_fps:bigint,fp_min:string,fp_max:string>")
+    # the >= 6 words pre-filter runs before the UDF (see _text_udf)
+    return (t(spark, sf_dir, "documents")
+            .filter(F.expr(f"size({WORDS_S}) >= 6"))
+            .select("doc_id", fp(F.col("text")).alias("fp"))
+            .select("doc_id", "fp.*"))
 
 
 @register(
@@ -2301,10 +2303,7 @@ def text_fingerprint(spark, sf_dir):
 )
 def text_tokens_fingerprint(spark, sf_dir):
     tc = text_token_count(spark, sf_dir)
-    fp = (text_fingerprint(spark, sf_dir)
-          .select("doc_id", F.col("n_fps").cast("bigint").alias("n_fps"),
-                  "fp_min", "fp_max"))
-    return tc.join(fp, "doc_id", "left")
+    return tc.join(text_fingerprint(spark, sf_dir), "doc_id", "left")
 
 
 # ---------------------------------------------------------------------------

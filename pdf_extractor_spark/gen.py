@@ -20,7 +20,6 @@ from __future__ import annotations
 import random
 
 US = "\x1f"
-SIZES = [9.0, 10.0, 12.0, 14.0, 16.0, 20.0]
 ARCHETYPES = ["form", "report", "proposal", "flyer", "webpage", "mixed"]
 ARCHETYPE_WEIGHTS = [0.10, 0.25, 0.20, 0.10, 0.25, 0.10]
 

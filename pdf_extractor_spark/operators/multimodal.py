@@ -24,7 +24,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-MEDIA_SCHEMA = "doc_id bigint, media_ref string, n_bytes int, media_kind string"
 FEATURE_SCHEMA = (
     "doc_id bigint, media_ref string, n_bytes int, media_kind string, "
     "feat array<float>, feat_norm double"

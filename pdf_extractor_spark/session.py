@@ -26,10 +26,11 @@ ARROW_MAX_RECORDS = 64
 def get_spark(app: str = "pdf_extractor_spark", master: str | None = None,
               shuffle_partitions: int | None = None) -> SparkSession:
     # Python workers must import this package to unpickle its pandas-UDF
-    # closures (the Arrow signature paths).  Local workers inherit the
-    # driver env, so pin the package parent onto PYTHONPATH instead of
-    # relying on the caller's cwd; a cluster submit ships the package via
-    # `spark-submit --py-files` and this is a no-op there.
+    # closures (the Arrow signature paths).  Pin the package parent onto
+    # PYTHONPATH instead of relying on the caller's cwd: in the driver env,
+    # which local workers inherit, and in the executor env, which workers
+    # get wherever they run.  A cluster submit ships the package via
+    # `spark-submit --py-files` as well.
     pkg_parent = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     pp = os.environ.get("PYTHONPATH", "")
     if pkg_parent not in pp.split(os.pathsep):
@@ -43,6 +44,7 @@ def get_spark(app: str = "pdf_extractor_spark", master: str | None = None,
         shuffle_partitions = cpus if n == "*" else int(n)
     b = (
         SparkSession.builder.master(master).appName(app)
+        .config("spark.executorEnv.PYTHONPATH", os.environ["PYTHONPATH"])
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

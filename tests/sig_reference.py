@@ -1,19 +1,78 @@
-"""Spark SQL reference forms of the near-dup signatures and the int64 dot.
+"""Spark SQL reference forms of the text signatures and the embedding math.
 
-The package computes these with Arrow-batched numpy engines
-(``corpus.simhash_bands_udf``, ``corpus.emb_bands_nrm_udf``,
+The package computes every md5 text signature on one Arrow kernel
+(``corpus._md5_digests`` under ``corpus.minhash_udf``,
+``corpus.simhash_bands_udf`` and ``corpus.text_fingerprint``) and the
+embedding bands, norms and dots with numpy (``corpus.emb_bands_nrm_udf``,
 ``corpus.emb_dot_udf``).  The SQL higher-order-function forms below
-compute the same values row at a time inside Spark; the parity tests
-compare the engines against them, the pure-Python replicas in
-tests/test_sig_parity.py check them in turn, and the brute-force dedup
-oracles of tests/test_dedup_cli.py score with ``DOT_S``.  The DuckDB
-dialect of each form stays in the package as the registry oracles.
+compute the same values row at a time inside Spark; the parity tests in
+tests/test_sig_parity.py compare the engines against them and check them
+in turn against pure-Python replicas, and the brute-force dedup oracles of
+tests/test_dedup_cli.py score with ``DOT_S``.  The DuckDB dialect of each
+form stays in the package as the registry oracles.
 """
 
 from pyspark.sql import functions as F
 
-from pdf_extractor_spark.corpus import (N_EMB_BANDS, WORDS_S, _plane_signs,
-                                        let1)
+from pdf_extractor_spark.corpus import (N_EMB_BANDS, SHINGLES_FROM_TEXT_S,
+                                        WORDS_S, _plane_signs, let1)
+
+
+# --- MinHash (corpus.minhash_udf) ------------------------------------------
+# One let-bound expression from `text`: the shingles `sh`, their digests
+# `hs` (md5(x) ++ md5('#'+x), 64 hex chars) and the 8 lane mins `ln` (min
+# over hex chars 8j..8j+7) are each evaluated once per row (see let1).
+
+_LANES8 = ("transform(sequence(0, 7), j -> "
+           "array_min(transform(hs, h -> substring(h, cast(8 * j + 1 as int), 8))))")
+
+_HS_OVER_SH = "transform(sh, x -> concat(md5(x), md5(concat('#', x))))"
+
+
+def _over_lanes_s(body: str) -> str:
+    """``body`` over the let-bound ``sh``, ``hs`` and ``ln``."""
+    return let1(SHINGLES_FROM_TEXT_S, "sh",
+                let1(_HS_OVER_SH, "hs", let1(_LANES8, "ln", body)))
+
+
+# the columns of the registry dedup_minhash_signatures
+MINHASH_SIG_S = _over_lanes_s(
+    "named_struct('n_shingles', size(sh), 'mh0', ln[0], 'mh1', ln[1], "
+    "'band0', concat(ln[0], ln[1]), 'band1', concat(ln[2], ln[3]), "
+    "'band2', concat(ln[4], ln[5]), 'band3', concat(ln[6], ln[7]))")
+
+# the full struct of corpus.minhash_udf
+MINHASH_LSH_SIG_S = _over_lanes_s(
+    "named_struct('n_shingles', size(sh), 'shset', array_distinct(sh), "
+    "'bands', array(concat(ln[0], ln[1]), concat(ln[2], ln[3]), "
+    "concat(ln[4], ln[5]), concat(ln[6], ln[7])))")
+
+
+def _simhash_from_text_s(nbits: int = 16) -> str:
+    """The registry dedup_simhash signature straight from `text`, ONE pass
+    over the word digests: aggregate folds every md5 into an nbits-wide
+    vote vector (zip_with adds the ±1 parity votes of all bits at once),
+    then the vote vector folds into the signature.  The package gathers
+    these bits from ``corpus.simhash_bands_udf(16)`` (``_SIMHASH16_S``)."""
+    votes = (f"aggregate(hs, transform(sequence(1, {nbits}), j -> 0), "
+             f"(acc, h) -> zip_with(acc, transform(sequence(1, {nbits}), "
+             "j -> CASE WHEN (instr('0123456789abcdef', substr(h, j, 1)) - 1) % 2 = 1 "
+             "THEN 1 ELSE -1 END), (x, y) -> x + y))")
+    bits = (f"cast(aggregate(sequence(0, {nbits - 1}), cast(0 as bigint), "
+            "(a, j) -> a + (CASE WHEN vt[j] > 0 "
+            "THEN shiftleft(cast(1 as bigint), j) ELSE cast(0 as bigint) END)) "
+            "as bigint)")
+    return let1(f"transform({WORDS_S}, w -> md5(w))", "hs",
+                let1(votes, "vt", bits))
+
+
+# winnowing sketch of corpus.text_fingerprint: md5 hex of each word 4-gram,
+# min of each window of 3, distinct; over a `words` column of >= 6 words
+FINGERPRINT_KH_S = (
+    "transform(sequence(0, size(words) - 4), "
+    "i -> md5(concat(words[i], ' ', words[i+1], ' ', words[i+2], ' ', words[i+3])))")
+FINGERPRINT_FPS_S = ("array_distinct(transform(sequence(0, size(kh) - 3), "
+                     "i -> least(kh[i], kh[i+1], kh[i+2])))")
 
 
 # exact int64 dot product of two quantized vectors qa, qb (the SQL form of
@@ -23,7 +82,7 @@ DOT_S = "aggregate(zip_with(qa, qb, (x, y) -> x * y), 0L, (acc, v) -> acc + v)"
 
 def _simhash_nib_from_text_s(nbits: int = 60) -> str:
     """Spark dialect of the wide simhash, single aggregate pass (see
-    corpus._simhash_from_text_s for why one pass matters).  Per word hash
+    _simhash_from_text_s for why one pass matters).  Per word hash
     the ceil(nbits/4) hex nibbles are decoded ONCE (let-bound), then the
     nbits per-bit votes are cheap shifts — instr/substr per BIT would
     quadruple the string work in the inner loop."""

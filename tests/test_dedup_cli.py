@@ -352,6 +352,37 @@ class TestMalformedRows:
         assert got == self.PLANTED
         assert metrics["pairs"] == metrics["non_canonical"] == 10
 
+    # one bad element in a copy of a good vector, planted `count` times
+    # at different positions; unquarantined, each copy would pair with
+    # its original (NaN quantizes to 0) or break the run
+    @pytest.mark.parametrize("value, count", [
+        (None, 1), (float("nan"), 2), (float("inf"), 3)])
+    def test_bad_elements_rejected_as_bad_value(self, spark, tmp_path,
+                                                capsys, value, count):
+        rng = random.Random(7)
+        vecs = [_random_vec(rng) for _ in range(10)]
+        rows = [(i, vecs[i % 10]) for i in range(20)]
+        for k in range(count):
+            v = list(vecs[k])
+            v[17 * k] = -value if value is not None and k % 2 else value
+            rows.append((200 + k, v))
+        inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+        (spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+         .write.parquet(inp))
+
+        from pdf_extractor_spark.cli import main
+        assert main(["--dedup-embeddings", inp, "--output", out]) == 0
+        metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert (metrics["rows_in"], metrics["kept"], metrics["rejected"]) \
+            == (20 + count, 20, count)
+        assert metrics["rejected_by_reason"] == {"bad_value": count}
+        rejected = {(r.vec_id, r.reason)
+                    for r in spark.read.parquet(f"{out}/rejected").collect()}
+        assert rejected == {(200 + k, "bad_value") for k in range(count)}
+        got = {(r.vec_a, r.vec_b)
+               for r in spark.read.parquet(f"{out}/pairs").collect()}
+        assert got == self.PLANTED
+
     def test_wordless_texts_rejected_and_stale_quarantine_removed(
             self, spark, tmp_path, capsys):
         rng = random.Random(11)
@@ -479,3 +510,14 @@ def test_rerun_after_session_restart(tmp_path):
          str(tmp_path / "out")],
         cwd=repo, env=env, capture_output=True, text=True, timeout=600)
     assert r.returncode == 0, r.stderr[-4000:]
+
+
+def test_get_spark_pins_package_parent_on_executors(spark):
+    """Python workers unpickle the package's pandas-UDF closures, so the
+    package parent rides in the executor env, not only in the driver's
+    (which only local workers inherit)."""
+    import pdf_extractor_spark
+    parent = os.path.dirname(os.path.dirname(
+        os.path.abspath(pdf_extractor_spark.__file__)))
+    pp = spark.sparkContext.getConf().get("spark.executorEnv.PYTHONPATH")
+    assert pp is not None and parent in pp.split(os.pathsep), pp

@@ -6,6 +6,8 @@ show up in `.explain` output, or a refactor silently regressed them.
 * a fresh-dir extraction run is exactly four SQL executions;
 * a production embedding dedup pass runs each Arrow UDF once per row and
   makes 4 + 2 per component round SQL executions;
+* the registry MinHash and simhash entries run their text-signature UDF
+  once per signed row;
 * dimension joins broadcast instead of shuffling the fact side;
 * filters and column pruning reach the parquet scan.
 """
@@ -147,6 +149,29 @@ def test_dedup_run_is_four_plus_two_per_round_executions(dedup_pass):
     they are written."""
     m, execs = dedup_pass
     assert len(execs) == 4 + 2 * m["cc_rounds"]
+
+
+@pytest.mark.parametrize("name, min_words", [
+    ("dedup_minhash_lsh", 3), ("dedup_simhash", 1),
+    ("dedup_simhash_blocked", 1)])
+def test_text_signature_udf_runs_once_per_signed_row(spark, name, min_words):
+    """The text-signature UDF outputs each signed row of the near-dup
+    corpus exactly once: a struct-field or gather projection inlined into a
+    second ArrowEvalPython node, or a filter pushed below the UDF, would
+    count rows twice.  The signed rows (>= 3 words for MinHash, >= 1 for
+    simhash) are counted by DuckDB over the oracle's corpus."""
+    import duckdb
+
+    from pdf_extractor_spark.corpus import NEARDUP_CORPUS_D, WORDS_D
+    want = duckdb.sql(
+        f"WITH documents AS (SELECT * FROM '{SF_DIR}/documents.parquet'), "
+        f"{NEARDUP_CORPUS_D} SELECT count(*) FROM corpus "
+        f"WHERE len({WORDS_D}) >= {min_words}").fetchone()[0]
+    before = _last_execution_id(spark)
+    REGISTRY[name].spark(spark, SF_DIR).collect()
+    got = sum(rows for nodes in _arrow_eval_nodes(spark, before).values()
+              for _desc, rows in nodes)
+    assert want > 0 and got == want
 
 
 def test_q03_broadcasts_dimension(spark):

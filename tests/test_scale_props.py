@@ -6,7 +6,8 @@ import pyspark.sql.functions as F
 import pytest
 
 from pdf_extractor_spark.corpus import (
-    SHINGLES_S, WORDS_S, _neardup_corpus_s, _prefix_filtered_candidates)
+    SHINGLES_FROM_TEXT_S, WORDS_S, _neardup_corpus_s,
+    _prefix_filtered_candidates)
 from pdf_extractor_spark.queries import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -16,9 +17,9 @@ SF_DIR = "/root/testdata/sf0.001"
 def shsets(spark):
     return (
         _neardup_corpus_s(spark, SF_DIR)
-        .select("doc_id", F.expr(WORDS_S).alias("words"))
-        .filter(F.size("words") >= 3)
-        .select("doc_id", F.array_distinct(F.expr(SHINGLES_S)).alias("shset"))
+        .filter(F.expr(f"size({WORDS_S}) >= 3"))
+        .select("doc_id",
+                F.array_distinct(F.expr(SHINGLES_FROM_TEXT_S)).alias("shset"))
     ).cache()
 
 

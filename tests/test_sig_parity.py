@@ -1,14 +1,15 @@
 """Fuzzed cross-engine parity of the signature engines.
 
-The minhash/shingle signatures are single let-bound SQL expressions
-(corpus.let1); the simhash and sign-LSH signatures run as Arrow-batched
-numpy engines, with their Spark SQL forms kept as references in
-tests/sig_reference.py.  These tests pin each against independent
-pure-python replicas over adversarial texts (empty, repeated separators,
-unicode, 1-2 word docs, duplicate words), and each Arrow engine against
-its SQL reference inside Spark — the oracle gate only exercises the
-fixture corpus, so an edge-case divergence (e.g. a boundary slip in the
-lane slicing or vote parity) would otherwise surface only at deploy.
+Every md5 text signature (MinHash, simhash, winnowing) runs on the one
+Arrow digest kernel of corpus.py, and the sign-LSH bands and int64 dots
+run on numpy; their Spark SQL higher-order-function forms are kept as
+references in tests/sig_reference.py.  These tests pin each reference and
+each kernel against independent pure-python replicas over adversarial
+texts (None, empty, repeated separators, unicode, 1-3 word docs, repeated
+shingles), and each Arrow engine against its SQL reference inside Spark —
+the oracle gate only exercises the fixture corpus, so an edge-case
+divergence (e.g. a boundary slip in the lane slicing, the shingle order
+or the vote parity) would otherwise surface only at deploy.
 """
 
 import hashlib
@@ -19,8 +20,10 @@ from hypothesis import strategies as st
 from pyspark.sql import functions as F
 from pyspark.sql.types import StringType, StructField, StructType
 
-from pdf_extractor_spark.corpus import MINHASH_SIG_S, SHINGLES_FROM_TEXT_S
-from sig_reference import (_bands_array_s, _simhash_bands_from_text_s,
+from pdf_extractor_spark.corpus import (SHINGLES_FROM_TEXT_S, _SIMHASH16_S,
+                                        minhash_udf, simhash_bands_udf)
+from sig_reference import (MINHASH_LSH_SIG_S, MINHASH_SIG_S, _bands_array_s,
+                           _simhash_bands_from_text_s, _simhash_from_text_s,
                            _simhash_nib_from_text_s)
 
 # words are split on a single space and empties dropped; include unicode,
@@ -30,6 +33,12 @@ word_st = st.text(
     min_size=1, max_size=8)
 text_st = st.lists(
     st.one_of(word_st, st.just("")), max_size=12).map(" ".join)
+# exactly 3 words (one shingle), and word runs repeated 2-4 times, so a
+# shingle recurs and the first-occurrence order of `shset` is exercised
+three_st = st.lists(word_st, min_size=3, max_size=3).map(" ".join)
+repeat_st = st.tuples(st.lists(word_st, min_size=1, max_size=4),
+                      st.integers(2, 4)).map(lambda p: " ".join(p[0] * p[1]))
+sig_text_st = st.one_of(text_st, three_st, repeat_st)
 
 
 def _words(t):
@@ -59,6 +68,35 @@ def _py_minhash_sig(text):
     }
 
 
+def _py_minhash_full(text):
+    """The struct of corpus.minhash_udf: (n_shingles, shset, bands)."""
+    sh = _shingles(_words(text or ""))
+    sig = _py_minhash_sig(text or "")
+    bands = ([sig[f"band{k}"] for k in range(4)] if sig else [None] * 4)
+    return len(sh), list(dict.fromkeys(sh)), bands
+
+
+def _py_simhash16(text):
+    """dedup_simhash's signature: bit j votes on the parity of hex digit j
+    of each word's md5."""
+    votes = [0] * 16
+    for w in _words(text):
+        h = _md5(w)
+        for j in range(16):
+            votes[j] += 1 if int(h[j], 16) & 1 else -1
+    return sum(1 << j for j in range(16) if votes[j] > 0)
+
+
+def _simhash16_cols(df):
+    """(text, arrow, sql): the 16-bit gather over simhash_bands_udf(16)
+    and its SQL reference, for the worded rows of ``df``."""
+    return (df.select("text", simhash_bands_udf(16)(F.col("text"))
+                      .alias("bands"))
+            .filter(F.col("bands").isNotNull())
+            .select("text", F.expr(_SIMHASH16_S).alias("arrow"),
+                    F.expr(_simhash_from_text_s()).alias("sql")))
+
+
 def _py_simhash_nib(text, nbits=60):
     ws = _words(text)
     if not ws:
@@ -72,10 +110,13 @@ def _py_simhash_nib(text, nbits=60):
     return sum(1 << j for j in range(nbits) if votes[j] > 0)
 
 
-def _run_texts(spark, texts, cols):
+def _text_df(spark, texts):
     schema = StructType([StructField("text", StringType())])
-    df = spark.createDataFrame([(t,) for t in texts], schema)
-    return df.select(*cols).collect()
+    return spark.createDataFrame([(t,) for t in texts], schema)
+
+
+def _run_texts(spark, texts, cols):
+    return _text_df(spark, texts).select(*cols).collect()
 
 
 @pytest.fixture(scope="module")
@@ -132,6 +173,63 @@ def test_minhash_sig_fuzz(spark_session_holder, texts):
 def spark_session_holder(spark):
     # hypothesis forbids function-scoped fixtures; re-expose module-scoped
     return spark
+
+
+# ---- the one text-signature kernel vs the moved SQL references ----
+
+def test_minhash_udf_matches_sql_reference(spark, fuzz_texts):
+    """The MinHash kernel's whole struct (n_shingles, shset in order, the
+    4 bands) equals MINHASH_LSH_SIG_S in Spark, short and None texts
+    included."""
+    texts = fuzz_texts + [None, "a b c a b c a b c d"] + [
+        " ".join("w%d" % (i % 5) for i in range(n)) for n in range(1, 20)]
+    rows = (_text_df(spark, texts)
+            .select("text", minhash_udf()(F.col("text")).alias("arrow"),
+                    F.expr(MINHASH_LSH_SIG_S).alias("sql")).collect())
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r.arrow.asDict() == r.sql.asDict(), repr(r.text)
+
+
+def test_simhash16_gather_matches_sql_reference(spark, fuzz_texts):
+    texts = [t for t in fuzz_texts if _words(t)]
+    rows = _simhash16_cols(_text_df(spark, texts)).collect()
+    assert len(rows) == len(texts)
+    for r in rows:
+        assert r.arrow == r.sql == _py_simhash16(r.text), repr(r.text)
+
+
+def test_fingerprint_kernel_matches_sql_reference(spark, fuzz_texts):
+    """The winnowing kernel of text_fingerprint vs its SQL form, on texts
+    of >= 6 words with few and with many distinct 4-grams."""
+    from pdf_extractor_spark.corpus import WORDS_S, _fingerprint_batch
+    from sig_reference import FINGERPRINT_FPS_S, FINGERPRINT_KH_S
+    texts = fuzz_texts + [" ".join("w%d" % (i % k) for i in range(n))
+                          for k in (2, 3, 50) for n in range(6, 30, 5)]
+    rows = (_text_df(spark, texts)
+            .select("text", F.expr(WORDS_S).alias("words"))
+            .filter(F.size("words") >= 6)
+            .select("text", F.expr(FINGERPRINT_KH_S).alias("kh"))
+            .select("text", F.expr(FINGERPRINT_FPS_S).alias("fps")).collect())
+    assert len(rows) == sum(len(_words(t)) >= 6 for t in texts) == 17
+    got = _fingerprint_batch([r.text for r in rows])
+    for r, *g in zip(rows, got["n_fps"], got["fp_min"], got["fp_max"]):
+        assert g == [len(r.fps), min(r.fps), max(r.fps)], repr(r.text)
+
+
+@settings(max_examples=30, deadline=None)
+@given(st.lists(sig_text_st, min_size=1, max_size=8))
+def test_text_kernels_fuzz(spark_session_holder, texts):
+    """Both kernels against the pure-python replicas: the MinHash struct
+    on every text, the 16-bit gather on every worded one."""
+    from pdf_extractor_spark.corpus import _minhash_batch
+    got = _minhash_batch(texts)
+    for t, *g in zip(texts, got["n_shingles"], got["shset"], got["bands"]):
+        assert tuple(g) == _py_minhash_full(t), repr(t)
+    rows = _simhash16_cols(_text_df(spark_session_holder, texts)).collect()
+    assert len(rows) == sum(1 for t in texts if _words(t))
+    for r in rows:
+        assert r.arrow == _py_simhash16(r.text), repr(r.text)
 
 
 # ---- Arrow-batch production signature (_simhash_bands_batch) parity ----

@@ -187,7 +187,9 @@ def _py_words(t):
 
 
 def _py_bands(ws):
-    """Pure-python replica of MINHASH_LSH_SIG_S's lanes/bands."""
+    """Pure-python replica of the bands and shingle set of the MinHash
+    kernel (corpus.minhash_udf; SQL form MINHASH_LSH_SIG_S in
+    tests/sig_reference.py)."""
     import hashlib
     sh = [" ".join(ws[i:i + 3]) for i in range(len(ws) - 2)]
     hs = [hashlib.md5(s.encode()).hexdigest()
