@@ -18,7 +18,9 @@ Scale design (the point is 100 TB, not 500 rows):
   ``minhash_bands`` → ``_band_pairs`` (self-join) or ``_band_probe``
   (batch vs stored index) → ``_jaccard_verified`` — shared by
   ``dedup_minhash_lsh``, ``dedup_incremental`` and streaming/dedup.py;
-  ``dedup_ngram_jaccard`` shares the verify.
+  ``dedup_ngram_jaccard`` shares the verify.  The embedding dedups (LSH
+  buckets and k-means cells alike) build no candidate pair set: one
+  grouped Arrow kernel, ``_block_pairs``, scores every capped block.
 * **Similarity search is split, probe, score.** The four ``ann_*``
   entries share one core: ``_ann_split`` (queries vs corpus, exact
   norms), ``_nearest_cells`` (IVF probe over ``_cell_means`` centroids,
@@ -499,10 +501,11 @@ _SIMHASH16_S = " | ".join(
 
 
 def _band_pairs(ex, id_col: str, a: str, b: str):
-    """The band self-join of the LSH and simhash paths: distinct pairs
+    """The band self-join of the MinHash and simhash paths: distinct pairs
     (``a`` < ``b``) of ``id_col`` values agreeing on some (band_idx,
     bucket) row of ``ex``.  MinHash callers: dedup_minhash_lsh and the
-    within-batch join of streaming/dedup.py, over ``minhash_bands``."""
+    within-batch join of streaming/dedup.py, over ``minhash_bands``.
+    The embedding dedups score their blocks in place (`_block_pairs`)."""
     x, y = ex.alias("x"), ex.alias("y")
     return (x.join(y, (F.col("x.band_idx") == F.col("y.band_idx"))
                    & (F.col("x.bucket") == F.col("y.bucket"))
@@ -1033,21 +1036,27 @@ _CNRM_D = ("sqrt(CAST(list_sum(list_transform(range(1, 65), "
 
 
 def _ann_split(rows):
-    """Quantized rows (vec_id, qv, *extra) -> (queries, corpus): the
+    """Quantized rows (vec_id, qv, nrm, *extra) -> (queries, corpus): the
     queries (query_id, qa, na, *extra) are vec_id < 3, the corpus
-    (vec_id, qb, nb, *extra) the rest, so no query meets itself.  Norms
-    are the exact Arrow self-dot, computed after the filter (the dot is
-    nondeterministic, so the filter is not pushed below it)."""
-    dot = emb_dot_udf()
-    extra = [x for x in rows.columns if x not in ("vec_id", "qv")]
+    (vec_id, qb, nb, *extra) the rest, so no query meets itself.  The
+    norms are the rows' own: `_normed` for plain rows, the signature's
+    ``nrm`` for `ann_lsh_bucketed`."""
+    extra = [x for x in rows.columns if x not in ("vec_id", "qv", "nrm")]
 
     def side(cond, key, v, n):
         return rows.filter(cond).select(
             F.col("vec_id").alias(key), F.col("qv").alias(v),
-            dot(F.col("qv"), F.col("qv")).alias(n), *extra)
+            F.col("nrm").alias(n), *extra)
 
     return (side(F.col("vec_id") < 3, "query_id", "qa", "na"),
             side(F.col("vec_id") >= 3, "vec_id", "qb", "nb"))
+
+
+def _normed(rows):
+    """``rows`` plus ``nrm``, the exact Arrow self-dot of ``qv``.  The dot
+    is deterministic, so a later filter on other columns (the
+    `_ann_split` sides) is pushed below it: each kept row is normed once."""
+    return rows.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
 
 
 def _ann_top5(cand, *keep):
@@ -1113,8 +1122,8 @@ def _nearest_cells(q, cents, key: str):
         "int64-quantized cosine, per-query top-5 with vec_id tie-break",
 )
 def ann_topk_cosine(spark, sf_dir):
-    q, c = _ann_split(t(spark, sf_dir, "embeddings")
-                      .select("vec_id", F.expr(QUANT_S).alias("qv")))
+    q, c = _ann_split(_normed(t(spark, sf_dir, "embeddings")
+                              .select("vec_id", F.expr(QUANT_S).alias("qv"))))
     return _ann_top5(c.crossJoin(F.broadcast(q)))
 
 
@@ -1166,17 +1175,18 @@ def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP):
     """Split ``df`` into (kept, dropped_report) by blocking-key occupancy.
     dropped_report = (*keys, bsz) for blocks over the cap — BOUNDED small
     by construction (only pathological blocks exceed 4096).  Guards every
-    intra-block self-join in this module (LSH buckets, simhash bands,
-    k-means cells) against a degenerate data region going quadratic.
+    intra-block step in this module (the LSH-bucket and k-means-cell
+    verify of `_block_pairs`, the simhash band join) against a degenerate
+    data region going quadratic.
 
     One shuffle by the blocking keys, occupancy counted with a window over
-    that same partitioning, split persisted — so the downstream
-    intra-block self-join (and the drop report) reuse the exchange
-    instead of re-shuffling.  Measured interleaved at sf0.1: uncapped
-    self-join 2.21 s, a map-side aggregate + broadcast anti-join form
-    3.82 s, this form 2.63 s."""
+    that partitioning.  The split is not persisted: a grouped kernel or a
+    join fed straight from the window filter reuses the window's exchange,
+    while a scan of a persisted split reports unknown partitioning and
+    would be shuffled again.  The drop report re-reads ``df``.  Measured
+    interleaved at sf0.1: uncapped self-join 2.21 s, a map-side aggregate
+    + broadcast anti-join form 3.82 s, the windowed form 2.63 s."""
     sized = df.withColumn("bsz", F.count("*").over(W.partitionBy(*keys)))
-    sized = _persist(sized, fresh=False)
     kept = sized.filter(F.col("bsz") <= cap).drop("bsz")
     dropped = (sized.filter(F.col("bsz") > cap)
                .groupBy(*keys).agg(F.max("bsz").alias("bsz")))
@@ -1184,15 +1194,16 @@ def _occupancy_capped(df, keys: list, cap: int = EMB_BUCKET_CAP):
 
 
 def emb_band_candidates(b, cap: int = EMB_BUCKET_CAP):
-    """Candidate near-dup pairs from banded sign-LSH rows ``b`` =
-    (vec_id, bands, ...), hot-bucket capped.  Returns (cand, dropped):
-    cand = distinct (vec_a < vec_b) pairs agreeing on any surviving band
-    bucket; dropped = the (band_idx, bucket, bsz) report of excluded
-    cells (no-silent-caps: the caller surfaces it — empty at every sf
-    fixture, so registry oracles are unaffected)."""
-    ex = b.select("vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
-    kept, dropped = _occupancy_capped(ex, ["band_idx", "bucket"], cap)
-    return _band_pairs(kept, "vec_id", "vec_a", "vec_b"), dropped
+    """The band rows of the banded sign-LSH signature ``b`` = (vec_id, qv,
+    bands, nrm), hot-bucket capped.  Returns (kept, dropped): kept =
+    (vec_id, qv, nrm, band_idx, bucket), one row per vector and
+    surviving band bucket, the blocks `_lsh_block_pairs` scores; dropped
+    = the (band_idx, bucket, bsz) report of excluded cells
+    (no-silent-caps: the caller surfaces it — empty at every sf fixture,
+    so registry oracles are unaffected)."""
+    ex = b.select("vec_id", "qv", "nrm",
+                  F.posexplode("bands").alias("band_idx", "bucket"))
+    return _occupancy_capped(ex, ["band_idx", "bucket"], cap)
 
 
 def simhash_band_bits(n_est: int, min_bits: int = 15) -> int:
@@ -1310,21 +1321,12 @@ def emb_bands_nrm_udf(ppb: int):
 
 def emb_dot_udf():
     """Exact int64 dot of two quantized vectors as an Arrow-batched
-    projection: the one Spark engine of the dedup verify, the ANN scorer
-    and the ANN/semantic self-norms (its SQL fold, ``DOT_S`` in
+    projection: the one Spark engine of the ANN scorer and of the
+    ANN/semantic self-norms (its SQL fold, ``DOT_S`` in
     tests/sig_reference.py, is interpreted row at a time).  int64 in,
-    int64 out, exact — equal to that fold (parity-tested).
-    Verify callers name its inputs ``qa``/``qb``: profiles tell the
-    verify UDF from the signature UDFs by those column names.
-
-    The function is exact and deterministic, but it is marked
-    nondeterministic so the optimizer evaluates it once per row.  A
-    threshold filter on ``cos_sim`` is otherwise pushed below the
-    projection that computes ``dot``, and since a deterministic UDF may
-    be copied, the dot then runs twice: in the filter and again in the
-    projection, as two chained ``ArrowEvalPython`` nodes of one stage.
-    A nondeterministic expression is neither copied nor moved, so the
-    filter stays above the one projection."""
+    int64 out, exact — equal to that fold (parity-tested).  No caller
+    filters on its output, so it stays deterministic and a filter on
+    other columns is pushed below it (see `_normed`)."""
     import pandas as pd
     from pyspark.sql.types import LongType
 
@@ -1334,7 +1336,7 @@ def emb_dot_udf():
         b = np.asarray(qb.tolist(), dtype=np.int64)
         return pd.Series((a * b).sum(axis=1))
 
-    return F.pandas_udf(_batch, LongType()).asNondeterministic()
+    return F.pandas_udf(_batch, LongType())
 
 
 def _emb_signature(q, ppb: int):
@@ -1346,17 +1348,77 @@ def _emb_signature(q, ppb: int):
                     bn.getField("nrm").alias("nrm"))
 
 
-def _emb_verify(cand, b):
-    """Exact quantized cosine of candidate pairs (vec_a, vec_b) against
-    the signature rows ``b``: both vectors re-joined, Arrow dot, `COS`.
-    Returns (vec_a, vec_b, ..., cos_sim); callers apply their threshold."""
-    va = b.select(F.col("vec_id").alias("vec_a"), F.col("qv").alias("qa"),
-                  F.col("nrm").alias("na"))
-    vb = b.select(F.col("vec_id").alias("vec_b"), F.col("qv").alias("qb"),
-                  F.col("nrm").alias("nb"))
-    return (cand.join(va, "vec_a").join(vb, "vec_b")
-            .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
-            .withColumn("cos_sim", F.expr(COS)))
+# Rows per Gram tile of the in-block verify: a block at the
+# EMB_BUCKET_CAP occupancy is a 4096 x 4096 int64 matrix (128 MB), one
+# 1024-row tile of it at most 32 MB.
+BLOCK_TILE = 1024
+
+
+def _block_scores(ids, q, nrm, keep):
+    """All pairs of one block, scored.  ``ids`` (n,), the quantized
+    vectors ``q`` (n, d) int64 and their self-dots ``nrm`` (n,) ->
+    positions (a, b) of the pairs with ids[a] < ids[b] whose exact cosine
+    passes ``keep``, and that cosine.  Rows are taken in id order
+    `BLOCK_TILE` at a time, each tile's int64 Gram rows against the rows
+    from the tile's start on, so a pair is scored once, in its lower
+    row's tile.  The cosine follows `COS`'s operation order in float64,
+    so it is bit-equal to the SQL form."""
+    import numpy as np
+    order = np.argsort(ids, kind="stable")
+    sq = np.sqrt(nrm.astype(np.float64))
+    parts = [(np.empty(0, np.int64), np.empty(0, np.int64), np.empty(0))]
+    for lo in range(0, len(ids), BLOCK_TILE):
+        rows, cols = order[lo:lo + BLOCK_TILE], order[lo:]
+        dot = q[rows] @ q[cols].T
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = dot.astype(np.float64) / (sq[rows, None] * sq[None, cols])
+        i, j = np.nonzero((ids[rows, None] < ids[None, cols]) & keep(cos))
+        parts.append((rows[i], cols[j], cos[i, j]))
+    return tuple(np.concatenate(x) for x in zip(*parts))
+
+
+def _block_pairs(rows, keys: list, keep):
+    """The one in-block exact verify of the embedding dedups.  ``rows`` =
+    (*keys, vec_id, qv, nrm) are grouped by ``keys`` (a sign-LSH bucket
+    or a k-means cell, occupancy-capped by the caller) and each block is
+    scored in one grouped Arrow call (`_block_scores`): no candidate pair
+    set is built and no vector is re-joined.  ``keep`` maps a float64
+    cosine array to the kept mask, so each caller keeps its own
+    threshold expression.  Returns (*keys, vec_a, vec_b, cos_sim) with
+    vec_a < vec_b."""
+    import numpy as np
+    import pyarrow as pa
+    from pyspark.sql.types import DoubleType, StructField, StructType
+
+    def kernel(tbl):
+        ids = tbl.column("vec_id")
+        q = np.asarray(tbl.column("qv").combine_chunks().flatten(),
+                       dtype=np.int64).reshape(len(tbl), -1)
+        a, b, cos = _block_scores(ids.to_numpy(), q,
+                                  tbl.column("nrm").to_numpy(), keep)
+        return (tbl.select(keys).take(a)
+                .append_column("vec_a", ids.take(a))
+                .append_column("vec_b", ids.take(b))
+                .append_column("cos_sim", pa.array(cos, pa.float64())))
+
+    vid = rows.schema["vec_id"].dataType
+    schema = StructType([rows.schema[k] for k in keys] + [
+        StructField("vec_a", vid), StructField("vec_b", vid),
+        StructField("cos_sim", DoubleType())])
+    return (rows.select(*keys, "vec_id", "qv", "nrm").groupBy(*keys)
+            .applyInArrow(kernel, schema))
+
+
+def _lsh_block_pairs(kept, keep):
+    """Near-dup pairs (vec_a, vec_b, cos_sim) of the capped band rows
+    ``kept`` (`emb_band_candidates`): every surviving bucket is scored by
+    `_block_pairs`, and a pair agreeing in several bands, scored once per
+    band, is kept once (its cosine is the same in every band).  No band
+    is preferred, so a pair whose lower band was dropped as hot is still
+    found through another."""
+    return (_block_pairs(kept, ["band_idx", "bucket"], keep)
+            .select("vec_a", "vec_b", "cos_sim")
+            .dropDuplicates(["vec_a", "vec_b"]))
 
 
 def _bands_array_d(vec: str, ppb: int) -> str:
@@ -1405,7 +1467,7 @@ def ann_lsh_bucketed(spark, sf_dir):
          .select("vec_id", F.expr(QUANT_S).alias("qv")))
     # referenced 4x (both band explodes + both vector legs)
     b = _persist(_emb_signature(e, PPB_ANN))
-    q, c = _ann_split(b.select("vec_id", "qv", "bands"))
+    q, c = _ann_split(b)
     qx = q.select("query_id", F.posexplode("bands").alias("band_idx", "bucket"))
     cx = c.select("vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
     cand = (cx.join(F.broadcast(qx), ["band_idx", "bucket"])
@@ -1459,7 +1521,7 @@ def ann_lsh_bucketed(spark, sf_dir):
 def ann_ivf_probe(spark, sf_dir):
     e = (t(spark, sf_dir, "embeddings")
          .select("vec_id", "label", F.expr(QUANT_S).alias("qv")))
-    q, c = _ann_split(e)
+    q, c = _ann_split(_normed(e))
     probe = _nearest_cells(q, _cell_means(e, "label"), "label")
     cand = (c.join(F.broadcast(probe), "label")
             .join(F.broadcast(q.drop("label")), "query_id"))
@@ -1650,8 +1712,8 @@ def ann_ivf_kmeans(spark, sf_dir):
         (F.col("vec_id") - 3).alias("cell"), F.col("qv").alias("cv"))
     # the probe and the lazy final assignment both use the FINAL centroids
     cents, assign_last = _lloyd(spark, data, seeds, rounds=2)
-    q, _ = _ann_split(e)
-    _, c = _ann_split(assign_last)
+    q, _ = _ann_split(_normed(e))
+    _, c = _ann_split(_normed(assign_last))
     cand = (c.join(F.broadcast(_nearest_cells(q, cents, "cell")), "cell")
             .join(F.broadcast(q), "query_id"))
     return _ann_top5(cand, "cell")
@@ -1716,15 +1778,14 @@ def _with_perturbed_copies(spark, sf_dir, every: int, dims: int,
 )
 def dedup_embedding_cosine(spark, sf_dir):
     base = _with_perturbed_copies(spark, sf_dir, every=4, dims=8, scale=0.9)
-    # referenced 3x: band explode + both verify re-joins
+    # persisted: the band explode's inferred `size(bands) > 0` filter
+    # would otherwise be pushed below the signature UDF and copy it
     b = _persist(_emb_signature(base, PPB_DEDUP))
-    cand, _dropped = emb_band_candidates(b)
+    kept, _dropped = emb_band_candidates(b)
     # _dropped is provably empty at sf geometry (cap 4096 >> any fixture
     # bucket), so the oracle sees identical pairs; a production caller
     # sinks the drop report to metrics.
-    return (_emb_verify(cand, b)
-            .filter(F.col("cos_sim") >= 0.98)
-            .select("vec_a", "vec_b", "cos_sim"))
+    return _lsh_block_pairs(kept, lambda cos: cos >= 0.98)
 
 
 @register(
@@ -1776,7 +1837,7 @@ def dedup_embedding_cosine(spark, sf_dir):
         "stay linear — same derivation seam as emb_lsh_geometry; the "
         "registry pins K at the sf default because the DuckDB oracle is a "
         "static string.  One exchange by cluster id carries the vectors; "
-        "the pairing is a per-cell self-join inside that partitioning",
+        "each cell is scored by `_block_pairs` inside that partitioning",
 )
 def dedup_semantic(spark, sf_dir):
     data = _with_perturbed_copies(spark, sf_dir, every=5, dims=4, scale=0.95)
@@ -1784,11 +1845,9 @@ def dedup_semantic(spark, sf_dir):
     seeds = data.filter(F.col("vec_id") < K_IVF).select(
         F.col("vec_id").alias("cell"), F.col("qv").alias("cv"))
     # 1 Lloyd round (see _lloyd); the lazy final assignment feeds
-    # semantic_cell_pairs, whose occupancy split persists the
-    # cell-partitioned rows both self-join sides read.
+    # semantic_cell_pairs, whose kernel scores each cell-partitioned block
     _cents, assigned = _lloyd(spark, data, seeds, rounds=1)
-    m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
-    pairs, _dropped = semantic_cell_pairs(m)
+    pairs, _dropped = semantic_cell_pairs(_normed(assigned))
     # _dropped is provably empty at sf geometry (cap 4096 >> any fixture
     # cell), so the DuckDB oracle sees identical pairs; a production
     # caller uses semantic_cell_pairs directly and sinks the report.
@@ -1796,15 +1855,23 @@ def dedup_semantic(spark, sf_dir):
             .agg(F.max("cos_sim").alias("max_sim")))
 
 
+# Largest |element| the int64 embedding math holds: |x| < 37 000 quantizes
+# to |q| <= 3.7e8, so 64 * q² <= 8.76e18 < 2^63 bounds every self-dot
+# and, by Cauchy-Schwarz, every dot.
+EMB_ABS_MAX = 37_000
+
 # Malformed-row rules of the production dedup inputs (reason, or NULL for a
 # well-formed row).  A null, NaN or infinite element would crash the Arrow
-# UDFs or quantize to 0 or Long.MAX (overflowing the int64 dot).  A
-# word-less text is null or all spaces: words split on ' ' with empties
-# dropped, and trim strips exactly the ' ' character.
+# UDFs or quantize to 0 or Long.MAX; a finite one at or past EMB_ABS_MAX
+# would wrap the int64 dots silently.  A word-less text is null or all
+# spaces: words split on ' ' with empties dropped, and trim strips
+# exactly the ' ' character.
 EMB_REJECT_S = ("CASE WHEN embedding IS NULL THEN 'null_embedding' "
                 f"WHEN size(embedding) <> {EMB_DIM} THEN 'bad_dim' "
                 "WHEN exists(embedding, x -> x IS NULL OR isnan(x) "
-                "OR abs(x) = double('inf')) THEN 'bad_value' END")
+                "OR abs(x) = double('inf')) THEN 'bad_value' "
+                f"WHEN exists(embedding, x -> abs(x) >= {EMB_ABS_MAX}) "
+                "THEN 'bad_range' END")
 TEXT_REJECT_S = "CASE WHEN text IS NULL OR trim(text) = '' THEN 'no_words' END"
 
 
@@ -1902,11 +1969,9 @@ def dedup_embeddings_run(spark, input_path: str, output_dir: str,
                            ("vec_id", "embedding"), EMB_REJECT_S)
     ppb = emb_lsh_geometry(rows["rows_in"])
     b = _emb_signature(e.select("vec_id", F.expr(QUANT_S).alias("qv")), ppb)
-    b = _persist(b)   # band explode + both verify re-joins
-    cand, dropped = emb_band_candidates(b)
-    pairs = (_emb_verify(cand, b)
-             .filter(F.col("cos_sim") * 100 >= threshold_pct)
-             .select("vec_a", "vec_b", "cos_sim"))
+    b = _persist(b)   # the band rows + the drop report
+    kept, dropped = emb_band_candidates(b)
+    pairs = _lsh_block_pairs(kept, lambda cos: cos * 100 >= threshold_pct)
     pairs = _persist(pairs, fresh=False)   # edges + the pairs sink
     return {
         "mode": "dedup_embeddings", "ppb": ppb,
@@ -1966,24 +2031,15 @@ def dedup_texts_run(spark, input_path: str, output_dir: str,
 def semantic_cell_pairs(m, cap: int = EMB_BUCKET_CAP,
                         threshold: float = 0.98):
     """Intra-cell >=``threshold`` cosine pairing over assigned rows ``m`` =
-    (cell, vec_id, qv, nrm), hot-cell capped, verified with the exact
-    Arrow dot (`emb_dot_udf`).  A dense embedding mode —
-    boilerplate pages are common in web data — can land millions of
-    vectors in ONE k-means cell, going quadratic in the self-join below
-    no matter what K is; cells over the cap are excluded from pairing and
+    (cell, vec_id, qv, nrm), hot-cell capped, each cell scored by
+    `_block_pairs` -> ((cell, vec_a, vec_b, cos_sim), dropped).  A dense
+    embedding mode — boilerplate pages are common in web data — can land
+    millions of vectors in ONE k-means cell, going quadratic inside it no
+    matter what K is; cells over the cap are excluded from pairing and
     RETURNED as (cell, bsz) (the no-silent-caps rule: callers surface the
-    report).  Same guard as the LSH and simhash band joins."""
+    report).  Same guard as the LSH and simhash band blocks."""
     kept, dropped = _occupancy_capped(m, ["cell"], cap)
-    a = kept.select("cell", F.col("vec_id").alias("vec_a"),
-                    F.col("qv").alias("qa"), F.col("nrm").alias("na"))
-    y = kept.select("cell", F.col("vec_id").alias("vec_b"),
-                    F.col("qv").alias("qb"), F.col("nrm").alias("nb"))
-    pairs = (a.join(y, "cell")
-             .filter(F.col("vec_a") < F.col("vec_b"))
-             .withColumn("dot", emb_dot_udf()(F.col("qa"), F.col("qb")))
-             .withColumn("cos_sim", F.expr(COS))
-             .filter(F.col("cos_sim") >= threshold))
-    return pairs, dropped
+    return _block_pairs(kept, ["cell"], lambda cos: cos >= threshold), dropped
 
 
 SEMANTIC_LLOYD_ROUNDS = 1   # Lloyd rounds of the production SemDeDup
@@ -2022,7 +2078,8 @@ def dedup_semantic_run(spark, input_path: str, output_dir: str,
     _cents, assigned = _lloyd(
         spark, data, seeds, SEMANTIC_LLOYD_ROUNDS,
         assign=lambda cents: kmeans_assign_udf(cents)(F.col("qv")))
-    m = assigned.withColumn("nrm", emb_dot_udf()(F.col("qv"), F.col("qv")))
+    # read by the cell kernel and the drop report, so neither re-assigns
+    m = _persist(_normed(assigned), fresh=False)
     pairs, dropped = semantic_cell_pairs(m, threshold=threshold_pct / 100.0)
     pairs = _persist(pairs.select("vec_a", "vec_b", "cos_sim"), fresh=False)
     return {

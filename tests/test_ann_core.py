@@ -1,13 +1,14 @@
 """The shared ANN core (corpus.py) on hand-written 2-d vectors: the
-query/corpus split, the exact-cosine top 5 with its vec_id tie-break, the
-nearest-cell probe with its cell tie-break, and the per-cell means."""
+self-norm and the query/corpus split, the exact-cosine top 5 with its
+vec_id tie-break, the nearest-cell probe with its cell tie-break, and the
+per-cell means."""
 
 from math import sqrt
 
 from pyspark.sql import functions as F
 
 from pdf_extractor_spark.corpus import (EMB_DIM, _ann_split, _ann_top5,
-                                        _cell_means, _nearest_cells)
+                                        _cell_means, _nearest_cells, _normed)
 
 # vec_id < 3 are the queries; the comments give the cosine against query 0
 _ROWS = [
@@ -25,7 +26,7 @@ _ROWS = [
 
 def _split(spark):
     rows = spark.createDataFrame(_ROWS, "vec_id long, qv array<long>, tag string")
-    return _ann_split(rows)
+    return _ann_split(_normed(rows))
 
 
 def test_split_columns_and_norms(spark):

@@ -383,6 +383,42 @@ class TestMalformedRows:
                for r in spark.read.parquet(f"{out}/pairs").collect()}
         assert got == self.PLANTED
 
+    # a finite element at or past EMB_ABS_MAX (37 000) would wrap the int64
+    # dots; 36 999 in all 64 dims still fits, so two such copies pair
+    @pytest.mark.parametrize("mode", ["--dedup-embeddings",
+                                      "--dedup-semantic"])
+    def test_large_elements_rejected_as_bad_range(self, spark, tmp_path,
+                                                  capsys, mode):
+        rng = random.Random(7)
+        vecs = [_random_vec(rng) for _ in range(10)]
+        rows = [(i, vecs[i % 10]) for i in range(20)]
+        rows += [(300, [36999.0] * 64), (301, [36999.0] * 64)]
+        for vec_id, bad in [(400, {9: 37000.0}), (401, {9: -1e15}),
+                            (402, {3: float("inf"), 4: 1e15})]:
+            v = list(vecs[vec_id - 400])
+            for pos, x in bad.items():
+                v[pos] = x
+            rows.append((vec_id, v))
+        inp, out = str(tmp_path / "in"), str(tmp_path / "out")
+        (spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+         .write.parquet(inp))
+
+        from pdf_extractor_spark.cli import main
+        assert main([mode, inp, "--output", out]) == 0
+        metrics = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+        assert (metrics["rows_in"], metrics["kept"], metrics["rejected"]) \
+            == (25, 22, 3)
+        assert metrics["rejected_by_reason"] == {"bad_range": 2,
+                                                 "bad_value": 1}
+        rejected = {(r.vec_id, r.reason)
+                    for r in spark.read.parquet(f"{out}/rejected").collect()}
+        assert rejected == {(400, "bad_range"), (401, "bad_range"),
+                            (402, "bad_value")}
+        got = {(r.vec_a, r.vec_b)
+               for r in spark.read.parquet(f"{out}/pairs").collect()}
+        assert got == self.PLANTED | {(300, 301)}
+        assert metrics["pairs"] == metrics["non_canonical"] == 11
+
     def test_wordless_texts_rejected_and_stale_quarantine_removed(
             self, spark, tmp_path, capsys):
         rng = random.Random(11)

@@ -4,8 +4,9 @@ show up in `.explain` output, or a refactor silently regressed them.
 * extraction: exactly ONE exchange (the AQE rebalance) feeding one
   MapInArrow — no sampling pass, no extra shuffle;
 * a fresh-dir extraction run is exactly four SQL executions;
-* a production embedding dedup pass runs each Arrow UDF once per row and
-  makes 4 + 2 per component round SQL executions;
+* a production embedding dedup pass runs the signature UDF once per row,
+  feeds each kept band row to the in-block verify kernel once and makes
+  4 + 2 per component round SQL executions;
 * the registry MinHash and simhash entries run their text-signature UDF
   once per signed row;
 * dimension joins broadcast instead of shuffling the fact side;
@@ -133,14 +134,44 @@ def test_dedup_signature_udf_runs_once_per_row(dedup_pass):
     assert sig == m["kept"]
 
 
-def test_dedup_verify_dot_is_one_node_per_plan(dedup_pass):
-    """The verify dot (the UDF reading ``qa``/``qb``) is one
-    ArrowEvalPython node in every plan holding it: the threshold filter
-    is not pushed below it, which would copy it into a second node."""
-    _m, execs = dedup_pass
-    per_plan = [sum("qa#" in desc for desc, _rows in nodes)
-                for nodes in execs.values()]
-    assert set(per_plan) - {0} == {1}, per_plan
+def _iter(jcoll):
+    it = jcoll.iterator()
+    while it.hasNext():
+        yield it.next()
+
+
+def _kernel_input_rows(spark, eids) -> int:
+    """Rows fed to the FlatMapGroupsInArrow nodes of the SQL executions
+    ``eids``: per node, the output rows of its nearest descendant that
+    counts rows (the Project under it counts none)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+    total = 0
+    for eid in eids:
+        values, graph = store.executionMetrics(eid), store.planGraph(eid)
+        nodes = {n.id(): n for n in _iter(graph.allNodes())}
+        child = {e.toId(): e.fromId() for e in _iter(graph.edges())}
+        for nid, n in nodes.items():
+            if n.name() != "FlatMapGroupsInArrow":
+                continue
+            rows = []
+            while not rows:
+                nid = child[nid]
+                rows = [m for m in _iter(nodes[nid].metrics())
+                        if m.name() == "number of output rows"]
+            v = values.get(rows[0].accumulatorId())
+            total += int(v.get().replace(",", "")) if v.isDefined() else 0
+    return total
+
+
+def test_dedup_kernel_reads_each_kept_band_row_once(spark, dedup_pass):
+    """The in-block verify kernel is fed every kept band row exactly once
+    over the whole run (no hot bucket at this size, so N_EMB_BANDS rows
+    per kept vector): a second kernel evaluation, or a kernel fed from a
+    re-shuffled or duplicated input, would count more."""
+    from pdf_extractor_spark.corpus import N_EMB_BANDS
+    m, execs = dedup_pass
+    assert m["dropped_hot_buckets"] == 0
+    assert _kernel_input_rows(spark, execs) == N_EMB_BANDS * m["kept"]
 
 
 def test_dedup_run_is_four_plus_two_per_round_executions(dedup_pass):
@@ -196,6 +227,14 @@ def test_q01_prunes_columns(spark):
 def test_ann_broadcasts_queries(spark):
     plan = plan_of(REGISTRY["ann_topk_cosine"].spark(spark, SF_DIR))
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastHashJoin" in plan, plan
+
+
+def test_ann_lsh_norms_come_from_the_signature(spark):
+    """ann_lsh_bucketed norms each vector once, in its band signature:
+    the plan's Arrow UDF nodes are that signature and the top-5 dot, with
+    no self-dot per split side."""
+    plan = plan_of(REGISTRY["ann_lsh_bucketed"].spark(spark, SF_DIR))
+    assert len(re.findall(r"\(\d+\) ArrowEvalPython", plan)) == 2, plan
 
 
 def test_lineitem_agg_partial_before_shuffle(spark):

@@ -158,16 +158,16 @@ class TestLshGeometry:
         the cell must be excluded (kept occupancy <= cap), its exclusion
         REPORTED, and unrelated vectors' candidates unaffected."""
         from pdf_extractor_spark.corpus import (
-            QUANT_S, _occupancy_capped, emb_band_candidates, PPB_DEDUP,
-            N_EMB_BANDS)
+            QUANT_S, _lsh_block_pairs, _normed, _occupancy_capped,
+            emb_band_candidates, PPB_DEDUP, N_EMB_BANDS)
         from sig_reference import _bands_array_s
         hot = [(i, [0.5] * 64) for i in range(40)]
         cold = [(100 + i, [0.01 * (i + j) for j in range(64)])
                 for i in range(4)]
         df = spark.createDataFrame(
             hot + cold, "vec_id long, embedding array<double>")
-        b = (df.select("vec_id", F.expr(QUANT_S).alias("qv"))
-             .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))
+        b = _normed(df.select("vec_id", F.expr(QUANT_S).alias("qv"))
+                    .withColumn("bands", _bands_array_s("qv", PPB_DEDUP)))
         ex = b.select(
             "vec_id", F.posexplode("bands").alias("band_idx", "bucket"))
         kept, dropped = _occupancy_capped(ex, ["band_idx", "bucket"], cap=10)
@@ -180,10 +180,12 @@ class TestLshGeometry:
         max_occ = (kept.groupBy("band_idx", "bucket").count()
                    .agg(F.max("count")).first()[0])
         assert max_occ <= 10
-        # candidate generation: zero pairs from the hot cell, cold pairs
-        # (if bucketed together) still present and, crucially, bounded
-        cand, _ = emb_band_candidates(b, cap=10)
-        pairs = {(r.vec_a, r.vec_b) for r in cand.collect()}
+        # the in-block verify, keeping every scored pair: zero pairs from
+        # the hot cell, cold pairs (if bucketed together) still present
+        # and, crucially, bounded
+        band_rows, _ = emb_band_candidates(b, cap=10)
+        scored = _lsh_block_pairs(band_rows, lambda cos: cos > -2)
+        pairs = {(r.vec_a, r.vec_b) for r in scored.collect()}
         assert not any(a < 40 and y < 40 for a, y in pairs)
 
     def test_hot_cell_capped_and_reported(self, spark):
